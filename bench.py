@@ -2,7 +2,7 @@
 
 Runs the six BASELINE queries (names match BASELINE.md rows) on one warm
 SparkSession at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line.
+local[$SPARK_GRAFT_CPUS] (default: the machine's cores). Prints ONE JSON line.
 
 Two timings per query, both after warmup:
 
@@ -113,16 +113,16 @@ def _duckdb_floor_ms(sf_dir: str, names) -> dict[str, float]:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     loadavg_start = _await_quiet_machine()
 
     from big_data_analytics_machine_learning_poc_spark.operators import relational
-    from big_data_analytics_machine_learning_poc_spark.session import get_session
+    from big_data_analytics_machine_learning_poc_spark.session import default_cpus, get_session
 
     # micro profile: AQE off / small shuffle fan-out — at sf0.1 every stage is
     # sub-second, so adaptive re-planning only adds overhead (session.py
     # documents the measurement; a cluster-scale run uses the default profile)
+    cpus = default_cpus()
     spark = get_session("bench", cpus=cpus, profile="micro")
 
     # Global JIT warmup: run the WHOLE suite three times before measuring

@@ -13,12 +13,18 @@ data).
 ``local_rows_df`` keeps the same (rows, DDL schema) call shape but routes
 through pandas + Arrow when enabled — the rows cross to the JVM as one
 columnar batch, and a collect of the resulting frame never launches a
-Python worker — and falls back to a ONE-slice pickled RDD otherwise.
+Python worker — and uses a ONE-slice pickled RDD when Arrow is off. No
+rows means an empty RDD, which has no partitions and so no tasks.
 Semantics match ``createDataFrame(rows, ddl)``: values are coerced to the
-declared types, column order is the schema's. Use it for frames whose
-size is O(driver state) — collected metrics, audit rows, per-partition
-carries, file/seq maps — never for data-sized input (fixtures deliberately
-keep the sliced path: their per-partition sampling IS the data shape).
+declared types, column order is the schema's. Use it for frames built
+from driver-local rows — collected metrics, audit rows, per-partition
+carries, file/seq maps, the small generated ML fixtures — never for input
+too large to hold on the driver.
+
+A failed Arrow conversion is not swallowed here: ``createDataFrame`` then
+warns and takes its own non-Arrow path (or raises, when
+``spark.sql.execution.arrow.pyspark.fallback.enabled`` is false), so the
+slow pickled path never comes back without a warning.
 """
 
 from __future__ import annotations
@@ -33,20 +39,14 @@ def local_rows_df(spark: SparkSession, rows, ddl: str | T.StructType) -> DataFra
     (module docstring)."""
     rows = list(rows)
     schema = T.StructType.fromDDL(ddl) if isinstance(ddl, str) else ddl
-    arrow = (
-        spark.conf.get("spark.sql.execution.arrow.pyspark.enabled", "false")
-        == "true"
-    )
-    if arrow:
-        try:
-            import pandas as pd
+    sc = spark.sparkContext
+    if not rows:
+        return spark.createDataFrame(sc.emptyRDD(), schema)
+    if spark.conf.get("spark.sql.execution.arrow.pyspark.enabled", "false") == "true":
+        import pandas as pd
 
-            # dtype=object keeps ints with NULLs from becoming NaN floats;
-            # Arrow casts each column to the declared type on conversion
-            pdf = pd.DataFrame(
-                rows, columns=[f.name for f in schema.fields], dtype=object
-            )
-            return spark.createDataFrame(pdf, schema=schema)
-        except Exception:
-            pass  # fall through to the 1-slice RDD path
-    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+        # dtype=object keeps ints with NULLs from becoming NaN floats;
+        # Arrow casts each column to the declared type on conversion
+        pdf = pd.DataFrame(rows, columns=[f.name for f in schema.fields], dtype=object)
+        return spark.createDataFrame(pdf, schema=schema)
+    return spark.createDataFrame(sc.parallelize(rows, 1), schema)

@@ -8,6 +8,13 @@ ANSI mode, a cache() before the multi-pass correlation loop (the reference
 re-executes the whole upstream plan per corr call, SURVEY §3.3), and the
 correlation loop expressed as ONE aggregate job over all numeric columns
 instead of one job per column.
+
+``run`` overlaps its three reads of the cleaned frame (the age-bucket
+aggregate, the region/smoker minimum, and the indexer fits plus the
+correlation job) with ``functions.fanout``, once ``count()`` has filled the
+cache they share. None of them reads another's output, and each is a
+deterministic aggregate of the same cached rows, so the results do not
+depend on how their jobs interleave.
 """
 
 from __future__ import annotations
@@ -16,6 +23,8 @@ from pyspark.ml.feature import Bucketizer, StringIndexer, VectorAssembler
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, IntegerType, LongType
+
+from ..functions.fanout import fanout
 
 AGE_SPLITS = [float("-inf"), 25.0, 35.0, 45.0, 55.0, float("inf")]
 
@@ -90,11 +99,17 @@ def assemble_features(df: DataFrame) -> DataFrame:
 def run(raw: DataFrame) -> dict:
     df = clean(raw).cache()
     try:
+        clean_count = df.count()  # materializes the cache the branches share
+        by_age, by_region, corrs = fanout(
+            lambda: agg_by_age_bucket(df).collect(),
+            lambda: min_charges_by_region_smoker(df).collect(),
+            lambda: numeric_correlations(index_categoricals(df)),
+        )
         out = {
-            "clean_count": df.count(),
-            "agg_by_age_bucket": agg_by_age_bucket(df).collect(),
-            "min_by_region_smoker": min_charges_by_region_smoker(df).collect(),
-            "correlations": numeric_correlations(index_categoricals(df)),
+            "clean_count": clean_count,
+            "agg_by_age_bucket": by_age,
+            "min_by_region_smoker": by_region,
+            "correlations": corrs,
             "features_schema": assemble_features(df).schema.simpleString(),
         }
     finally:

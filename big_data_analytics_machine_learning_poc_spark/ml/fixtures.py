@@ -4,6 +4,12 @@ Generated in-memory with a fixed seed: the reference's CSV datasets (one a
 missing blob) can't be shipped, but their schemas + data quirks — dirty
 numeric cells, empty labels, spacey column names, label-correlated features —
 are what the pipelines' behavior depends on, so we synthesize them.
+
+Each frame is built with ``functions.localrows.local_rows_df`` under an
+explicit schema (the one ``createDataFrame`` would infer from the rows), so
+the rows reach the JVM as one Arrow batch and no job that reads a fixture
+starts a Python worker. ``_pin_layout`` makes the downstream splits
+independent of how the rows arrive.
 """
 
 from __future__ import annotations
@@ -12,6 +18,8 @@ import random
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.localrows import local_rows_df
+
 _DIRTY = ["*x#", "##", "cfxgvhk", " ", "", "NULL", "###x%", "Y&$%"]
 
 
@@ -19,9 +27,10 @@ def _pin_layout(df: DataFrame, *cols: str) -> DataFrame:
     """Environment-independent physical layout for the fixtures.
 
     Seeded ``randomSplit`` is deterministic only up to PARTITIONING: split
-    membership is per-partition Bernoulli, and ``createDataFrame`` slices
-    the local rows by ``defaultParallelism`` — so a driver session with a
-    different cpu count produces a (slightly) different train/test split
+    membership is per-partition Bernoulli, and how the local rows are
+    sliced into partitions depends on how the frame was built and on
+    ``defaultParallelism`` — so a driver session with a different cpu
+    count or build path produces a (slightly) different train/test split
     and every downstream rows-only ML fingerprint drifts (the
     accuracy-in-tolerance churn on DIAG/fp_ml_gbt_spam.json flagged in
     VERDICT r6 #3). Hash-repartitioning on value columns to a FIXED
@@ -68,9 +77,11 @@ def medical_charges(spark: SparkSession, n: int = 1338, seed: int = 42) -> DataF
         col = 0 if k < 4 else (2 if k < 8 else 6)
         rows[ri][col] = _DIRTY[k % len(_DIRTY)]
     return _pin_layout(
-        spark.createDataFrame(
+        local_rows_df(
+            spark,
             [tuple(r) for r in rows],
-            ["age", "sex", "bmi", "children", "smoker", "region", "charges"],
+            "age string, sex string, bmi string, children string, smoker string, "
+            "region string, charges string",
         ),
         "age", "bmi", "charges",
     )
@@ -91,7 +102,9 @@ def user_know(spark: SparkSession, n: int = 402, seed: int = 42) -> DataFrame:
         )
         rows.append((*f, label))
     return _pin_layout(
-        spark.createDataFrame(rows, ["SST", "SRT", "SAT", "SAP", "SEP", "SKL"]),
+        local_rows_df(
+            spark, rows, "SST double, SRT double, SAT double, SAP double, SEP double, SKL string"
+        ),
         "SST", "SRT", "SAT", "SAP", "SEP",
     )
 
@@ -121,12 +134,9 @@ def spam(spark: SparkSession, n: int = 5434, seed: int = 42) -> DataFrame:
         elif label == "ham" and rnd.random() < 0.1:
             text += " don’t forget"
         rows.append((label, text, None, None, None))
-    # _c2.._c4 are all-null (the unnamed empty columns) → explicit schema,
-    # inference cannot type them
+    # _c2.._c4 are all-null (the unnamed empty columns), typed string
     return _pin_layout(
-        spark.createDataFrame(
-            rows, "v1 string, v2 string, _c2 string, _c3 string, _c4 string"
-        ),
+        local_rows_df(spark, rows, "v1 string, v2 string, _c2 string, _c3 string, _c4 string"),
         "v2",
     )
 
@@ -157,9 +167,11 @@ def hotel_reviews(spark: SparkSession, n: int = 2000, seed: int = 42) -> DataFra
         score = max(2.5, min(10.0, round(5.0 + 0.12 * n_pos - 0.08 * n_neg + rnd.gauss(0, 0.8), 1)))
         rows.append((pos, hotel, neg, rnd.choice(_NATIONALITIES), score, avg))
     return _pin_layout(
-        spark.createDataFrame(
+        local_rows_df(
+            spark,
             rows,
-            ["Positive Review", "Hotel Name", "Negative Review", "Nationality", "Reviewer Score", "Average Score"],
+            "`Positive Review` string, `Hotel Name` string, `Negative Review` string, "
+            "Nationality string, `Reviewer Score` double, `Average Score` double",
         ),
         "Positive Review", "Negative Review", "Reviewer Score",
     )

@@ -7,6 +7,13 @@ VectorAssembler over the 5 study features (:57-61) → seeded 70/30 split
 numTrees=20) → IndexToString on label and prediction (:75-78) → confusion
 matrix as groupBy(label, prediction).count() (:86-87) → f1 (the evaluator's
 default metric — the reference sets none, :90-92).
+
+``run`` overlaps independent actions with ``functions.fanout``: the label
+audit runs beside the forest fit, and the confusion matrix, the f1
+evaluation and the test count run together on the fitted predictions.
+Each branch has its own estimator or evaluator, and each reads only
+deterministic inputs (the cached indexed frame and its seeded split), so
+the results do not depend on how the branches' jobs interleave.
 """
 
 from __future__ import annotations
@@ -16,6 +23,8 @@ from pyspark.ml.evaluation import MulticlassClassificationEvaluator
 from pyspark.ml.feature import IndexToString, StringIndexer, VectorAssembler
 from pyspark.sql import DataFrame
 
+from ..functions.fanout import fanout
+
 FEATURES = ["SST", "SRT", "SAT", "SAP", "SEP"]
 
 
@@ -23,14 +32,16 @@ def run(data: DataFrame, seed: int = 42, num_trees: int = 20) -> dict:
     indexer_model = StringIndexer(inputCol="SKL", outputCol="label").fit(data)
     indexed = indexer_model.transform(data).cache()
     try:
-        audit = indexed.groupBy("SKL", "label").count().collect()  # RandomForest.java:43
         assembled = VectorAssembler(inputCols=FEATURES, outputCol="features").transform(indexed)
         train, test = assembled.randomSplit([0.7, 0.3], seed=seed)
 
         rf = RandomForestClassifier(
             labelCol="label", featuresCol="features", numTrees=num_trees, seed=seed
         )
-        model = rf.fit(train)
+        audit, model = fanout(
+            lambda: indexed.groupBy("SKL", "label").count().collect(),  # RandomForest.java:43
+            lambda: rf.fit(train),
+        )
         predictions = model.transform(test)
 
         labels = indexer_model.labels
@@ -41,17 +52,20 @@ def run(data: DataFrame, seed: int = 42, num_trees: int = 20) -> dict:
             inputCol="prediction", outputCol="predictionStr", labels=labels
         ).transform(predictions)
 
-        confusion = (
-            predictions.groupBy("labelStr", "predictionStr").count().collect()
-        )  # RandomForest.java:86-87
-        f1 = MulticlassClassificationEvaluator(
-            labelCol="label", predictionCol="prediction"
-        ).evaluate(predictions)  # default metric = f1, RandomForest.java:90-92
+        confusion, f1, n_test = fanout(
+            # RandomForest.java:86-87
+            lambda: predictions.groupBy("labelStr", "predictionStr").count().collect(),
+            # default metric = f1, RandomForest.java:90-92
+            lambda: MulticlassClassificationEvaluator(
+                labelCol="label", predictionCol="prediction"
+            ).evaluate(predictions),
+            predictions.count,
+        )
         return {
             "label_audit": audit,
             "confusion": confusion,
             "f1": f1,
-            "n_test": predictions.count(),
+            "n_test": n_test,
             "feature_importances": model.featureImportances.toArray().tolist(),
             # RandomForest.java:72 prints the fitted model dump; surfaced here
             # with its structural stats so callers (and tests) can audit it.

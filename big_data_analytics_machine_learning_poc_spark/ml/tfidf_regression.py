@@ -8,6 +8,12 @@ tf-idf vectors + Average Score (:114-117) → Normalizer p=1 (:120-124) →
 seeded 70/30 split (:126-128; unseeded there) → LinearRegression (:131-139)
 → RMSE (:143-148). Engine upgrades: one Pipeline object, cache before fit,
 seeded split.
+
+``run`` overlaps the nationality correlation with the regression fit, and
+then the RMSE evaluation with the test count, through ``functions.fanout``.
+Every branch reads the same checkpointed feature frame (its own estimator
+or evaluator, no shared state), so the results do not depend on how the
+branches' jobs interleave; the checkpoint is released only after the joins.
 """
 
 from __future__ import annotations
@@ -27,6 +33,8 @@ from pyspark.ml.regression import LinearRegression
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.ckpt import release_local_checkpoint
+from ..functions.fanout import fanout
 from ..operators.encoding import ENGLISH_STOPWORDS
 
 
@@ -65,26 +73,29 @@ def run(reviews: DataFrame, seed: int = 42) -> dict:
         # so the seeded randomSplit draws the same rows).
         feats = model.transform(labeled).localCheckpoint()
         try:
-            nat_corr = feats.stat.corr("label", "nationality_idx")  # TfIdfCalculator.java:111
             train, test = feats.randomSplit([0.7, 0.3], seed=seed)
             lr = LinearRegression(featuresCol="features", labelCol="label")
-            lr_model = lr.fit(train)
+            nat_corr, lr_model = fanout(
+                lambda: feats.stat.corr("label", "nationality_idx"),  # TfIdfCalculator.java:111
+                lambda: lr.fit(train),
+            )
             predictions = lr_model.transform(test)
-            rmse = RegressionEvaluator(
-                labelCol="label", predictionCol="prediction", metricName="rmse"
-            ).evaluate(predictions)
+            rmse, n_test = fanout(
+                lambda: RegressionEvaluator(
+                    labelCol="label", predictionCol="prediction", metricName="rmse"
+                ).evaluate(predictions),
+                predictions.count,
+            )
             return {
                 "nationality_corr": nat_corr,
                 "rmse": rmse,
-                "n_test": predictions.count(),
+                "n_test": n_test,
             }
         finally:
-            # every consumer (corr, fit, evaluate, count) has run and the
+            # every consumer (corr, fit, evaluate, count) has joined and the
             # returned dict is plain metrics — release the checkpoint's
             # blocks instead of leaking them for the session's lifetime
             # (r13 checkpoint hygiene, guide §5)
-            from ..functions.ckpt import release_local_checkpoint
-
             release_local_checkpoint(feats)
     finally:
         labeled.unpersist()

@@ -1219,10 +1219,11 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     Iterative min-label propagation (the Pregel pattern on DataFrames):
     each round a node takes the min of its own and its neighbors' labels;
     converges in ≤ graph-diameter rounds (near-dup clusters are shallow).
-    Each round is one equi-join + one groupBy — all shuffles on doc_id —
-    and lineage is truncated per round with localCheckpoint so round N's
-    plan does not replay rounds 1..N-1. The oracle is a recursive CTE
-    computing min-reachable-label, which is the same fixpoint.
+    Each round joins only the labels that changed last round against the
+    edges and folds them in with one groupBy — all shuffles on doc_id — and
+    lineage is truncated per round with localCheckpoint so round N's plan
+    does not replay rounds 1..N-1. The oracle is a recursive CTE computing
+    min-reachable-label, which is the same fixpoint.
     """
     return connected_components(verified_near_dup_edges(spark, sf_dir))
 
@@ -1242,44 +1243,50 @@ def connected_components(edges: DataFrame) -> DataFrame:
             )
         ).alias("e")
     ).select("e.src", "e.dst")
-    # LAZY checkpoints: each round's convergence-check job materializes
-    # the frame it needs anyway — an eager checkpoint is one extra full
-    # pass per round purely to pre-warm what the next job would compute.
-    # Lineage truncation (the reason these checkpoints exist) is identical;
-    # Spark's local checkpointer backfills any partition the first action
-    # skipped before truncating. (r12)
     from ..functions.ckpt import release_local_checkpoint
 
-    sym = sym.localCheckpoint(eager=False)  # computed once; reused every round
+    # LAZY checkpoints: the job that first reads a frame materializes it
+    # (Spark backfills any partition that job skipped), so no round pays a
+    # separate pass just to fill its checkpoint. `sym` is computed once, by
+    # round 1, and reused every round.
+    sym = sym.localCheckpoint(eager=False)
+    # Semi-naive rounds over (doc, lab, old): `old` is the node's label
+    # before the round, so a round's changed nodes are `lab < old` on its
+    # own checkpoint and no second join is needed to find them. Only the
+    # changed nodes send their label on: a neighbour's unchanged label was
+    # already sent when it last changed, so every round computes the same
+    # labels as full propagation. Round 1 needs no join at all: every node
+    # starts as its own label, so it takes the min of itself and its
+    # neighbours.
     labels = (
-        sym.select(F.col("src").alias("doc")).distinct().withColumn("lab", F.col("doc"))
+        sym.groupBy(F.col("src").alias("doc"))
+        .agg(F.min("dst").alias("nb"))
+        .select("doc", F.least("doc", "nb").alias("lab"), F.col("doc").alias("old"))
     ).localCheckpoint(eager=False)
-
+    lab_type = labels.schema["lab"].dataType
+    prev = None
     for _ in range(_CC_MAX_ITERS):
-        prop = (
-            sym.join(labels, sym.src == labels.doc)
-            .select(F.col("dst").alias("doc"), F.col("lab"))
-        )
-        new = (
-            labels.unionByName(prop).groupBy("doc").agg(F.min("lab").alias("lab"))
-        ).localCheckpoint(eager=False)  # materialized by the changed-count job
-        changed = (
-            new.alias("n")
-            .join(labels.alias("o"), "doc")
-            .filter(F.col("n.lab") != F.col("o.lab"))
-            .limit(1)
-            .count()
-        )
-        # the changed-count job above materialized `new`; the previous
-        # round's label vector has no remaining consumer — release its
-        # blocks instead of leaking one per round for the session's
-        # lifetime (r13 checkpoint hygiene, guide §5)
-        release_local_checkpoint(labels)
-        labels = new
-        if changed == 0:
+        changed = labels.filter(F.col("lab") < F.col("old"))
+        converged = changed.isEmpty()
+        # that check materialized `labels`, so nothing reads the previous
+        # round's labels any more: release their blocks instead of leaking
+        # one vector per round for the session's lifetime
+        if prev is not None:
+            release_local_checkpoint(prev)
+        if converged:
             break
+        prop = sym.join(changed, sym.src == changed.doc).select(
+            F.col("dst").alias("doc"), "lab", F.lit(None).cast(lab_type).alias("old")
+        )
+        prev, labels = labels, (
+            labels.select("doc", "lab", F.col("lab").alias("old"))
+            .unionByName(prop)
+            .groupBy("doc")
+            .agg(F.min("lab").alias("lab"), F.min("old").alias("old"))
+        ).localCheckpoint(eager=False)
     else:
         raise RuntimeError(f"label propagation did not converge in {_CC_MAX_ITERS} rounds")
+    release_local_checkpoint(sym)
     return labels.select(F.col("doc").alias("doc_id"), F.col("lab").alias("component"))
 
 

@@ -134,6 +134,43 @@ def test_connected_components_chain(spark):
     assert out == {0: 0, 1: 0, 2: 0, 5: 5, 6: 5, 8: 5}
 
 
+def test_connected_components_match_union_find(spark):
+    """A seeded graph: one 20-edge chain over random ids (so the chain's
+    minimum needs up to 20 rounds to reach its far end) plus stars and short
+    paths. Every label must equal a union-find's component minimum."""
+    import random
+
+    rnd = random.Random(11)
+    ids = rnd.sample(range(1, 100_000), 300)
+    chain, rest = ids[:21], ids[21:]
+    edges = list(zip(chain, chain[1:]))
+    while len(rest) >= 4:
+        k = rnd.randint(2, 4)
+        comp, rest = rest[:k], rest[k:]
+        if rnd.random() < 0.5:
+            edges += [(comp[0], v) for v in comp[1:]]
+        else:
+            edges += list(zip(comp, comp[1:]))
+    rnd.shuffle(edges)
+
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)  # the root stays the component minimum
+    want = {n: find(n) for n in parent}
+
+    df = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    got = {r.doc_id: r.component for r in dedup.connected_components(df).collect()}
+    assert got == want
+
+
 def test_connected_components_on_planted(spark, planted_sf):
     """3 exact dups form one component labeled by the min doc_id."""
     out = {

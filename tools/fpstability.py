@@ -55,11 +55,11 @@ def main() -> int:
         fingerprint_matrix,
         normalized_matrix,
     )
-    from big_data_analytics_machine_learning_poc_spark.session import get_session
+    from big_data_analytics_machine_learning_poc_spark.session import default_cpus, get_session
 
     reg = entrymod._registry()
     rows_only = [n for n in reg.queries if n not in reg.oracles]
-    spark = get_session("fpstability", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "16")))
+    spark = get_session("fpstability", cpus=default_cpus())
     n_stable = n_drift = n_err = 0
     for name in rows_only:
         fn = reg.queries[name]

@@ -53,10 +53,10 @@ def _jobs(spark):
 def main() -> int:
     sf_dir = sys.argv[1]
     lanes = sys.argv[2:]
-    from big_data_analytics_machine_learning_poc_spark.session import get_session
+    from big_data_analytics_machine_learning_poc_spark.session import default_cpus, get_session
     import __spark_entry__ as entry
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     spark = get_session("jobprof", cpus=cpus)
     queries = dict(entry._registry(window_first=False).queries)
     for lane in lanes:

@@ -189,11 +189,13 @@ def diff_baseline(
 
 
 def main() -> int:
+    from big_data_analytics_machine_learning_poc_spark.session import default_cpus
+
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("sf_dir")
     ap.add_argument("lanes", nargs="*", help="subset of lane names")
     ap.add_argument("--runs", type=int, default=3)
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=default_cpus())
     ap.add_argument("--out", default=None, help="write the report JSON here")
     ap.add_argument("--baseline", default=None)
     ap.add_argument("--tolerance", type=float, default=3.0)

@@ -126,9 +126,9 @@ def main() -> int:
     import pyspark.sql.functions as F
 
     from big_data_analytics_machine_learning_poc_spark.operators.skew import salted_sum
-    from big_data_analytics_machine_learning_poc_spark.session import get_session
+    from big_data_analytics_machine_learning_poc_spark.session import default_cpus, get_session
 
-    spark = get_session("skewstress", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_session("skewstress", cpus=default_cpus())
     conf = spark.conf
     conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # measure the
     # non-broadcast regime; broadcast is the separate, first-choice fix

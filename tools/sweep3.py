@@ -43,7 +43,7 @@ def main() -> int:
         return 2
 
     import __spark_entry__ as entrymod
-    from big_data_analytics_machine_learning_poc_spark.session import get_session
+    from big_data_analytics_machine_learning_poc_spark.session import default_cpus, get_session
 
     unknown = only - set(entrymod._registry().queries)
     if unknown:
@@ -51,7 +51,7 @@ def main() -> int:
         return 2
 
     sfs = _FULL_SFS if full else _PRECOMMIT_SFS
-    spark = get_session("sweep3", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "16")))
+    spark = get_session("sweep3", cpus=default_cpus())
     totals = []
     failed = False
     for sf in sfs:
