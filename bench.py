@@ -123,7 +123,8 @@ def main() -> None:
     # sub-second, so adaptive re-planning only adds overhead (session.py
     # documents the measurement; a cluster-scale run uses the default profile)
     cpus = default_cpus()
-    spark = get_session("bench", cpus=cpus, profile="micro")
+    profile = "micro"
+    spark = get_session("bench", cpus=cpus, profile=profile)
 
     # Global JIT warmup: run the WHOLE suite three times before measuring
     # anything. The r5 investigation (quiet machine, loadavg 0.3) showed the
@@ -188,6 +189,10 @@ def main() -> None:
                 "duckdb_floor_total_ms": round(sum(duckdb_floor.values()), 3),
                 "loadavg": loadavg,
                 "loadavg_start": loadavg_start,
+                "cpus": cpus,
+                "default_parallelism": spark.sparkContext.defaultParallelism,
+                "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
+                "profile": profile,
             }
         )
     )

@@ -218,7 +218,3 @@ def normalize_events_ts(df: DataFrame, ts_type: T.DataType) -> DataFrame:
         f"events.ts stored as unsupported type {ts_type}; expected raw-nanos "
         "LongType, TimestampNTZType, or TimestampType"
     )
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}

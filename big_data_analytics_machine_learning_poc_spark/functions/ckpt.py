@@ -33,29 +33,22 @@ def release_local_checkpoint(df: DataFrame) -> bool:
     ``localCheckpoint()``. Returns True when blocks were released; False
     (no-op) when the frame is not a direct checkpoint result. Async
     (non-blocking) — the executor frees blocks in the background."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        # unwrap .alias(...) wrappers — same data, same blocks
-        while plan.getClass().getSimpleName() == "SubqueryAlias":
-            plan = plan.child()
-        if plan.getClass().getSimpleName() != "LogicalRDD":
-            return False
-        plan.rdd().unpersist(False)
-        return True
-    except Exception:
+    plan = df._jdf.queryExecution().analyzed()
+    # unwrap .alias(...) wrappers — same data, same blocks
+    while plan.getClass().getSimpleName() == "SubqueryAlias":
+        plan = plan.child()
+    if plan.getClass().getSimpleName() != "LogicalRDD":
         return False
+    plan.rdd().unpersist(False)
+    return True
 
 
 def unpersist_all(spark: SparkSession, blocking: bool = False) -> int:
     """Unpersist every persistent RDD in the SparkContext; returns how
     many were released. See module docstring for when this is safe."""
     n = 0
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        it = jmap.values().iterator()
-        while it.hasNext():
-            it.next().unpersist(blocking)
-            n += 1
-    except Exception:
-        pass
+    it = spark.sparkContext._jsc.getPersistentRDDs().values().iterator()
+    while it.hasNext():
+        it.next().unpersist(blocking)
+        n += 1
     return n

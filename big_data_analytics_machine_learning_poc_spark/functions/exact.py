@@ -130,7 +130,3 @@ def dec(col: str | Column) -> Column:
 
 def sum_exact_dec(col: str | Column, alias: str) -> Column:
     return F.sum(dec(col)).cast("double").alias(alias)
-
-
-def sum_exact_dec_sql(expr: str, alias: str) -> str:
-    return f"CAST(SUM(CAST({expr} AS DECIMAL(18,2))) AS DOUBLE) AS {alias}"

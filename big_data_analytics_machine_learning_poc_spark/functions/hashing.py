@@ -66,12 +66,3 @@ def md5_hash60(col: Column) -> Column:
 
 def md5_hash60_sql(expr: str) -> str:
     return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
-
-
-def minhash_perm(h: Column, a: int, b: int) -> Column:
-    """One universal-hash permutation of a 32-bit hash value."""
-    return (h * F.lit(a) + F.lit(b)) % F.lit(MERSENNE_P)
-
-
-def minhash_perm_sql(h_expr: str, a: int, b: int) -> str:
-    return f"(({h_expr}) * {a} + {b}) % {MERSENNE_P}"

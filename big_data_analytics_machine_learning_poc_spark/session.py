@@ -137,11 +137,6 @@ def ensure_session_defaults(spark: SparkSession) -> None:
             spark.conf.set(key, want)
 
 
-def ensure_nanos_as_long(spark: SparkSession) -> None:
-    """Back-compat alias — see ensure_session_defaults."""
-    ensure_session_defaults(spark)
-
-
 def enable_runtime_bloom_filters(
     spark: SparkSession,
     creation_side_max: str = "100MB",

@@ -25,8 +25,10 @@ prior version (one metadata-only commit), log-level partition pruning, per-file 
 data skipping, OPTIMIZE compaction + VACUUM, txn actions (exactly-once
 streaming), parquet checkpoints + `_last_checkpoint` (replay cost
 O(#commits since checkpoint)), history, optimistic commit conflict
-detection (O_EXCL on the next version's log file — the same primitive
-real Delta uses on filesystems with atomic put-if-absent), the full DML
+detection (put-if-absent of the next version's log file via
+``tablefiles.put_if_absent`` — the same primitive real Delta uses on
+filesystems with atomic put-if-absent; data files are staged and
+published by ``tablefiles.stage``, which refuses to overwrite), the full DML
 triad (DELETE / UPDATE / MERGE), deletion vectors, column mapping
 (rename/drop without rewrites), per-column Bloom filters, CHECK
 constraints (writer version 3), and the change data feed — a real
@@ -86,6 +88,9 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+from . import tablefiles
+from .tablefiles import json_scalar, partition_values
 
 _LOG_DIR = "_delta_log"
 _PROTOCOL = {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
@@ -312,20 +317,17 @@ def checkpoint_table(table: str) -> int:
         {"txn": {"appId": app, "version": v}} for app, v in sorted(_txn_state(table).items())
     ]
     tbl = pa.table({"action_json": [json.dumps(a, separators=(",", ":")) for a in actions]})
-    # temp + rename (review r5): the checkpoint file itself is PARSED by
-    # readers (the pointer fallback scan trusts any *.checkpoint.parquet),
-    # so a crash mid-write must never leave a torn one
-    ckpt_path = _checkpoint_path(table, version)
-    ckpt_tmp = ckpt_path + f".tmp-{uuid.uuid4().hex}"
-    pq.write_table(tbl, ckpt_tmp)
-    os.replace(ckpt_tmp, ckpt_path)
-    # temp + rename: a crash mid-write must not leave a partial pointer
-    # (the read side also tolerates one by falling back to a scan)
-    pointer = os.path.join(table, _LOG_DIR, "_last_checkpoint")
-    tmp = pointer + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump({"version": version, "size": len(actions)}, f)
-    os.replace(tmp, pointer)
+    # atomic replace: the checkpoint file itself is PARSED by readers (the
+    # pointer fallback scan trusts any *.checkpoint.parquet), so a crash
+    # mid-write must never leave a torn one; same for the pointer (the
+    # read side also tolerates a partial one by falling back to a scan)
+    tablefiles.replace_atomically(
+        _checkpoint_path(table, version), lambda f: pq.write_table(tbl, f)
+    )
+    pointer = json.dumps({"version": version, "size": len(actions)}).encode()
+    tablefiles.replace_atomically(
+        os.path.join(table, _LOG_DIR, "_last_checkpoint"), lambda f: f.write(pointer)
+    )
     return version
 
 
@@ -368,29 +370,19 @@ def _replay(table: str, version: int | None) -> tuple[dict[str, dict], dict, int
 
 
 def _commit(table: str, version: int, actions: list[dict]) -> None:
-    """Atomically publish ``version``: O_EXCL create of the log file IS the
-    commit — concurrent writers race on the filename and exactly one wins."""
-    path = _log_path(table, version)
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    # Full-content atomicity (review r5): write the COMPLETE action list
-    # to a temp file (fsynced), then hard-link it to the version name —
-    # link(2) is the same put-if-absent primitive as O_EXCL, but a crash
-    # mid-write can now only leave a stray temp (vacuum-invisible: not
-    # .parquet), never a torn log file that poisons every later replay.
-    tmp = os.path.join(os.path.dirname(path), f".commit-{uuid.uuid4().hex}.tmp")
-    with open(tmp, "w") as f:
-        for action in actions:
-            f.write(json.dumps(action, separators=(",", ":")) + "\n")
-        f.flush()
-        os.fsync(f.fileno())
+    """Atomically publish ``version``: the put-if-absent create of the
+    COMPLETE log file IS the commit — concurrent writers race on the
+    filename and exactly one wins; a crash mid-write never leaves a torn
+    log file that poisons every later replay."""
+    body = "".join(json.dumps(a, separators=(",", ":")) + "\n" for a in actions)
     try:
-        os.link(tmp, path)
+        tablefiles.put_if_absent(
+            _log_path(table, version), lambda f: f.write(body.encode())
+        )
     except FileExistsError as exc:
         raise DeltaCommitConflict(
             f"version {version} already committed at {table}"
         ) from exc
-    finally:
-        os.unlink(tmp)
 
 
 # ---------------------------------------------------------------------------
@@ -398,69 +390,29 @@ def _commit(table: str, version: int, actions: list[dict]) -> None:
 # ---------------------------------------------------------------------------
 
 
-_STATS_PHYSICAL_TYPES = ("INT32", "INT64", "FLOAT", "DOUBLE", "BOOLEAN")
-
-
-def _file_stats(pq_meta) -> dict:
-    """Delta-format per-file stats from the parquet footer: numRecords,
-    nullCount for every top-level column, min/maxValues for numeric /
-    boolean / date-ish columns. String and binary min/max are deliberately
-    omitted: parquet writers may truncate long byte-array statistics, and a
-    truncated bound recorded as exact would let the skipping reader drop a
-    file that actually matches (real Delta truncates to 32 chars WITH an
-    upper-bound adjustment; numerics-only is the safe subset here)."""
-    num_records = pq_meta.num_rows
-    mins: dict = {}
-    maxs: dict = {}
-    nulls: dict = {}
-    null_covered: dict = {}  # row groups contributing null_count per column
-    covered: dict = {}  # row groups contributing min/max per column
-    for rg in range(pq_meta.num_row_groups):
-        group = pq_meta.row_group(rg)
-        for ci in range(group.num_columns):
-            col = group.column(ci)
-            name = col.path_in_schema
-            if "." in name:  # nested field — top-level stats only
-                continue
-            st = col.statistics
-            if st is None:
-                continue
-            if st.null_count is not None:
-                nulls[name] = nulls.get(name, 0) + st.null_count
-                null_covered[name] = null_covered.get(name, 0) + 1
-            if not st.has_min_max or st.physical_type not in _STATS_PHYSICAL_TYPES:
-                continue
-            covered[name] = covered.get(name, 0) + 1
-            lo, hi = st.min, st.max
-            if name not in mins or lo < mins[name]:
-                mins[name] = lo
-            if name not in maxs or hi > maxs[name]:
-                maxs[name] = hi
-    # a column's min/max is sound only if EVERY row group contributed —
-    # bounds covering part of the file logged as exact would let the
-    # skipping reader drop a file whose stats-less row group matches
-    complete = {n for n, k in covered.items() if k == pq_meta.num_row_groups}
-    # same soundness rule for nullCount (review r5): a row group without
-    # statistics may hold NULLs — logging a partial sum as exact would let
-    # a null-aware reader (IS NULL pruning) drop a matching file
-    stats: dict = {
-        "numRecords": num_records,
-        "nullCount": {
-            n: c
-            for n, c in nulls.items()
-            if null_covered.get(n) == pq_meta.num_row_groups
-        },
+def _add(rel: str, size: int, stats: dict, pvals: dict, now_ms: int, data_change: bool) -> dict:
+    """The add action for one file ``tablefiles.stage`` published."""
+    return {
+        "add": {
+            "path": rel,
+            "partitionValues": pvals,
+            "size": size,
+            "modificationTime": now_ms,
+            "dataChange": data_change,
+            "stats": json.dumps(stats),
+        }
     }
-    if complete:
-        stats["minValues"] = {k: _json_scalar(v) for k, v in mins.items() if k in complete}
-        stats["maxValues"] = {k: _json_scalar(v) for k, v in maxs.items() if k in complete}
-    return stats
 
 
-def _json_scalar(v):
-    """Parquet footer scalars → JSON-serializable (dates/timestamps from
-    logical types surface as datetime objects)."""
-    return v.isoformat() if hasattr(v, "isoformat") else v
+def _stage_adds(df: DataFrame, table: str, meta: dict, now_ms: int) -> list[dict]:
+    """Stage ``df`` (logical names — physical on disk under column mapping)
+    as new data files partitioned like the table; returns their add
+    actions."""
+    cols = meta.get("partitionColumns", [])
+    return [
+        _add(rel, size, stats, partition_values(rel, cols), now_ms, True)
+        for rel, size, stats in tablefiles.stage(_to_physical(df, meta), table, "", cols)
+    ]
 
 
 # ---------------------------------------------------------------------------
@@ -989,8 +941,6 @@ def _stage_cdf(table: str, meta: dict, change_df: DataFrame | None) -> list[dict
     like every data file; _change_type passes through verbatim."""
     if change_df is None or not _cdf_enabled(meta):
         return []
-    staging = os.path.join(table, f".staging-{uuid.uuid4().hex}")
-    _to_physical(change_df, meta).write.mode("overwrite").parquet(staging)
     return [
         {
             "cdc": {
@@ -1000,7 +950,9 @@ def _stage_cdf(table: str, meta: dict, change_df: DataFrame | None) -> list[dict
                 "dataChange": False,
             }
         }
-        for rel, size, _stats in _publish_staged(staging, table, dest_dir=_CDF_DIR)
+        for rel, size, _stats in tablefiles.stage(
+            _to_physical(change_df, meta), table, _CDF_DIR
+        )
     ]
 
 
@@ -1142,75 +1094,6 @@ def _read_adds(spark: SparkSession, table: str, meta: dict, adds: list[dict]) ->
     return df
 
 
-def _stage_files(
-    df: DataFrame, table: str, partition_cols: list[str]
-) -> list[tuple[str, int, dict]]:
-    """Write df's part files into the table directory (under partition
-    subdirs when partitioned) via a staging dir + rename, returning
-    (relative path, size, stats dict) per data file. Staging keeps a
-    failed job from leaving half-published files that a concurrent
-    overwrite's remove-set wouldn't cover."""
-    staging = os.path.join(table, f".staging-{uuid.uuid4().hex}")
-    writer = df.write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(staging)
-    return _publish_staged(staging, table)
-
-
-def _publish_staged(
-    staging: str, table: str, dest_dir: str | None = None
-) -> list[tuple[str, int, dict]]:
-    """Move every staged parquet file into the table (preserving its
-    staging-relative path, or flattened into ``dest_dir``), footer-reading
-    its stats on the way; then clear the staging skeleton (_SUCCESS, empty
-    partition dirs). Returns (relative path, size, stats) per file."""
-    import pyarrow.parquet as pq
-
-    out: list[tuple[str, int, dict]] = []
-    for root, _dirs, files in os.walk(staging):
-        for name in files:
-            if not name.endswith(".parquet"):
-                continue
-            src = os.path.join(root, name)
-            if dest_dir is None:
-                rel = os.path.relpath(src, staging)
-            else:
-                rel = os.path.join(dest_dir, name) if dest_dir else name
-            dst = os.path.join(table, rel)
-            stats = _file_stats(pq.read_metadata(src))
-            size = os.path.getsize(src)
-            os.makedirs(os.path.dirname(dst) or table, exist_ok=True)
-            os.rename(src, dst)
-            out.append((rel, size, stats))
-    for root, dirs, files in os.walk(staging, topdown=False):
-        for name in files:
-            os.remove(os.path.join(root, name))
-        for name in dirs:
-            os.rmdir(os.path.join(root, name))
-    os.rmdir(staging)
-    return out
-
-
-def _partition_values(rel_path: str, partition_cols: list[str]) -> dict[str, str]:
-    """Recover hive-style partition values from the file's directory path.
-    Spark percent-escapes special characters in partition directory names
-    (`a b` → `a%20b`); the log stores the UNESCAPED value, so
-    ``partition_filters`` compare against what the user wrote."""
-    from urllib.parse import unquote
-
-    values: dict[str, str] = {}
-    for piece in rel_path.split(os.sep)[:-1]:
-        if "=" in piece:
-            k, _, v = piece.partition("=")
-            if k in partition_cols:
-                raw = unquote(v)
-                # hive encodes SQL NULL as a sentinel directory; the log
-                # (and the Delta protocol) store null, not the sentinel
-                values[k] = None if raw == "__HIVE_DEFAULT_PARTITION__" else raw
-    return values
-
-
 def write_delta(
     df: DataFrame,
     table: str,
@@ -1310,7 +1193,7 @@ def write_delta(
     table_meta = meta if versions else {"schemaString": df.schema.json()}
     if versions:
         _enforce_constraints(df, meta, f"WRITE ({mode}) batch")
-    staged = _stage_files(_to_physical(df, table_meta), table, partition_cols)
+    staged = tablefiles.stage(_to_physical(df, table_meta), table, "", partition_cols)
     if bloom_columns:
         # per-file Bloom filters for equality skipping on columns zone maps
         # can't serve (strings, high-cardinality ids); see _augment_bloom —
@@ -1322,19 +1205,10 @@ def write_delta(
             actions.append(
                 {"remove": {"path": rel, "deletionTimestamp": now_ms, "dataChange": True}}
             )
-    for rel, size, stats in staged:
-        actions.append(
-            {
-                "add": {
-                    "path": rel,
-                    "partitionValues": _partition_values(rel, partition_cols),
-                    "size": size,
-                    "modificationTime": now_ms,
-                    "dataChange": True,
-                    "stats": json.dumps(stats),
-                }
-            }
-        )
+    actions += [
+        _add(rel, size, stats, partition_values(rel, partition_cols), now_ms, True)
+        for rel, size, stats in staged
+    ]
     if txn is not None:
         actions.append(
             {"txn": {"appId": txn[0], "version": int(txn[1]), "lastUpdated": now_ms}}
@@ -1369,11 +1243,12 @@ def _commit_append_rebase(
 ) -> int:
     """Commit, rebasing a BLIND APPEND past concurrent winners (the
     protocol's conflict rule: an append conflicts with nothing unless the
-    winner changed the table's metadata): on losing the O_EXCL race, re-aim
-    at the new head after verifying schema and partitioning are unchanged —
-    the staged files and actions stay valid verbatim. Overwrites are NOT
-    rebased (their remove-set describes the snapshot they read) and
-    re-raise immediately, as does a metadata change or retry exhaustion."""
+    winner changed the table's metadata): on losing the put-if-absent race,
+    re-aim at the new head after verifying schema and partitioning are
+    unchanged — the staged files and actions stay valid verbatim.
+    Overwrites are NOT rebased (their remove-set describes the snapshot
+    they read) and re-raise immediately, as does a metadata change or
+    retry exhaustion."""
     carries_meta = any("metaData" in a for a in actions)
     if mode != "append" or carries_meta:
         # overwrites read a snapshot their remove-set depends on; a
@@ -1505,12 +1380,12 @@ def read_delta(
         ]
     pm = _phys_map(meta)  # stats/blooms are keyed by PHYSICAL column names
     if range_filters:
-        # bounds normalized like the logged stats (_json_scalar): a
+        # bounds normalized like the logged stats (json_scalar): a
         # date/datetime bound becomes its ISO string, comparable with the
         # stored min/max; numerics pass through
         norm = {
-            pm.get(c, c): (_json_scalar(lo) if lo is not None else None,
-                           _json_scalar(hi) if hi is not None else None)
+            pm.get(c, c): (json_scalar(lo) if lo is not None else None,
+                           json_scalar(hi) if hi is not None else None)
             for c, (lo, hi) in range_filters.items()
         }
         adds = [
@@ -1526,7 +1401,7 @@ def read_delta(
             a
             for a in adds
             if all(
-                _file_may_match(a, pm.get(c, c), _json_scalar(v), _json_scalar(v))
+                _file_may_match(a, pm.get(c, c), json_scalar(v), json_scalar(v))
                 and _bloom_may_contain(a, pm.get(c, c), v)
                 for c, v in equality_filters.items()
             )
@@ -1577,21 +1452,11 @@ def compact_table(
         # file must have the same physical columns as the originals
         df = _read_adds(spark, table, meta, adds).drop(*partition_cols).coalesce(1)
         part_dir = os.path.dirname(adds[0]["path"])
-        staging = os.path.join(table, f".compact-{uuid.uuid4().hex}")
-        _to_physical(df, meta).write.mode("overwrite").parquet(staging)
-        for rel, size, stats in _publish_staged(staging, table, dest_dir=part_dir):
-            actions.append(
-                {
-                    "add": {
-                        "path": rel,
-                        "partitionValues": dict(adds[0]["partitionValues"]),
-                        "size": size,
-                        "modificationTime": now_ms,
-                        "dataChange": False,
-                        "stats": json.dumps(stats),
-                    }
-                }
-            )
+        pvals = adds[0]["partitionValues"]
+        actions += [
+            _add(rel, size, stats, dict(pvals), now_ms, False)
+            for rel, size, stats in tablefiles.stage(_to_physical(df, meta), table, part_dir)
+        ]
         for a in adds:
             actions.append(
                 {
@@ -1628,27 +1493,12 @@ def _rewrite_files(
     (logical names — converted to physical here under column mapping) as
     replacement files (partitioned like the table) and return the
     remove+add actions. Untouched files are never rewritten."""
-    partition_cols = meta.get("partitionColumns", [])
-    staged = _stage_files(_to_physical(keep_df, meta), table, partition_cols)
-    actions: list[dict] = []
-    for a in affected:
-        actions.append(
-            {"remove": {"path": a["path"], "deletionTimestamp": now_ms, "dataChange": True}}
-        )
-    for rel, size, stats in staged:
-        actions.append(
-            {
-                "add": {
-                    "path": rel,
-                    "partitionValues": _partition_values(rel, partition_cols),
-                    "size": size,
-                    "modificationTime": now_ms,
-                    "dataChange": True,
-                    "stats": json.dumps(stats),
-                }
-            }
-        )
-    return actions
+    adds = _stage_adds(keep_df, table, meta, now_ms)
+    removes = [
+        {"remove": {"path": a["path"], "deletionTimestamp": now_ms, "dataChange": True}}
+        for a in affected
+    ]
+    return removes + adds
 
 
 def _affected_adds(spark: SparkSession, table: str, active: dict, hit_df: DataFrame) -> list[dict]:
@@ -1952,23 +1802,7 @@ def update_where(
             images = apply_set(
                 _read_adds(spark, table, meta, dv_adds).filter(hit)
             ).coalesce(1)
-            for rel, size, stats in _stage_files(
-                _to_physical(images, meta), table, meta.get("partitionColumns", [])
-            ):
-                actions.append(
-                    {
-                        "add": {
-                            "path": rel,
-                            "partitionValues": _partition_values(
-                                rel, meta.get("partitionColumns", [])
-                            ),
-                            "size": size,
-                            "modificationTime": now_ms,
-                            "dataChange": True,
-                            "stats": json.dumps(stats),
-                        }
-                    }
-                )
+            actions += _stage_adds(images, table, meta, now_ms)
         if cow_adds:
             actions += _rewrite_files(
                 spark,
@@ -2042,21 +1876,11 @@ def purge_deletion_vectors(spark: SparkSession, table: str) -> int | None:
         by_dir.setdefault(os.path.dirname(a["path"]), []).append(a)
     for part_dir, adds in sorted(by_dir.items()):
         df = _read_adds(spark, table, meta, adds).drop(*partition_cols)
-        staging = os.path.join(table, f".compact-{uuid.uuid4().hex}")
-        _to_physical(df, meta).write.mode("overwrite").parquet(staging)
-        for rel, size, stats in _publish_staged(staging, table, dest_dir=part_dir):
-            actions.append(
-                {
-                    "add": {
-                        "path": rel,
-                        "partitionValues": dict(adds[0].get("partitionValues", {})),
-                        "size": size,
-                        "modificationTime": now_ms,
-                        "dataChange": False,
-                        "stats": json.dumps(stats),
-                    }
-                }
-            )
+        pvals = adds[0].get("partitionValues", {})
+        actions += [
+            _add(rel, size, stats, dict(pvals), now_ms, False)
+            for rel, size, stats in tablefiles.stage(_to_physical(df, meta), table, part_dir)
+        ]
         for a in adds:
             actions.append(
                 {"remove": {"path": a["path"], "deletionTimestamp": now_ms, "dataChange": False}}
@@ -2125,7 +1949,6 @@ def merge_delta(
 
     active, meta, latest = _replay(table, None)
     _check_writer_protocol(table)
-    partition_cols = meta.get("partitionColumns", [])
     table_schema = StructType.fromJson(json.loads(meta["schemaString"]))
     # nullability-insensitive, matching write_delta's contract: a CDC
     # source built from aggregations flips nullability with identical
@@ -2263,19 +2086,7 @@ def merge_delta(
         actions += _rewrite_files(spark, table, meta, affected, keep, now_ms)
     # the inserted/updated/re-emitted rows, as fresh files
     # (physical names under column mapping, like every staged write)
-    for rel, size, stats in _stage_files(_to_physical(new_rows, meta), table, partition_cols):
-        actions.append(
-            {
-                "add": {
-                    "path": rel,
-                    "partitionValues": _partition_values(rel, partition_cols),
-                    "size": size,
-                    "modificationTime": now_ms,
-                    "dataChange": True,
-                    "stats": json.dumps(stats),
-                }
-            }
-        )
+    actions += _stage_adds(new_rows, table, meta, now_ms)
     actions.append(
         {
             "commitInfo": {
@@ -2361,7 +2172,7 @@ def vacuum_table(
         dirs[:] = [
             d
             for d in dirs
-            if d != _LOG_DIR and not d.startswith((".staging-", ".compact-"))
+            if d != _LOG_DIR and not d.startswith(tablefiles.STAGING_PREFIX)
         ]
         for name in files:
             full = os.path.join(root, name)
@@ -2535,21 +2346,11 @@ def optimize_zorder(
             .drop("_zorder")
         )
         part_dir = os.path.dirname(adds[0]["path"])
-        staging = os.path.join(table, f".compact-{uuid.uuid4().hex}")
-        _to_physical(laid, meta).write.mode("overwrite").parquet(staging)
-        for rel, size, stats in _publish_staged(staging, table, dest_dir=part_dir):
-            actions.append(
-                {
-                    "add": {
-                        "path": rel,
-                        "partitionValues": dict(adds[0]["partitionValues"]),
-                        "size": size,
-                        "modificationTime": now_ms,
-                        "dataChange": False,
-                        "stats": json.dumps(stats),
-                    }
-                }
-            )
+        pvals = adds[0]["partitionValues"]
+        actions += [
+            _add(rel, size, stats, dict(pvals), now_ms, False)
+            for rel, size, stats in tablefiles.stage(_to_physical(laid, meta), table, part_dir)
+        ]
         for a in adds:
             actions.append(
                 {

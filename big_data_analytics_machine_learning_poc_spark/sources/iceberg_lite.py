@@ -25,10 +25,11 @@ Spec mapping (section names from the spec):
   snapshot_id, data_file) with identity-transform partition tuples and
   per-column lower/upper bounds in the spec's single-value binary
   serialization (int/long/date LE-int, float/double LE-IEEE; bounds are
-  keyed by field id). Bounds come from the parquet footers via
-  delta_lite's soundness-audited ``_file_stats`` (a bound is logged only
-  when every row group contributed), so file skipping is never a
-  correctness dependency.
+  keyed by field id). Bounds come from the parquet footers via the
+  soundness-audited ``tablefiles.file_stats`` shared with delta_lite (a
+  bound is logged only when every row group contributed; nested columns
+  get none while flat columns beside them keep theirs), so file skipping
+  is never a correctness dependency.
 - **Row-level deletes** (spec §Position Delete Files): DELETE / UPDATE /
   MERGE commit *position delete files* — parquet files of
   ``(file_path, pos)`` pairs registered in delete manifests (manifest-list
@@ -40,14 +41,17 @@ Spec mapping (section names from the spec):
   delete file's. Merge-on-read economics: erasing 100 rows scattered over
   100 one-GB files costs kilobytes of delete parquet, never a rewrite;
   ``compact_iceberg`` later materializes the delete debt.
-- **Commit protocol**: metadata versions publish with ``open(path, "x")``
-  (put-if-absent) so two writers racing from the same parent version get
-  a typed ``IcebergCommitConflict`` instead of a silent lost update, and
-  ``version-hint.text`` moves via temp-file + ``os.replace`` so a reader
-  never observes a mid-truncate empty hint (ADVICE r9). Data files
-  publish from staging via ``os.link`` + ``os.unlink`` (fails loudly on a
-  name collision instead of silently overwriting a file an older
-  snapshot still references).
+- **Commit protocol**: every file enters the table through
+  ``sources/tablefiles.py``, the module delta_lite uses too. Metadata
+  versions publish with ``tablefiles.put_if_absent`` (fsynced temp, then
+  link to the final name) so two writers racing from the same parent
+  version get a typed ``IcebergCommitConflict`` instead of a silent lost
+  update, and ``version-hint.text`` moves with
+  ``tablefiles.replace_atomically`` so a reader never observes a
+  mid-truncate empty hint (ADVICE r9). Data and delete files go through
+  ``tablefiles.stage`` (staging prefix, footer stats, put-if-absent
+  publish: a name collision fails loudly instead of silently overwriting
+  a file an older snapshot still references).
 - **Paths**: manifests, manifest lists and data files are recorded as
   fully-qualified absolute locations (rooted at the metadata
   ``location``), matching the Iceberg runtime's resolution rules
@@ -64,6 +68,7 @@ Layout on disk::
       metadata/m-<snapshot-id>-0.avro
       data/[p_col=value/]part-*.parquet
       data/deletes-<snapshot-id>/part-*.parquet   # position delete files
+      data/eq-deletes-<snapshot-id>/part-*.parquet  # equality delete files
 
 Data files keep hive-style partition directories so a plain
 ``spark.read.option("basePath", ...)`` re-derives identity partition
@@ -88,8 +93,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from . import avro_lite
-from .delta_lite import _file_stats, _partition_values
+from . import avro_lite, tablefiles
+from .tablefiles import partition_values
 
 # ---------------------------------------------------------------------------
 # Spark ↔ Iceberg schema mapping (spec §Schemas and Data Types)
@@ -482,15 +487,15 @@ def load_metadata(table: str, version: int | None = None) -> dict:
 
 def _write_metadata(table: str, meta: dict, version: int) -> None:
     md = _meta_dir(table)
-    os.makedirs(md, exist_ok=True)
-    path = os.path.join(md, f"v{version}.metadata.json")
+    body = json.dumps(meta, indent=1, sort_keys=True).encode()
     try:
         # put-if-absent (the HadoopTables commit rule): two writers that
         # both loaded version N race to create v(N+1); exactly one wins,
         # the loser gets a typed conflict instead of silently clobbering
         # the winner's commit (ADVICE r9)
-        with open(path, "x") as f:
-            json.dump(meta, f, indent=1, sort_keys=True)
+        tablefiles.put_if_absent(
+            os.path.join(md, f"v{version}.metadata.json"), lambda f: f.write(body)
+        )
     except FileExistsError:
         raise IcebergCommitConflict(
             f"{table}: metadata version {version} already exists — either a "
@@ -501,13 +506,12 @@ def _write_metadata(table: str, meta: dict, version: int) -> None:
             f"recover_orphan_metadata(table) with no writers active to "
             f"clear it)"
         ) from None
-    # hint LAST, via temp + atomic rename: a reader following the hint
-    # always finds a complete file (a crash between the two writes leaves
-    # the previous version live), and never a mid-truncate empty hint
-    tmp = os.path.join(md, f".version-hint.{uuid.uuid4().hex}.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(version))
-    os.replace(tmp, os.path.join(md, "version-hint.text"))
+    # hint LAST, via atomic replace: a reader following the hint always
+    # finds a complete file (a crash between the two writes leaves the
+    # previous version live), and never a mid-truncate empty hint
+    tablefiles.replace_atomically(
+        os.path.join(md, "version-hint.text"), lambda f: f.write(str(version).encode())
+    )
 
 
 def recover_orphan_metadata(table: str) -> list[int]:
@@ -930,7 +934,7 @@ def _stage_partitioned(
     frame, part_names = _apply_partition_exprs(
         frame, spec_fields, field_types, fid_to_phys
     )
-    return _stage_data_files(frame, table, part_names), part_names
+    return tablefiles.stage(frame, table, "data", part_names), part_names
 
 
 def _match_or_mint_spec(
@@ -971,64 +975,6 @@ def _match_or_mint_spec(
     )
 
 
-def _stage_data_files(df: DataFrame, table: str, partition_cols: list[str]):
-    """Write df's parquet part files under ``table/data`` (hive partition
-    dirs when partitioned) via staging + rename, returning
-    (path relative to table, size, stats) per file — delta_lite's staging
-    doctrine: a failed job never leaves half-published files where a
-    snapshot could see them."""
-    import pyarrow.parquet as pq
-
-    data_dir = os.path.join(table, "data")
-    staging = os.path.join(table, f".staging-{uuid.uuid4().hex}")
-    writer = df.write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(staging)
-    out = []
-    for root, _dirs, files in os.walk(staging):
-        for name in files:
-            if not name.endswith(".parquet"):
-                continue
-            src = os.path.join(root, name)
-            rel = os.path.relpath(src, staging)
-            dst = os.path.join(data_dir, rel)
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            pq_meta = pq.read_metadata(src)
-            try:
-                stats = _file_stats(pq_meta)
-            except Exception:
-                # pyarrow raises ArrowNotImplementedError touching the
-                # statistics of map/list columns; record_count is required
-                # by the spec, bounds are optional — degrade to that
-                stats = {"numRecords": pq_meta.num_rows}
-            size = os.path.getsize(src)
-            _publish(src, dst)
-            out.append((os.path.join("data", rel), size, stats))
-    for root, dirs, files in os.walk(staging, topdown=False):
-        for name in files:
-            os.remove(os.path.join(root, name))
-        for name in dirs:
-            os.rmdir(os.path.join(root, name))
-    os.rmdir(staging)
-    return out
-
-
-def _publish(src: str, dst: str) -> None:
-    """Put-if-absent publish: ``os.link`` fails EEXIST atomically where
-    ``os.rename`` silently overwrites on POSIX — a part-file name
-    collision would otherwise corrupt a data file a prior snapshot still
-    references (ADVICE r9; probability is tiny given Spark's per-job
-    UUIDs, but the failure must be loud, not silent data loss)."""
-    try:
-        os.link(src, dst)
-    except FileExistsError:
-        raise FileExistsError(
-            f"refusing to overwrite already-published data file {dst}"
-        ) from None
-    os.unlink(src)
-
-
 def _bounds_maps(stats: dict, name_to_field: dict[str, dict]):
     """Footer min/max → Iceberg lower/upper bound id-maps (and null counts)."""
     lowers, uppers, nulls = [], [], []
@@ -1062,7 +1008,7 @@ def _data_entries(
     each transform's RESULT type, footer-derived bounds)."""
     entries = []
     for rel, size, stats in staged:
-        pvals_raw = _partition_values(rel, partition_cols)
+        pvals_raw = partition_values(rel, partition_cols)
         partition = {
             pf["name"]: _coerce_partition_value(
                 _transform_result_type(
@@ -1253,9 +1199,7 @@ def write_iceberg(
             # (VERDICT r11 #4). The spec-change conflict path inside the
             # attempt already unlinks; double-unlink is a suppressed no-op.
             if staged is not None:
-                for rel, _size, _stats in staged:
-                    with contextlib.suppress(OSError):
-                        os.unlink(os.path.join(table, rel))
+                tablefiles.unpublish(table, staged)
             raise
         if snap_or_conflict[0] == "ok":
             return snap_or_conflict[1]
@@ -1429,14 +1373,12 @@ def _write_iceberg_attempt(
         df_part, part_names = _apply_partition_exprs(
             df, spec_fields, field_types, fid_to_phys
         )
-        staged = _stage_data_files(df_part, table, part_names)
+        staged = tablefiles.stage(df_part, table, "data", part_names)
         stage_want = want
     elif want != stage_want:
         # the table's spec changed under the retry: the staged hive layout
         # no longer matches — clean up and surface a true conflict
-        for rel, _size, _stats in staged:
-            with contextlib.suppress(OSError):
-                os.unlink(os.path.join(table, rel))
+        tablefiles.unpublish(table, staged)
         raise IcebergCommitConflict(
             f"{table}: partition spec changed concurrently "
             f"({stage_want} -> {want}); staged layout invalid — re-run the write"
@@ -2462,49 +2404,28 @@ def _carried_manifests(table: str, meta: dict) -> list[dict]:
     return manifests
 
 
-def _stage_frame_files(
-    frame: DataFrame, table: str, snap_id: int, prefix: str = ""
-) -> list[tuple[str, int, int]]:
-    """Stage any small unpartitioned frame as parquet under
-    ``data/deletes-<snap_id>/`` via the staging+put-if-absent publish
-    doctrine, skipping empty task outputs. Returns (abs path, size,
-    record count) per published file. The frame never touches the driver
-    — one file per task, the same write shape the Iceberg runtime uses.
-    Shared core of the position- and equality-delete stagers (review r10
-    #6: three diverging copies of this sequence)."""
-    import pyarrow.parquet as pq
-
-    staging = os.path.join(table, f".staging-{uuid.uuid4().hex}")
-    frame.write.parquet(staging)
-    dest_dir = os.path.join(table, "data", f"deletes-{snap_id}")
-    out = []
-    for name in sorted(os.listdir(staging)):
-        if not name.endswith(".parquet"):
-            continue
-        src = os.path.join(staging, name)
-        n = pq.read_metadata(src).num_rows
-        if n == 0:
-            continue  # empty task output — nothing to register
-        os.makedirs(dest_dir, exist_ok=True)
-        dst = os.path.join(dest_dir, prefix + name)
-        _publish(src, dst)
-        out.append((dst, os.path.getsize(dst), n))
-    for root, dirs, files in os.walk(staging, topdown=False):
-        for f in files:
-            os.remove(os.path.join(root, f))
-        for d in dirs:
-            os.rmdir(os.path.join(root, d))
-    os.rmdir(staging)
-    return out
-
-
 def _stage_delete_files(
+    frame: DataFrame, table: str, subdir: str
+) -> list[tuple[str, int, int]]:
+    """Stage a small unpartitioned delete frame under ``table/subdir``,
+    one file per non-empty task (the Iceberg runtime's write shape; the
+    frame never touches the driver). Returns (abs path, size, record
+    count) per published file."""
+    return [
+        (os.path.join(table, rel), size, stats["numRecords"])
+        for rel, size, stats in tablefiles.stage(frame, table, subdir)
+    ]
+
+
+def _stage_pos_delete_files(
     hits: DataFrame, table: str, snap_id: int
 ) -> list[tuple[str, int, int]]:
     """Position delete files: ``(file_path, pos)`` rows sorted within each
     task's file as the spec requires."""
-    return _stage_frame_files(
-        hits.sortWithinPartitions("file_path", "pos"), table, snap_id
+    return _stage_delete_files(
+        hits.sortWithinPartitions("file_path", "pos"),
+        table,
+        os.path.join("data", f"deletes-{snap_id}"),
     )
 
 
@@ -2739,7 +2660,7 @@ def delete_where(spark: SparkSession, table: str, predicate: str) -> int | None:
     hits = df.filter(F.expr(predicate)).select(
         F.col(_LIN_FILE).alias("file_path"), F.col(_LIN_POS).alias("pos")
     )
-    staged = _stage_delete_files(hits, table, snap_id)
+    staged = _stage_pos_delete_files(hits, table, snap_id)
     if not staged:
         return None
     spec_fields = _partition_spec(meta)
@@ -2810,7 +2731,7 @@ def update_where(
     # matched frame once or the full table scan + delete anti-joins replay
     # for each (review r10 #5; the repo's checkpoint doctrine)
     hits = df.filter(F.expr(predicate)).localCheckpoint()
-    staged_del = _stage_delete_files(
+    staged_del = _stage_pos_delete_files(
         hits.select(F.col(_LIN_FILE).alias("file_path"), F.col(_LIN_POS).alias("pos")),
         table,
         snap_id,
@@ -2968,7 +2889,7 @@ def merge_iceberg(
     # deletes/updates; the key set drives the not-matched anti join
     pairs = tgt.join(src, on, "inner").select(*sel).localCheckpoint()
     matched = pairs.filter(F.col("_ice_clause").isNotNull())
-    staged_del = _stage_delete_files(
+    staged_del = _stage_pos_delete_files(
         matched.select(
             F.col("_ice_mf").alias("file_path"), F.col("_ice_mp").alias("pos")
         ),
@@ -3008,12 +2929,8 @@ def merge_iceberg(
 
     release_local_checkpoint(src)
     release_local_checkpoint(pairs)
-    if not staged_del and sum(s[2]["numRecords"] for s in staged_data) == 0:
-        # empty source, no matches: un-publish the (empty) staged files —
-        # never referenced by any manifest, so removal is invisible
-        for rel, _size, _stats in staged_data:
-            _rm(os.path.join(table, rel))
-        return None
+    if not staged_del and not staged_data:
+        return None  # empty source, no matches: nothing was published
     field_types = _field_types(meta)
     schema_json = _schema_by_id(meta)
     name_to_field = _phys_name_to_field(meta, schema_json)
@@ -3107,15 +3024,15 @@ def upsert_by_key(
     staged_data, part_cols = _stage_partitioned(
         source.select(*[f.name for f in schema.fields]), table, meta, spec_fields
     )
-    if sum(s[2]["numRecords"] for s in staged_data) == 0:
-        for rel, _size, _stats in staged_data:
-            _rm(os.path.join(table, rel))
+    if not staged_data:
         return None
     # the delete side: the source's distinct keys, sorted for determinism
     keys = source.select(*key_cols).distinct().sortWithinPartitions(*key_cols)
     # key files carry PHYSICAL names, like every staged parquet
-    staged_keys = _stage_eq_delete_files(
-        _to_physical_frame(keys, meta), table, snap_id
+    staged_keys = _stage_delete_files(
+        _to_physical_frame(keys, meta),
+        table,
+        os.path.join("data", f"eq-deletes-{snap_id}"),
     )
     field_types = _field_types(meta)
     schema_json = _schema_by_id(meta)
@@ -3153,14 +3070,6 @@ def upsert_by_key(
         eq_deletes_added=sum(n for _p, _s, n in staged_keys),
         rebuild=upsert_manifests,
     )
-
-
-def _stage_eq_delete_files(
-    keys: DataFrame, table: str, snap_id: int
-) -> list[tuple[str, int, int]]:
-    """Equality-delete key files, ``eq-`` name prefix so a snapshot
-    carrying both delete kinds cannot collide in the shared dir."""
-    return _stage_frame_files(keys, table, snap_id, prefix="eq-")
 
 
 # ---------------------------------------------------------------------------

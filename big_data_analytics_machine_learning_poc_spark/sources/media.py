@@ -61,10 +61,6 @@ _EXT_FORMAT = {
 }
 
 
-def media_format(ext: str) -> str:
-    return _EXT_FORMAT.get(ext.lower(), "application/octet-stream")
-
-
 def ingest_media_dir(
     spark: SparkSession, path: str, glob: str | None = None
 ) -> DataFrame:

@@ -324,7 +324,11 @@ class DeltaLiteReader(DataSourceReader):
             )
         return out
 
-    def read(self, partition: DeltaLiteInputPartition):
+    def read(self, partition: DeltaLiteInputPartition | None):
+        if partition is None:
+            # Spark reads one None partition when partitions() is empty:
+            # no file survived pruning, or the snapshot has no files
+            return
         yield from _read_file_batches(
             partition.file_path,
             self.schema.fieldNames(),  # the PRUNED column set
@@ -566,7 +570,7 @@ class _DeltaLiteWriterCore:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        from .delta_lite import _file_stats
+        from .tablefiles import file_stats, put_if_absent
 
         batches = [b for b in iterator if b.num_rows]
         if not batches:
@@ -576,9 +580,8 @@ class _DeltaLiteWriterCore:
         tbl = tbl.rename_columns([self.phys.get(n, n) for n in tbl.column_names])
         rel = f"part-{_uuid.uuid4().hex}.parquet"
         dest = os.path.join(self.table, rel)
-        os.makedirs(self.table, exist_ok=True)
-        pq.write_table(tbl, dest)
-        stats = _file_stats(pq.ParquetFile(dest).metadata)
+        put_if_absent(dest, lambda f: pq.write_table(tbl, f))
+        stats = file_stats(pq.ParquetFile(dest).metadata)
         return DeltaLiteCommitMessage(
             rel=rel, size=os.path.getsize(dest), stats=json.dumps(stats)
         )

@@ -691,6 +691,9 @@ def test_empty_frame_write(spark, table):
     assert [(f.name, f.dataType) for f in back.schema.fields] == [
         (f.name, f.dataType) for f in df.schema.fields
     ]
+    # zero-row part files are skipped, not registered (the Delta twin is in
+    # test_tablefiles.py)
+    assert plan_scan(table)["files"] == []
 
 
 def test_lakehouse_router(spark, table):

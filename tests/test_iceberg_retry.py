@@ -15,7 +15,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from big_data_analytics_machine_learning_poc_spark.sources import iceberg_lite
+from big_data_analytics_machine_learning_poc_spark.sources import iceberg_lite, tablefiles
 from big_data_analytics_machine_learning_poc_spark.sources.iceberg_lite import (
     delete_where,
     read_iceberg,
@@ -84,13 +84,13 @@ def test_append_retry_is_metadata_only(spark, table, monkeypatch):
     commits are metadata)."""
     write_iceberg(_frame(spark, 0, 10), table)
     calls = {"n": 0}
-    real_stage = iceberg_lite._stage_data_files
+    real_stage = tablefiles.stage
 
-    def counting_stage(df, t, cols):
+    def counting_stage(df, t, subdir, cols=()):
         calls["n"] += 1
-        return real_stage(df, t, cols)
+        return real_stage(df, t, subdir, cols)
 
-    monkeypatch.setattr(iceberg_lite, "_stage_data_files", counting_stage)
+    monkeypatch.setattr(tablefiles, "stage", counting_stage)
     unpatch = _race_once(
         monkeypatch,
         table,

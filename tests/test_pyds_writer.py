@@ -144,11 +144,11 @@ def test_stream_replayed_batch_discarded(spark, tmp_path):
     def stage():
         rel = f"part-test-{os.urandom(4).hex()}.parquet"
         pq.write_table(pa.table({"id": pa.array([7], type=pa.int64())}), os.path.join(t, rel))
-        from big_data_analytics_machine_learning_poc_spark.sources.delta_lite import (
-            _file_stats,
+        from big_data_analytics_machine_learning_poc_spark.sources.tablefiles import (
+            file_stats,
         )
 
-        stats = _file_stats(pq.ParquetFile(os.path.join(t, rel)).metadata)
+        stats = file_stats(pq.ParquetFile(os.path.join(t, rel)).metadata)
         return DeltaLiteCommitMessage(
             rel=rel, size=os.path.getsize(os.path.join(t, rel)), stats=json.dumps(stats)
         )

@@ -314,7 +314,7 @@ def test_delta_lite_append_rebase_past_conflict(spark, tmp_path):
 
 
 def test_delta_lite_commit_conflict_and_protocol_gate(spark, tmp_path):
-    """The O_EXCL commit primitive: a second writer targeting the same
+    """The put-if-absent commit primitive: a second writer targeting the same
     version loses with DeltaCommitConflict. A table demanding a newer
     reader version is refused, not misread."""
     import json as _json
@@ -1145,6 +1145,9 @@ def test_pyds_connector_reads_prunes_and_time_travels(spark, tmp_path):
     unsupported = list(r.pushFilters([EqualTo(("c_mktsegment",), "BUILDING")]))
     assert len(unsupported) == 1  # every filter handed back for row-level apply
     assert 0 < len(r.partitions()) < n_all
+    # a pushdown that prunes every file is an empty scan, not an error
+    pruned = spark.read.format("delta_lite").load(table).filter("c_mktsegment = 'NONE'")
+    assert pruned.count() == 0
 
     # (c) zone-map skipping on a data column needs key-ranged layout
     table2 = str(tmp_path / "t2")
