@@ -10,6 +10,7 @@ SQL cannot drift apart.
 
 from __future__ import annotations
 
+import importlib
 import os
 import sys
 from collections.abc import Callable
@@ -300,19 +301,9 @@ def _registry(window_first: bool = True) -> QueryRegistry:
         "ann_audit",
         "lakehouse_evolution",
     ):
-        try:
-            mod = __import__(
-                f"big_data_analytics_machine_learning_poc_spark.operators.{mod_name}",
-                fromlist=[mod_name],
-            )
-        except ModuleNotFoundError as e:
-            # tolerate only THIS module being absent (round-incremental
-            # scaffolding); a transitive import failure inside an existing
-            # module must be LOUD — swallowing it would silently drop all
-            # its queries from the driver registry
-            if e.name and e.name.endswith(mod_name):
-                continue
-            raise
+        mod = importlib.import_module(
+            f"big_data_analytics_machine_learning_poc_spark.operators.{mod_name}"
+        )
         reg.merge(mod.REG)
 
     missing = [n for n in _DRIVER_WINDOW if n not in reg.queries]

@@ -21,9 +21,17 @@ Two releases, both SAFE only at specific points:
   Only between independent units of work (a measurement harness between
   lane runs) — never while a returned lazy frame still depends on a
   checkpoint.
+
+``checkpointed_split(df, weights, seed, cols)`` makes two of the frames
+the first release is for: the halves of a seeded ``randomSplit``, each
+narrowed to the columns its consumers read and checkpointed once. The
+caller owns both halves and passes each to ``release_local_checkpoint``
+after every consumer of it (a fit, a transform, an evaluator) has joined.
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -41,6 +49,24 @@ def release_local_checkpoint(df: DataFrame) -> bool:
         return False
     plan.rdd().unpersist(False)
     return True
+
+
+def checkpointed_split(
+    df: DataFrame, weights: list[float], seed: int, cols: Sequence[str]
+) -> list[DataFrame]:
+    """``df.randomSplit(weights, seed)``, each half projected to ``cols``
+    and materialized with ``localCheckpoint()``.
+
+    The split runs on the unchanged ``df``, so each half holds the same
+    rows, in the same partitions and order, as the plain split. What
+    changes is the lineage later jobs ship: ``randomSplit`` sorts every
+    partition by every orderable column of ``df`` before it samples, so an
+    iterative fit over a plain half deserializes that whole sort in each
+    task of each iteration. A checkpointed half ships a scan of its own
+    blocks. Narrow after the split when ``df`` carries columns the
+    consumers never read; release each half with
+    ``release_local_checkpoint`` once they have joined."""
+    return [half.select(*cols).localCheckpoint() for half in df.randomSplit(weights, seed)]
 
 
 def unpersist_all(spark: SparkSession, blocking: bool = False) -> int:

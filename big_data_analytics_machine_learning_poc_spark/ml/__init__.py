@@ -9,5 +9,12 @@
 Deliberate deviations from the reference (SURVEY §7 known-hard #5):
 seeded randomSplit everywhere; clean → split → fit ordering (the reference
 fits its StringIndexer on pre-clean data, SpamClassification.java:60-62);
-parameterized data paths; caching at fit boundaries.
+parameterized data paths.
+
+Narrowing rule at fit boundaries: when a split frame carries columns that
+the fit and the scoring never read, its halves are narrowed to the read
+columns and checkpointed (``functions.ckpt.checkpointed_split``), so the
+estimator's iteration tasks do not ship the split's sort over every
+column. ``tfidf_regression`` and ``random_forest`` qualify; ``spam``
+already splits a cached two-column frame, and ``correlator`` has no split.
 """

@@ -8,12 +8,20 @@ numTrees=20) → IndexToString on label and prediction (:75-78) → confusion
 matrix as groupBy(label, prediction).count() (:86-87) → f1 (the evaluator's
 default metric — the reference sets none, :90-92).
 
+The split halves are narrowed to ``(label, features)`` and checkpointed
+(``functions.ckpt.checkpointed_split``): the forest's per-level jobs and
+the scoring read nothing else, and a plain half would make each of their
+tasks deserialize the split's sort over all of the assembled frame's
+columns. The halves hold the same rows in the same order as the plain
+split, so the forest, its importances and the metrics are unchanged.
+
 ``run`` overlaps independent actions with ``functions.fanout``: the label
 audit runs beside the forest fit, and the confusion matrix, the f1
 evaluation and the test count run together on the fitted predictions.
 Each branch has its own estimator or evaluator, and each reads only
-deterministic inputs (the cached indexed frame and its seeded split), so
-the results do not depend on how the branches' jobs interleave.
+deterministic inputs (the cached indexed frame and the checkpointed
+halves of its seeded split), so the results do not depend on how the
+branches' jobs interleave. The halves are released after the last join.
 """
 
 from __future__ import annotations
@@ -23,6 +31,7 @@ from pyspark.ml.evaluation import MulticlassClassificationEvaluator
 from pyspark.ml.feature import IndexToString, StringIndexer, VectorAssembler
 from pyspark.sql import DataFrame
 
+from ..functions.ckpt import checkpointed_split, release_local_checkpoint
 from ..functions.fanout import fanout
 
 FEATURES = ["SST", "SRT", "SAT", "SAP", "SEP"]
@@ -31,9 +40,11 @@ FEATURES = ["SST", "SRT", "SAT", "SAP", "SEP"]
 def run(data: DataFrame, seed: int = 42, num_trees: int = 20) -> dict:
     indexer_model = StringIndexer(inputCol="SKL", outputCol="label").fit(data)
     indexed = indexer_model.transform(data).cache()
+    halves: list[DataFrame] = []
     try:
         assembled = VectorAssembler(inputCols=FEATURES, outputCol="features").transform(indexed)
-        train, test = assembled.randomSplit([0.7, 0.3], seed=seed)
+        halves = checkpointed_split(assembled, [0.7, 0.3], seed, ("label", "features"))
+        train, test = halves
 
         rf = RandomForestClassifier(
             labelCol="label", featuresCol="features", numTrees=num_trees, seed=seed
@@ -74,4 +85,6 @@ def run(data: DataFrame, seed: int = 42, num_trees: int = 20) -> dict:
             "total_num_nodes": model.totalNumNodes,
         }
     finally:
+        for half in halves:
+            release_local_checkpoint(half)
         indexed.unpersist()

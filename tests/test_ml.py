@@ -14,7 +14,7 @@ from big_data_analytics_machine_learning_poc_spark.ml import (
     tfidf_regression,
 )
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, persistent_rdd_ids
 
 
 @pytest.fixture(scope="module")
@@ -99,6 +99,20 @@ def test_tfidf_regression_golden(spark):
     assert out["rmse"] < 1.3, out
     assert -1.0 <= out["nationality_corr"] <= 1.0
     assert out["n_test"] > 0
+
+
+@pytest.mark.parametrize(
+    "program, build",
+    [(tfidf_regression, fixtures.hotel_reviews), (random_forest, fixtures.user_know)],
+    ids=["tfidf_regression", "random_forest"],
+)
+def test_split_programs_release_their_storage(spark, program, build):
+    """The cached inputs, the featurized checkpoint and both checkpointed
+    split halves are all released by the time ``run`` returns."""
+    data = build(spark)
+    before = persistent_rdd_ids(spark)
+    program.run(data)
+    assert persistent_rdd_ids(spark) - before == set()
 
 
 def test_hashingtf_idf_invariants(spark):
