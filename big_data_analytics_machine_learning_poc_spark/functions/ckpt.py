@@ -9,7 +9,7 @@ accumulates hundreds of dead blocks; r12 measured untouched lanes
 drifting 2-4× late in a sweep from exactly this storage/GC pressure
 (VERDICT r12 what's-wrong #5).
 
-Two releases, both SAFE only at specific points:
+One release, SAFE only at a specific point:
 
 - ``release_local_checkpoint(df)``: drop the blocks behind ONE
   checkpointed frame. A locally-checkpointed RDD cannot recompute
@@ -17,13 +17,14 @@ Two releases, both SAFE only at specific points:
   has either finished or been materialized into its OWN checkpoint —
   e.g. the superseded previous checkpoint right after the next eager
   checkpoint lands.
-- ``unpersist_all(spark)``: drop every persistent RDD in the context.
-  Only between independent units of work (a measurement harness between
-  lane runs) — never while a returned lazy frame still depends on a
-  checkpoint.
+
+A checkpoint a lane returns, or one its result still reads, outlives the
+lane's own code. The lane runner (``tools/lanerun.py``) releases those
+after the lane's rows are collected: every RDD that became persistent
+during the run.
 
 ``checkpointed_split(df, weights, seed, cols)`` makes two of the frames
-the first release is for: the halves of a seeded ``randomSplit``, each
+that release is for: the halves of a seeded ``randomSplit``, each
 narrowed to the columns its consumers read and checkpointed once. The
 caller owns both halves and passes each to ``release_local_checkpoint``
 after every consumer of it (a fit, a transform, an evaluator) has joined.
@@ -33,7 +34,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def release_local_checkpoint(df: DataFrame) -> bool:
@@ -67,14 +68,3 @@ def checkpointed_split(
     consumers never read; release each half with
     ``release_local_checkpoint`` once they have joined."""
     return [half.select(*cols).localCheckpoint() for half in df.randomSplit(weights, seed)]
-
-
-def unpersist_all(spark: SparkSession, blocking: bool = False) -> int:
-    """Unpersist every persistent RDD in the SparkContext; returns how
-    many were released. See module docstring for when this is safe."""
-    n = 0
-    it = spark.sparkContext._jsc.getPersistentRDDs().values().iterator()
-    while it.hasNext():
-        it.next().unpersist(blocking)
-        n += 1
-    return n

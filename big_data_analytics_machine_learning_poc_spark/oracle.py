@@ -85,16 +85,18 @@ def fingerprint(cols: list[str], rows: list[tuple]) -> str:
     return fingerprint_matrix(normalized_matrix(cols, rows))
 
 
-def compare_query(spark_df, con, sql: str, sidecar: str | None = None) -> list[str]:
-    """Return a list of mismatch descriptions (empty = exact match).
+def compare_query(
+    scols: list[str], srows: list[tuple], con, sql: str, sidecar: str | None = None
+) -> list[str]:
+    """Compare a collected Spark result (its columns and rows) with the
+    oracle ``sql`` run on ``con``. Return a list of mismatch descriptions
+    (empty = exact match).
 
     ``sidecar``: optional query name; when set, both sides' fingerprints —
     and on mismatch the first differing normalized rows — are dumped to
     ``DIAG/compare_<name>.json`` next to the repo root, so a red row is
     diagnosable after the fact (round-2 ask: driver-side reds left nothing
     to inspect)."""
-    scols = spark_df.columns
-    srows = [tuple(r) for r in spark_df.collect()]
     cur = con.execute(sql)
     dcols = [d[0] for d in cur.description]
     drows = cur.fetchall()

@@ -20,9 +20,8 @@ from .conftest import SF_DIR
 def test_bpe_oracle_parity(spark, duck, name):
     from big_data_analytics_machine_learning_poc_spark.oracle import compare_query
 
-    problems = compare_query(
-        bpe.REG.queries[name](spark, SF_DIR), duck, bpe.REG.oracles[name]
-    )
+    df = bpe.REG.queries[name](spark, SF_DIR)
+    problems = compare_query(df.columns, df.collect(), duck, bpe.REG.oracles[name])
     assert not problems, f"{name}: {problems}"
 
 

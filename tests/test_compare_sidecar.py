@@ -34,7 +34,7 @@ def test_full_sweep_writes_mismatch_sidecar(spark, monkeypatch):
     def probe(s, sf_dir):
         return s.range(1, 4).selectExpr("id AS v")
 
-    monkeypatch.setattr(entrymod, "_registry", lambda: reg)
+    monkeypatch.setattr(entrymod, "_registry", lambda window_first=True: reg)
     monkeypatch.setattr(session_mod, "get_session", lambda *a, **k: spark)
     monkeypatch.setattr(spark, "stop", lambda: None)  # shared pytest session
     monkeypatch.setattr(sys, "argv", ["compare.py", SF_DIR])  # FULL sweep
@@ -69,7 +69,7 @@ def test_full_sweep_green_lane_sidecar_has_agreeing_fingerprints(spark, monkeypa
     def probe(s, sf_dir):
         return s.range(1, 4).selectExpr("id AS v")
 
-    monkeypatch.setattr(entrymod, "_registry", lambda: reg)
+    monkeypatch.setattr(entrymod, "_registry", lambda window_first=True: reg)
     monkeypatch.setattr(session_mod, "get_session", lambda *a, **k: spark)
     monkeypatch.setattr(spark, "stop", lambda: None)
     monkeypatch.setattr(sys, "argv", ["compare.py", SF_DIR])

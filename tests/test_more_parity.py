@@ -45,7 +45,8 @@ for _reg in _REGS:
 
 @pytest.mark.parametrize("name", sorted(_ORACLES))
 def test_oracle_parity(spark, duck, name):
-    problems = compare_query(_QUERIES[name](spark, SF_DIR), duck, _ORACLES[name])
+    df = _QUERIES[name](spark, SF_DIR)
+    problems = compare_query(df.columns, df.collect(), duck, _ORACLES[name])
     assert not problems, f"{name}: {problems}"
 
 

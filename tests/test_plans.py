@@ -622,7 +622,14 @@ def test_perfsweep_subset_write_baseline_merges(tmp_path, monkeypatch):
         "runs": 3,
         "sf_dir": "sfX",
         "loadavg_start": [0.7],
-        "lanes": {"swept_lane": {"median_s": 1.5, "oneshot_s": 2.5, "rows": 1}},
+        "lanes": {
+            "swept_lane": {
+                "median_s": 1.5,
+                "oneshot_s": 2.5,
+                "rows": 1,
+                "record": {"persisted_before": 0, "persisted_after": 0},
+            }
+        },
     }
     monkeypatch.setattr(perfsweep, "sweep", lambda *a, **k: fake_report)
     monkeypatch.setattr(
@@ -634,6 +641,7 @@ def test_perfsweep_subset_write_baseline_merges(tmp_path, monkeypatch):
     merged = json.loads(base.read_text())
     assert set(merged["lanes"]) == {"kept_lane", "swept_lane"}
     assert merged["lanes"]["swept_lane"]["median_s"] == 1.5
+    assert merged["lanes"]["swept_lane"]["record"]["persisted_after"] == 0
     assert merged["lanes"]["kept_lane"]["median_s"] == 1.0
     assert merged["loadavg_start"] == [0.7]
 

@@ -17,7 +17,7 @@ ORACLE_NAMES = sorted(relational.REG.oracles)
 @pytest.mark.parametrize("name", ORACLE_NAMES)
 def test_oracle_parity(spark, duck, name):
     df = relational.REG.queries[name](spark, SF_DIR)
-    problems = compare_query(df, duck, relational.REG.oracles[name])
+    problems = compare_query(df.columns, df.collect(), duck, relational.REG.oracles[name])
     assert not problems, f"{name}: {problems}"
 
 

@@ -17,9 +17,8 @@ from .conftest import SF_DIR
 def test_sketch_oracle_parity(spark, duck, name):
     from big_data_analytics_machine_learning_poc_spark.oracle import compare_query
 
-    problems = compare_query(
-        sketches.REG.queries[name](spark, SF_DIR), duck, sketches.REG.oracles[name]
-    )
+    df = sketches.REG.queries[name](spark, SF_DIR)
+    problems = compare_query(df.columns, df.collect(), duck, sketches.REG.oracles[name])
     assert not problems, f"{name}: {problems}"
 
 

@@ -34,7 +34,8 @@ def test_extension_oracle_parity(spark, duck, name):
         oracles.update(reg.oracles)
     from big_data_analytics_machine_learning_poc_spark.oracle import compare_query
 
-    problems = compare_query(merged[name](spark, SF_DIR), duck, oracles[name])
+    df = merged[name](spark, SF_DIR)
+    problems = compare_query(df.columns, df.collect(), duck, oracles[name])
     assert not problems, f"{name}: {problems}"
 
 

@@ -22,34 +22,27 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
+from tools.lanerun import run, select, session
 
-def sweep(spark, sf_dir: str, only: set[str] | None = None, sidecar_suffix: str = ""):
+
+def sweep(spark, sf_dir: str, only=(), sidecar_suffix: str = ""):
     """Run the differential gate for ``only`` (or every) registered lane at
     ``sf_dir``; returns (n_pass, n_fail, n_rowsonly). ``sidecar_suffix``
     keeps multi-SF runs from clobbering the canonical sf0.01 DIAG
     sidecars."""
-    import __spark_entry__ as entrymod
     from big_data_analytics_machine_learning_poc_spark.oracle import compare_query, register_views
 
     con = duckdb.connect()
     register_views(con, sf_dir)
 
-    # RAW registry, not entrymod.queries(): the instrumented wrappers would
-    # run the _FINGERPRINT_QUERIES' Spark job + oracle SQL a second time
-    # each at the correctness SF (the sidecars below already capture both
-    # fingerprints)
-    reg = entrymod._registry()
-    qs = reg.queries
-    oracles = reg.oracles
+    reg = select(only)
     n_pass = n_fail = n_rowsonly = 0
-    for name, fn in qs.items():
-        if only and name not in only:
-            continue
+    for name, fn in reg.queries.items():
         t0 = time.time()
         try:
-            sdf = fn(spark, sf_dir)
-            if name not in oracles:
-                n = sdf.count()
+            rec = run(spark, name, fn, sf_dir)
+            if name not in reg.oracles:
+                n = len(rec["rows"])
                 if n == 0:
                     # the driver's rows-only gate records rows>0 — an empty
                     # result must go red here too, not just on the driver
@@ -62,7 +55,7 @@ def sweep(spark, sf_dir: str, only: set[str] | None = None, sidecar_suffix: str 
             # sidecar always on: full-sweep reds must leave a DIAG artifact
             # (r2 ask)
             problems = compare_query(
-                sdf, con, oracles[name], sidecar=name + sidecar_suffix
+                rec["columns"], rec["rows"], con, reg.oracles[name], sidecar=name + sidecar_suffix
             )
         except Exception as e:  # noqa: BLE001 — report and keep sweeping
             print(f"FAIL  {name}: {type(e).__name__}: {str(e)[:300]}")
@@ -82,26 +75,17 @@ def main() -> int:
     args = [a for a in sys.argv[1:] if a != "--bare"]
     bare = "--bare" in sys.argv[1:]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
-    only = set(args[1:])
+    only = args[1:]
+    select(only)  # a misspelled name exits 2 before a session starts
 
-    import __spark_entry__ as entrymod
-
-    unknown = only - set(entrymod._registry().queries)
-    if unknown:
-        # a typo'd name silently matching nothing would print '0 pass,
-        # 0 fail' and exit 0 — fail loudly instead
-        print(f"ERROR unknown query names: {sorted(unknown)}")
-        return 2
-
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
     if bare:
         from pyspark.sql import SparkSession
 
-        spark = SparkSession.builder.master(f"local[{cpus}]").getOrCreate()
-    else:
-        from big_data_analytics_machine_learning_poc_spark.session import get_session
+        from big_data_analytics_machine_learning_poc_spark.session import default_cpus
 
-        spark = get_session("compare", cpus=cpus)
+        spark = SparkSession.builder.master(f"local[{default_cpus()}]").getOrCreate()
+    else:
+        spark = session("compare")
     n_pass, n_fail, n_rowsonly = sweep(spark, sf_dir, only)
     print(f"\n{n_pass} pass, {n_fail} fail, {n_rowsonly} rows-only")
     spark.stop()

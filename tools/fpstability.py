@@ -23,6 +23,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools.lanerun import run, select, session
+
 # lane -> why run-to-run drift is inherent (documented, not a defect)
 _TOLERATED: dict[str, str] = {
     "agg_kll_value_quantiles": (
@@ -50,28 +52,24 @@ def main() -> int:
     args = [a for a in argv if not a.startswith("--")]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
 
-    import __spark_entry__ as entrymod
     from big_data_analytics_machine_learning_poc_spark.oracle import (
         fingerprint_matrix,
         normalized_matrix,
     )
-    from big_data_analytics_machine_learning_poc_spark.session import default_cpus, get_session
 
-    reg = entrymod._registry()
+    reg = select()
     rows_only = [n for n in reg.queries if n not in reg.oracles]
-    spark = get_session("fpstability", cpus=default_cpus())
+    spark = session("fpstability")
     n_stable = n_drift = n_err = 0
     for name in rows_only:
         fn = reg.queries[name]
-        mats = []
         try:
-            for _ in range(runs):
-                df = fn(spark, sf_dir)
-                mats.append(normalized_matrix(df.columns, [tuple(r) for r in df.collect()]))
+            recs = [run(spark, name, fn, sf_dir) for _ in range(runs)]
         except Exception as e:  # noqa: BLE001 — report and keep sweeping
             print(f"ERR    {name}: {type(e).__name__}: {str(e)[:150]}")
             n_err += 1
             continue
+        mats = [normalized_matrix(r["columns"], r["rows"]) for r in recs]
         fps = [fingerprint_matrix(m) for m in mats]
         if len(set(fps)) == 1:
             print(f"stable {name} [{len(mats[0])} rows]")

@@ -10,7 +10,11 @@ regression fails loudly the same way a hash mismatch does.
 Per lane: one untimed warm-up execution, then the median of N timed
 executions (each = build the DataFrame from the registered callable +
 ``collect()``, so lanes that do driver-side assembly — PCA, BPE — are
-charged their real cost). Results land in one JSON file.
+charged their real cost). Every execution goes through
+``tools/lanerun.run``, which releases what the run left persisted after
+the timed span. A lane's entry keeps the run record of its median run:
+jobs and stages, Catalyst phases, exchanges and the persisted-RDD count
+before the run and after its release. Results land in one JSON file.
 
 Usage::
 
@@ -37,91 +41,66 @@ import json
 import os
 import statistics
 import sys
-import time
+from dataclasses import asdict
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-
-def build_session(cpus: int):
-    # the repo's scale-profile factory (AQE, UTC, Arrow, 24g driver): perf
-    # numbers must reflect the tuned profile — a bare builder's 1g default
-    # heap OOMs the heavy streaming lanes at local[32]/sf0.1 (measured)
-    from big_data_analytics_machine_learning_poc_spark.session import get_session
-
-    return get_session("perfsweep", cpus=cpus)
+from tools.lanerun import run, select, session
 
 
-def sweep(
-    sf_dir: str, only: list[str], runs: int, cpus: int, unpersist: bool = False
-) -> dict:
-    import __spark_entry__ as entry
+def _wall(rec: dict) -> float:
+    return rec["build_s"] + rec["collect_s"]
 
-    spark = build_session(cpus)
-    if unpersist:
-        # storage hygiene between runs (r13, VERDICT r12 #3): each run
-        # leaks its own localCheckpoint blocks — by design they live until
-        # the session dies — and a 268-lane sweep accumulates hundreds,
-        # drifting LATE lanes 2-4x above their isolated medians (GC /
-        # storage pressure, the r12 postmortem). Releasing them after the
-        # timed collect doesn't change what the next run computes (every
-        # run builds fresh checkpoints); it makes a long shared-JVM sweep
-        # measure each lane as the driver's shorter windows do.
-        from big_data_analytics_machine_learning_poc_spark.functions.ckpt import (
-            unpersist_all,
-        )
-    else:
-        unpersist_all = None
-    # Measure in MODULE REGISTRATION order, not entry.queries() order:
-    # queries() fronts the current driver window, so its order rotates
-    # every round — and lane timings are neighborhood-sensitive (streaming
-    # lanes run back-to-back inherit each other's checkpoint/GC tail; a
-    # lane after a heavy MLlib fit pays its executor churn). r8 measured
-    # exactly this: two lanes "regressed" 3.4-3.8x in the full sweep yet
-    # were clean both standalone and at r7 close — the rotation had moved
-    # them into new neighborhoods. Registration order only changes when
-    # lanes are ADDED, so baselines stay comparable across rotations.
-    queries = dict(entry._registry(window_first=False).queries)
-    names = only or list(queries)
-    unknown = [n for n in names if n not in queries]
-    if unknown:
-        raise SystemExit(f"unknown lanes: {unknown}")
 
+def _summary(rec: dict) -> dict:
+    """The JSON part of a run record: everything but the rows."""
+    jobs = asdict(rec["jobs"])
+    del jobs["intervals"]
+    return {
+        "build_s": round(rec["build_s"], 4),
+        "collect_s": round(rec["collect_s"], 4),
+        "jobs": {k: round(v, 4) for k, v in jobs.items()},
+        "catalyst_phases": {k: round(v, 4) for k, v in rec["catalyst_phases"].items()},
+        "exchanges": rec["exchanges"],
+        "persisted_before": rec["persisted_before"],
+        "persisted_after": rec["persisted_after"],
+    }
+
+
+def sweep(sf_dir: str, only: list[str], runs: int) -> dict:
+    from big_data_analytics_machine_learning_poc_spark.session import default_cpus
+
+    reg = select(only)
+    loadavg_start = os.getloadavg()
+    spark = session("perfsweep")
     results: dict[str, dict] = {}
-    for i, name in enumerate(names, 1):
-        fn = queries[name]
+    n = len(reg.queries)
+    for i, (name, fn) in enumerate(reg.queries.items(), 1):
         try:
-            t0 = time.perf_counter()
-            n_rows = len(fn(spark, sf_dir).collect())  # warm-up / one-shot
-            oneshot = time.perf_counter() - t0
-            if unpersist_all is not None:
-                unpersist_all(spark)
-            times = []
-            for _ in range(runs):
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).collect()
-                times.append(time.perf_counter() - t0)
-                if unpersist_all is not None:
-                    unpersist_all(spark)
+            first = run(spark, name, fn, sf_dir)  # warm-up / one-shot
+            recs = sorted((run(spark, name, fn, sf_dir) for _ in range(runs)), key=_wall)
+            median = recs[len(recs) // 2]
             results[name] = {
-                "median_s": round(statistics.median(times), 4),
-                "oneshot_s": round(oneshot, 4),
-                "rows": n_rows,
+                "median_s": round(statistics.median(map(_wall, recs)), 4),
+                "oneshot_s": round(_wall(first), 4),
+                "rows": len(first["rows"]),
+                "record": _summary(median),
             }
             print(
-                f"[{i}/{len(names)}] {name}: {results[name]['median_s']:.3f}s "
-                f"(one-shot {oneshot:.2f}s, {n_rows} rows)",
+                f"[{i}/{n}] {name}: {results[name]['median_s']:.3f}s "
+                f"(one-shot {_wall(first):.2f}s, {len(first['rows'])} rows, "
+                f"{median['jobs'].jobs} jobs)",
                 file=sys.stderr,
             )
         except Exception as e:  # noqa: BLE001 — record, keep sweeping
             results[name] = {"error": f"{type(e).__name__}: {str(e)[:200]}"}
-            print(f"[{i}/{len(names)}] {name}: ERROR {e}", file=sys.stderr)
+            print(f"[{i}/{n}] {name}: ERROR {e}", file=sys.stderr)
     return {
         "sf_dir": sf_dir,
-        "cpus": cpus,
+        "cpus": default_cpus(),
         "runs": runs,
-        "unpersist_between_runs": unpersist,
-        "loadavg_start": os.getloadavg(),
+        "loadavg_start": loadavg_start,
         "lanes": results,
     }
 
@@ -189,26 +168,17 @@ def diff_baseline(
 
 
 def main() -> int:
-    from big_data_analytics_machine_learning_poc_spark.session import default_cpus
-
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("sf_dir")
     ap.add_argument("lanes", nargs="*", help="subset of lane names")
     ap.add_argument("--runs", type=int, default=3)
-    ap.add_argument("--cpus", type=int, default=default_cpus())
     ap.add_argument("--out", default=None, help="write the report JSON here")
     ap.add_argument("--baseline", default=None)
     ap.add_argument("--tolerance", type=float, default=3.0)
     ap.add_argument("--write-baseline", default=None)
-    ap.add_argument(
-        "--unpersist",
-        action="store_true",
-        help="release all persistent RDD blocks between runs (checkpoint "
-        "hygiene; keeps late lanes from drifting in a long sweep)",
-    )
     args = ap.parse_args()
 
-    report = sweep(args.sf_dir, args.lanes, args.runs, args.cpus, args.unpersist)
+    report = sweep(args.sf_dir, args.lanes, args.runs)
     out_path = args.out or args.write_baseline
     if out_path:
         # subset --write-baseline MERGES into an existing baseline instead
@@ -230,9 +200,7 @@ def main() -> int:
             report,
             args.baseline,
             args.tolerance,
-            remeasure=lambda names: sweep(
-                args.sf_dir, names, args.runs, args.cpus, args.unpersist
-            ),
+            remeasure=lambda names: sweep(args.sf_dir, names, args.runs),
         )
     return 0
 

@@ -22,6 +22,8 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from tools.lanerun import select, session
+
 BENCH = (
     "agg_avg_max",
     "group_filter",
@@ -39,15 +41,13 @@ def main() -> int:
     lanes = sys.argv[3:] or list(BENCH)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from big_data_analytics_machine_learning_poc_spark.plans.explain import formatted_plan
-    from big_data_analytics_machine_learning_poc_spark.session import get_session
+    regs = select(lanes).queries
 
-    import __spark_entry__ as entry
+    from big_data_analytics_machine_learning_poc_spark.plans.explain import formatted_plan
 
     out_dir = os.path.join(REPO, "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
 
-    regs = entry._registry(window_first=False).queries
     bench_lanes = [l for l in lanes if l in BENCH]
     other_lanes = [l for l in lanes if l not in BENCH]
 
@@ -60,12 +60,12 @@ def main() -> int:
         print(f"wrote {path}")
 
     if bench_lanes:
-        spark = get_session("plancap-micro", profile="micro")
+        spark = session("plancap-micro", profile="micro")
         for lane in bench_lanes:
             cap(spark, lane)
         spark.stop()
     if other_lanes:
-        spark = get_session("plancap-scale")
+        spark = session("plancap-scale")
         for lane in other_lanes:
             cap(spark, lane)
         spark.stop()

@@ -14,25 +14,19 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools.lanerun import select, session
+
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
+    reg = select(sys.argv[2:])
 
-    import __spark_entry__ as entrymod
     from big_data_analytics_machine_learning_poc_spark.plans.barrier import capture_subtrees
     from big_data_analytics_machine_learning_poc_spark.plans.lint import lint_query
-    from big_data_analytics_machine_learning_poc_spark.session import get_session
 
-    spark = get_session("planlint", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "16")))
+    spark = session("planlint")
     n_clean = n_allowed = n_bad = n_err = 0
-    # RAW registry, not entrymod.queries(): the instrumented wrapper
-    # pre-collects fingerprint-window lanes at sf0.01, which can shift the
-    # captured plan (see the r10 shufflebudget note) — lint the lane the
-    # driver's compare gate sees, not the wrapper
-    for name, fn in entrymod._registry().queries.items():
-        if only and name not in only:
-            continue
+    for name, fn in reg.queries.items():
         try:
             # capture pre-barrier subtrees so patterns behind a
             # localCheckpoint can't pass silently (ADVICE r6)

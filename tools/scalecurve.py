@@ -39,9 +39,10 @@ import os
 import shutil
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools.lanerun import run, select, session
 
 BASE_SF = "/root/testdata/sf0.1"
 # Scheme version rides in the work-dir name: bump it whenever the salting
@@ -160,31 +161,22 @@ def main() -> int:
         print(f"unrecognized arguments: {argv}", file=sys.stderr)
         return 2
 
-    import __spark_entry__ as entrymod
-    from big_data_analytics_machine_learning_poc_spark.session import get_session
-
-    spark = get_session("scalecurve", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "16")))
-    reg = entrymod._registry()
+    reg = select(LANES)
+    spark = session("scalecurve")
     dirs = {k: build_scaled(spark, k) for k in scales}
     print(f"scaled corpora ready: {[f'K{k}' for k in scales]} (base {BASE_SF})")
 
     results: dict[str, dict[int, float]] = {}
     rows_at: dict[str, dict[int, int]] = {}
-    for name in LANES:
-        fn = reg.queries[name]
+    for name, fn in reg.queries.items():
         results[name] = {}
         rows_at[name] = {}
         try:
             for k in scales:
-                ts = []
-                n = -1
-                fn(spark, dirs[k]).collect()  # warm (plan + JIT + page cache)
-                for _ in range(runs):
-                    t0 = time.time()
-                    n = len(fn(spark, dirs[k]).collect())
-                    ts.append(time.time() - t0)
-                results[name][k] = statistics.median(ts)
-                rows_at[name][k] = n
+                run(spark, name, fn, dirs[k])  # warm (plan + JIT + page cache)
+                recs = [run(spark, name, fn, dirs[k]) for _ in range(runs)]
+                results[name][k] = statistics.median(r["build_s"] + r["collect_s"] for r in recs)
+                rows_at[name][k] = len(recs[-1]["rows"])
         except Exception as e:  # noqa: BLE001 — a lane needing tables the
             # scaled dir lacks (or failing at scale — the find this tool
             # exists for) must not abort the sweep

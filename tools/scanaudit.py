@@ -37,17 +37,20 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools.lanerun import select, session
 
-def audit(spark, sf_dir: str, min_scans: int = 4) -> list[tuple[int, int, str, list]]:
-    import __spark_entry__ as entrymod
+
+def audit(spark, sf_dir: str, min_scans: int = 4) -> tuple[list[tuple[int, int, str, list]], int]:
+    """(lanes with >= ``min_scans`` same-table scans, worst first; number
+    of lanes that errored)."""
     from big_data_analytics_machine_learning_poc_spark.plans.barrier import capture_subtrees
     from big_data_analytics_machine_learning_poc_spark.plans.budget import (
         table_scan_counts,
     )
 
-    reg = entrymod._registry()
     rows = []
-    for name, fn in reg.queries.items():
+    n_err = 0
+    for name, fn in select().queries.items():
         try:
             with capture_subtrees() as subtrees:
                 df = fn(spark, sf_dir)
@@ -58,6 +61,7 @@ def audit(spark, sf_dir: str, min_scans: int = 4) -> list[tuple[int, int, str, l
             plan = df._jdf.queryExecution().executedPlan().toString()
         except Exception as e:  # noqa: BLE001 — audit sweeps must finish
             print(f"ERR   {name}: {e!r}"[:160])
+            n_err += 1
             continue
         worst = max(tabs.values()) if tabs else 0
         if worst >= min_scans:
@@ -70,7 +74,7 @@ def audit(spark, sf_dir: str, min_scans: int = 4) -> list[tuple[int, int, str, l
                 )
             )
     rows.sort(reverse=True)
-    return rows
+    return rows, n_err
 
 
 def main() -> int:
@@ -86,14 +90,12 @@ def main() -> int:
     args = [a for a in argv if not a.startswith("--")]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
 
-    from big_data_analytics_machine_learning_poc_spark.session import get_session
-
-    spark = get_session()
-    rows = audit(spark, sf_dir, min_scans)
+    spark = session("scanaudit")
+    rows, n_err = audit(spark, sf_dir, min_scans)
     for worst, reused, name, tabs in rows:
         print(f"{worst:3d} scans  reused={reused:2d}  {name:40s} {tabs}")
-    print(f"\n{len(rows)} lane(s) with >= {min_scans} same-table scans")
-    return 0
+    print(f"\n{len(rows)} lane(s) with >= {min_scans} same-table scans, {n_err} errors")
+    return 1 if n_err else 0
 
 
 if __name__ == "__main__":

@@ -21,6 +21,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools.lanerun import select, session
+
 
 def nonatomic_fields(schema) -> list[str]:
     """Names+types of top-level fields the driver's pandas canonicalizer
@@ -38,12 +40,9 @@ def nonatomic_fields(schema) -> list[str]:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 
-    import __spark_entry__ as entrymod
-    from big_data_analytics_machine_learning_poc_spark.session import get_session
-
-    spark = get_session("schemaaudit", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "16")))
+    spark = session("schemaaudit")
     n_ok = n_bad = n_err = 0
-    for name, fn in entrymod.queries().items():
+    for name, fn in select().queries.items():
         try:
             bad = nonatomic_fields(fn(spark, sf_dir).schema)
         except Exception as e:  # noqa: BLE001 — report and keep sweeping

@@ -30,6 +30,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tools.lanerun import select, session
+
 LEDGER = os.path.join(os.path.dirname(os.path.abspath(__file__)), "shuffle_budget.json")
 
 # Headline star joins whose dimension broadcasts are load-bearing for the
@@ -41,29 +43,21 @@ def main() -> int:
     args = [a for a in sys.argv[1:] if a != "--baseline"]
     baseline = "--baseline" in sys.argv[1:]
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
-    only = set(args[1:])
+    only = args[1:]
+    reg = select(only)
 
-    import __spark_entry__ as entrymod
     from big_data_analytics_machine_learning_poc_spark.plans.barrier import capture_subtrees
     from big_data_analytics_machine_learning_poc_spark.plans.budget import lane_exchange_counts
-    from big_data_analytics_machine_learning_poc_spark.session import get_session
 
     prior: dict[str, dict[str, int]] = {}
     if os.path.exists(LEDGER):
         with open(LEDGER) as f:
             prior = json.load(f)["lanes"]
 
-    spark = get_session("shufflebudget", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "16")))
+    spark = session("shufflebudget")
     lanes: dict[str, dict[str, int]] = {}
     n_ok = n_grew = n_shrank = n_new = n_err = 0
-    # RAW registry, not entrymod.queries() (r10: the instrumented wrapper
-    # collects fingerprint-window lanes at sf0.01 BEFORE this tool counts
-    # exchanges, and that pre-execution inflated a window lane's measured
-    # shuffle count by one — a lane's budget must not depend on which
-    # rotation window it sits in; same doctrine tools/compare.py documents)
-    for name, fn in entrymod._registry().queries.items():
-        if only and name not in only:
-            continue
+    for name, fn in reg.queries.items():
         try:
             # full-lane counts: returned plan + every pre-barrier subtree
             # (r7: without the capture, checkpointing lanes were budgeted
@@ -105,10 +99,9 @@ def main() -> int:
         merged = dict(prior)
         merged.update(lanes)
         # drop ledger entries for lanes no longer in the registry
-        merged = {n: v for n, v in merged.items() if n in entrymod.queries()}
-        missing = [
-            n for n in entrymod.queries() if (not only or n in only) and n not in merged
-        ]
+        registered = select().queries
+        merged = {n: v for n, v in merged.items() if n in registered}
+        missing = [n for n in reg.queries if n not in merged]
         if missing:
             print(
                 f"\nREFUSING to write ledger: {len(missing)} lane(s) errored "

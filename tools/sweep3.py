@@ -27,7 +27,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from compare import sweep  # tools/compare.py
+from tools.compare import sweep
+from tools.lanerun import select, session
 
 _SF_ROOT = "/root/testdata"
 _PRECOMMIT_SFS = ("sf0.001", "sf0.1")
@@ -37,28 +38,21 @@ _FULL_SFS = ("sf0.001", "sf0.01", "sf0.1")
 def main() -> int:
     args = sys.argv[1:]
     full = "--full" in args
-    only = {a for a in args if not a.startswith("--")}
+    only = [a for a in args if not a.startswith("--")]
     if not full and not only:
         print(__doc__)
         return 2
-
-    import __spark_entry__ as entrymod
-    from big_data_analytics_machine_learning_poc_spark.session import default_cpus, get_session
-
-    unknown = only - set(entrymod._registry().queries)
-    if unknown:
-        print(f"ERROR unknown query names: {sorted(unknown)}")
-        return 2
+    select(only)  # a misspelled name exits 2 before a session starts
 
     sfs = _FULL_SFS if full else _PRECOMMIT_SFS
-    spark = get_session("sweep3", cpus=default_cpus())
+    spark = session("sweep3")
     totals = []
     failed = False
     for sf in sfs:
         sf_dir = os.path.join(_SF_ROOT, sf)
         print(f"\n=== {sf_dir} ===")
         suffix = "" if sf == "sf0.01" else f"@{sf}"
-        n_pass, n_fail, n_rowsonly = sweep(spark, sf_dir, only or None, suffix)
+        n_pass, n_fail, n_rowsonly = sweep(spark, sf_dir, only, suffix)
         totals.append((sf, n_pass, n_fail, n_rowsonly))
         failed = failed or n_fail > 0
     spark.stop()
