@@ -397,9 +397,9 @@ def delta_merge_clauses(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered INSERT) are engine-independent: merge-on-read position
     deletes and copy-on-write file rewrites produce the identical table.
 
-    Scale shape: one right-outer join decides everything (target read
-    once); only files holding clause-hit rows rewrite — cost follows the
-    match volume, not table size."""
+    Scale shape: one inner join with the source finds the clause hits by
+    row address (target read once); only files holding clause-hit rows
+    rewrite — cost follows the match volume, not table size."""
     import shutil
     import tempfile
 

@@ -29,8 +29,9 @@ detection (put-if-absent of the next version's log file via
 ``tablefiles.put_if_absent`` — the same primitive real Delta uses on
 filesystems with atomic put-if-absent; data files are staged and
 published by ``tablefiles.stage``, which refuses to overwrite), the full DML
-triad (DELETE / UPDATE / MERGE), deletion vectors, column mapping
-(rename/drop without rewrites), per-column Bloom filters, CHECK
+triad (DELETE / UPDATE / MERGE, planned by ``sources/dml.py``), deletion
+vectors, column mapping (rename/drop without rewrites), per-column Bloom
+filters, CHECK
 constraints (writer version 3), and the change data feed — a real
 `_change_data` directory written by the DML paths plus file-diff
 derivation for plain appends/overwrites (``snapshot_diff`` below reads
@@ -1050,47 +1051,79 @@ def table_changes(
     return out.select(*out_cols)
 
 
-def _read_adds(spark: SparkSession, table: str, meta: dict, adds: list[dict]) -> DataFrame:
+def _read_adds(
+    spark: SparkSession, table: str, meta: dict, adds: list[dict], lineage: bool = False
+) -> DataFrame:
     """THE snapshot read core: the given add-actions' files under the
     logged schema, with each file's deletion vector applied. Every reader
-    of active files — read_delta, DELETE/MERGE keep-side, OPTIMIZE
-    rewrites, snapshot_diff — comes through here, so a DV'd row cannot be
-    resurrected by any code path. Application is one broadcast left-anti
-    join on (file_name, row_index) against the union of inline DVs —
-    executor-side, arbitrarily many data rows; the driver holds only the
-    DV indices themselves, bounded by _DV_MAX_ROWS_PER_FILE per file
-    (the promotion path past that bound is DV sidecar files loaded
-    executor-side — but past that bound copy-on-write already wins)."""
+    of active files — read_delta, the DML lineage scan and copy-on-write
+    keep side, OPTIMIZE rewrites, snapshot_diff — comes through here, so a
+    DV'd row cannot be resurrected by any code path. Application is one
+    broadcast left-anti join on (file_name, row_index) against the union
+    of inline DVs — executor-side, arbitrarily many data rows; the driver
+    holds only the DV indices themselves, bounded by _DV_MAX_ROWS_PER_FILE
+    per file (the promotion path past that bound is DV sidecar files loaded
+    executor-side — but past that bound copy-on-write already wins).
+
+    ``lineage=True`` is the DML planner's scan (``sources/dml.py``): each
+    live row also carries its address, ``dml.FILE`` (Spark's
+    ``_metadata.file_path`` URI) and ``dml.POS`` (physical row index)."""
+    from . import dml
+
     schema = StructType.fromJson(json.loads(meta["schemaString"]))
+    address = [StructField(dml.FILE, StringType()), StructField(dml.POS, LongType())]
     if not adds:
         return spark.createDataFrame(
-            [], StructType([StructField(f.name, f.dataType, f.nullable) for f in schema.fields])
+            [],
+            StructType(
+                [StructField(f.name, f.dataType, f.nullable) for f in schema.fields]
+                + (address if lineage else [])
+            ),
         )
     from pyspark.sql import functions as F
 
     df = _snapshot_reader(spark, table, meta).parquet(
         *[os.path.join(table, a["path"]) for a in adds]
     )
+    if lineage:
+        df = df.withColumn(dml.FILE, F.col("_metadata.file_path")).withColumn(
+            dml.POS, F.col("_metadata.row_index")
+        )
     dv_adds = [a for a in adds if a.get("deletionVector")]
     if dv_adds:
         pairs = [
-            (os.path.basename(a["path"]), i) for a in dv_adds for i in _dv_indices(a)
+            (a["path"].replace(os.sep, "/"), i) for a in dv_adds for i in _dv_indices(a)
         ]
         from ..functions.localrows import local_rows_df
 
         # driver-bounded DV index list as one Arrow batch (r13: the sliced
         # Python-RDD form cost a worker round trip per slice per broadcast)
         deleted = local_rows_df(spark, pairs, "_dl_fname string, _dl_ridx long")
+        # a file is keyed by its path relative to the table — the last
+        # (partition depth + 1) segments of its decoded URI. The basename
+        # alone repeats across partition directories (a task names its file
+        # alike in every partition it writes), and a DV keyed by it would
+        # delete the same row index in every partition. '+' is protected
+        # before the form-decoding url_decode; a URI renders '%' as %25.
+        depth = len(meta.get("partitionColumns", [])) + 1
+        rel = F.substring_index(
+            F.url_decode(F.regexp_replace(F.col("_metadata.file_path"), r"\+", "%2B")),
+            "/",
+            -depth,
+        )
         out_cols = df.columns
         df = (
-            df.withColumn("_dl_fname", F.col("_metadata.file_name"))
+            df.withColumn("_dl_fname", rel)
             .withColumn("_dl_ridx", F.col("_metadata.row_index"))
             .join(F.broadcast(deleted), ["_dl_fname", "_dl_ridx"], "left_anti")
             .select(*out_cols)
         )
     if _mapping_enabled(meta):
         pm = _phys_map(meta)
-        df = df.select(*[F.col(pm[f.name]).alias(f.name) for f in schema.fields])
+        df = df.select(
+            *[F.col(pm[f.name]).alias(f.name) for f in schema.fields],
+            *([dml.FILE, dml.POS] if lineage else []),
+        )
     return df
 
 
@@ -1481,112 +1514,132 @@ def compact_table(
     return version
 
 
-def _rewrite_files(
+def _commit_plan(
     spark: SparkSession,
     table: str,
+    active: dict,
     meta: dict,
-    affected: list[dict],
-    keep_df: DataFrame,
-    now_ms: int,
-) -> list[dict]:
-    """Copy-on-write core shared by DELETE and MERGE: stage ``keep_df``
-    (logical names — converted to physical here under column mapping) as
-    replacement files (partitioned like the table) and return the
-    remove+add actions. Untouched files are never rewritten."""
-    adds = _stage_adds(keep_df, table, meta, now_ms)
-    removes = [
-        {"remove": {"path": a["path"], "deletionTimestamp": now_ms, "dataChange": True}}
-        for a in affected
-    ]
-    return removes + adds
+    latest: int,
+    plan,
+    mode: str,
+    dv_max_fraction: float,
+    params: dict,
+) -> int | None:
+    """Delta's commit step for a ``dml`` plan, in ONE log version.
 
+    Each file holding a hit either gets a deletion vector of its hit rows
+    (merged with the DV it already has) or is rewritten copy-on-write as
+    its rows minus the hit addresses. ``mode='cow'`` rewrites every touched
+    file; ``mode='dv'`` rewrites only the files whose accumulated DV would
+    exceed ``dv_max_fraction`` of their rows or the inline cap
+    _DV_MAX_ROWS_PER_FILE — dense changes want the rewrite anyway, and read
+    amplification stays bounded. Files without a hit are never touched, and
+    the rows of a touched file that no statement clause hits stay in place.
 
-def _affected_adds(spark: SparkSession, table: str, active: dict, hit_df: DataFrame) -> list[dict]:
-    """add-actions of the files that contain at least one row of
-    ``hit_df`` (which must still carry ``_dl_file`` = input_file_name).
-    One distinct over file names — never a driver-side per-file loop."""
+    Per-file hit COUNTS are collected first (tiny), so the density decision
+    happens before any index list reaches the driver; the bound
+    old_cardinality + new_hits is exact, as hits are live rows only. The
+    new rows (update and merge images, accepted inserts) are validated
+    against the CHECK constraints before anything is staged, then land as
+    one new file (compaction folds it later), written in the same job as
+    the rewrites. With the change data feed on, the hits and the new rows
+    are the commit's change rows. Returns the version, or None when a
+    DELETE or UPDATE touches nothing (a MERGE always commits)."""
     from urllib.parse import unquote, urlparse
 
-    # realpath both sides: input_file_name() reports the RESOLVED physical
-    # path, so a symlinked table path would otherwise match nothing and turn
-    # a DELETE into a silent no-op (and a MERGE into blind duplicate inserts)
-    root = os.path.realpath(table)
-    hit_files = {
-        os.path.relpath(os.path.realpath(unquote(urlparse(r["_dl_file"]).path)), root)
-        for r in hit_df.select("_dl_file").distinct().collect()
-    }
-    return [a for p, a in active.items() if p in hit_files]
-
-
-def _dv_mark(
-    spark: SparkSession,
-    table: str,
-    meta: dict,
-    affected: list[dict],
-    pred,
-    dv_max_fraction: float,
-    now_ms: int,
-) -> tuple[list[dict], list[dict]]:
-    """Merge-on-read core shared by DELETE and UPDATE in dv mode: mark
-    every matching physical row of ``affected`` as deleted via per-file
-    deletion vectors. Returns (actions, cow_adds) — actions carry the
-    remove+re-add-with-DV pairs; cow_adds are the files whose accumulated
-    DV would exceed ``dv_max_fraction`` (or the inline cap) and must be
-    rewritten copy-on-write by the caller instead.
-
-    The scan is RAW (pre-DV): an already-deleted row that re-matches just
-    lands back in the union it is already part of. Per-file match COUNTS
-    are collected first (tiny), so the density decision happens before
-    any index list touches the driver — a half-the-file operation must
-    not collect millions of indices just to discover it wants the
-    rewrite. The bound uses old_cardinality + new_matches, an upper bound
-    on the union — conservative toward copy-on-write, which dense
-    operations want anyway."""
     from pyspark.sql import functions as F
 
-    pm = _phys_map(meta)
-    raw = (
-        _snapshot_reader(spark, table, meta)
-        .parquet(*[os.path.join(table, a["path"]) for a in affected])
-        .select(
-            F.col("_metadata.file_name").alias("_dl_f"),
-            F.col("_metadata.row_index").alias("_dl_i"),
-            # physical -> logical so ``pred`` resolves under column mapping
-            *[F.col(p).alias(c) for c, p in pm.items()],
+    from . import dml
+
+    # Spark's file URI → add action; realpath both sides, so a symlinked
+    # table path maps too (an unmapped file raises instead of turning the
+    # statement into a silent no-op)
+    root = os.path.realpath(table)
+    touched = [
+        (
+            uri,
+            active[os.path.relpath(os.path.realpath(unquote(urlparse(uri).path)), root)],
+            n,
         )
-    )
-    fname = F.col("_dl_f")
-    by_name = {os.path.basename(a["path"]): a for a in affected}
-    counts = raw.filter(pred).groupBy(fname.alias("_f")).count().collect()
-    actions: list[dict] = []
-    cow_adds: list[dict] = []
-    dv_names: list[str] = []
-    for row in counts:
-        add = by_name[row["_f"]]
-        stats = json.loads(add.get("stats") or "{}")
-        n_phys = int(stats.get("numRecords") or 0)
-        bound = len(_dv_indices(add)) + row["count"]
+        for uri, n in plan.hits.groupBy(dml.FILE).count().collect()
+    ]
+    if not touched and plan.kind != "merge":
+        return None
+    data_cols = [
+        f.name for f in StructType.fromJson(json.loads(meta["schemaString"])).fields
+    ]
+    if plan.new_rows is not None:
+        # only the CHANGED rows: unchanged rows hold by invariant
+        _enforce_constraints(
+            plan.new_rows.select(*data_cols), meta, f"{plan.kind.upper()} result"
+        )
+    now_ms = int(time.time() * 1000)
+
+    def remove(add: dict) -> dict:
+        return {
+            "remove": {"path": add["path"], "deletionTimestamp": now_ms, "dataChange": True}
+        }
+
+    dv_files: dict[str, dict] = {}
+    cow_files: list[dict] = []
+    for uri, add, n in touched:
+        n_phys = int(json.loads(add.get("stats") or "{}").get("numRecords") or 0)
+        bound = len(_dv_indices(add)) + n
         dense = n_phys and bound > dv_max_fraction * n_phys
-        if dense or bound > _DV_MAX_ROWS_PER_FILE:
-            cow_adds.append(add)
+        if mode == "dv" and not dense and bound <= _DV_MAX_ROWS_PER_FILE:
+            dv_files[uri] = add
         else:
-            dv_names.append(row["_f"])
-    if dv_names:
-        matched = (
-            raw.filter(pred)
-            .filter(fname.isin(dv_names))
-            .groupBy(fname.alias("_f"))
-            .agg(F.collect_list(F.col("_dl_i")).alias("_idx"))
+            cow_files.append(add)
+    actions: list[dict] = []
+    if dv_files:
+        marked = (
+            plan.hits.filter(F.col(dml.FILE).isin(list(dv_files)))
+            .groupBy(dml.FILE)
+            .agg(F.collect_list(dml.POS))
             .collect()
         )
-        for row in matched:
-            add = by_name[row["_f"]]
-            merged = sorted(set(_dv_indices(add)) | set(int(i) for i in row["_idx"]))
-            actions.append(
-                {"remove": {"path": add["path"], "deletionTimestamp": now_ms, "dataChange": True}}
-            )
-            actions.append({"add": {**add, "deletionVector": _dv_encode(merged)}})
-    return actions, cow_adds
+        for uri, idx in marked:
+            add = dv_files[uri]
+            merged = _dv_encode(set(_dv_indices(add)) | set(idx))
+            actions += [remove(add), {"add": {**add, "deletionVector": merged}}]
+    rows = None if plan.new_rows is None else plan.new_rows.select(*data_cols).coalesce(1)
+    if cow_files:
+        # _read_adds applies any deletion vectors — a DV-deleted row must
+        # not be resurrected into the rewritten files
+        address = [dml.FILE, dml.POS]
+        keep = (
+            _read_adds(spark, table, meta, cow_files, lineage=True)
+            .join(F.broadcast(plan.hits.select(*address)), address, "left_anti")
+            .select(*data_cols)
+        )
+        rows = keep if rows is None else keep.unionByName(rows)
+        actions += [remove(a) for a in cow_files]
+    if rows is not None:
+        actions += _stage_adds(rows, table, meta, now_ms)
+    _dv_protocol_upgrade(table, actions)
+    if _cdf_enabled(meta):
+        changes = plan.hits.select(*data_cols, dml.CHANGE)
+        if plan.new_rows is not None:
+            changes = changes.unionByName(plan.new_rows.select(*data_cols, dml.CHANGE))
+        actions += _stage_cdf(table, meta, changes.withColumnRenamed(dml.CHANGE, _CDF_COL))
+    actions.append(
+        {
+            "commitInfo": {
+                "timestamp": now_ms,
+                "operation": plan.kind.upper(),
+                "operationParameters": params,
+            }
+        }
+    )
+    version = latest + 1
+    _commit(table, version, actions)
+    return version
+
+
+def _lineage_scan(spark: SparkSession, table: str, active: dict, meta: dict) -> DataFrame:
+    """The DML planner's scan of the replayed snapshot: live rows plus
+    their (file, pos) address."""
+    return _read_adds(spark, table, meta, list(active.values()), lineage=True)
 
 
 def _dv_protocol_upgrade(table: str, actions: list[dict]) -> None:
@@ -1659,56 +1712,17 @@ def delete_where(
     upgraded to the table-features protocol (minReaderVersion 3 +
     readerFeatures/writerFeatures) on the first DV so a
     DV-unaware reader refuses loudly instead of resurrecting rows."""
-    from pyspark.sql import functions as F
+    from . import dml
 
     if mode not in ("cow", "dv"):
         raise ValueError(f"mode must be 'cow' or 'dv', got {mode!r}")
     active, meta, latest = _replay(table, None)
     _check_writer_protocol(table)
-    pred = F.expr(predicate)
-    snap = read_delta(spark, table).withColumn("_dl_file", F.input_file_name())
-    affected = _affected_adds(spark, table, active, snap.filter(pred))
-    if not affected:
-        return None
-    now_ms = int(time.time() * 1000)
-    cdf_actions = _stage_cdf(
-        table,
-        meta,
-        _read_adds(spark, table, meta, affected)
-        .filter(pred)
-        .withColumn(_CDF_COL, F.lit("delete"))
-        if _cdf_enabled(meta)
-        else None,
-    )
-    actions: list[dict] = []
-    if mode == "cow":
-        keep = _read_adds(spark, table, meta, affected).filter(
-            ~F.coalesce(pred, F.lit(False))
+    with dml.delete(_lineage_scan(spark, table, active, meta), predicate) as plan:
+        return _commit_plan(
+            spark, table, active, meta, latest, plan, mode, dv_max_fraction,
+            {"predicate": predicate, "mode": mode},
         )
-        actions += _rewrite_files(spark, table, meta, affected, keep, now_ms)
-    else:
-        actions, cow_adds = _dv_mark(
-            spark, table, meta, affected, pred, dv_max_fraction, now_ms
-        )
-        if cow_adds:
-            keep = _read_adds(spark, table, meta, cow_adds).filter(
-                ~F.coalesce(pred, F.lit(False))
-            )
-            actions += _rewrite_files(spark, table, meta, cow_adds, keep, now_ms)
-        _dv_protocol_upgrade(table, actions)
-    actions += cdf_actions
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "DELETE",
-                "operationParameters": {"predicate": predicate, "mode": mode},
-            }
-        }
-    )
-    version = latest + 1
-    _commit(table, version, actions)
-    return version
 
 
 def update_where(
@@ -1721,138 +1735,39 @@ def update_where(
 ) -> int | None:
     """Transactional row-level UPDATE (SQL ``UPDATE ... SET col = expr
     WHERE pred``) — completing the DML triad beside delete_where and
-    merge_delta. ONE scan finds the files holding matching rows; only
-    those are touched; everything publishes atomically. Returns the
-    committed version, or None if nothing matched. Set expressions may
-    reference any table column; all assignments see the PRE-update row
-    (simultaneous semantics, one projection — standard SQL UPDATE, so
-    ``{"a": "b", "b": "a"}`` swaps). Each expression is cast back to the
-    column's declared type: an UPDATE must never fork the table schema.
-    NULL-predicate rows are left untouched (SQL three-valued logic).
+    merge_delta. ONE scan finds the matching rows; only their files are
+    touched; everything publishes atomically. Returns the committed
+    version, or None if nothing matched. Set expressions may reference any
+    table column; all assignments see the PRE-update row (simultaneous
+    semantics, one projection — standard SQL UPDATE, so ``{"a": "b", "b":
+    "a"}`` swaps). Each expression is cast back to the column's declared
+    type: an UPDATE must never fork the table schema. NULL-predicate rows
+    are left untouched (SQL three-valued logic).
 
-    ``mode='cow'``: matched files rewrite in place with assignments
-    applied to matching rows and every other row copied verbatim.
-
-    ``mode='dv'`` (merge-on-read UPDATE, like Delta's DV-enabled UPDATE):
-    matched rows are deletion-vector-marked in their ORIGINAL files
-    (kilobytes of log) and their updated images land as NEW appended
-    files — updating 100 rows scattered over 100 one-GB files writes one
-    small file instead of 100 rewrites. Per file, dense updates fall back
-    to copy-on-write under the same ``dv_max_fraction`` bound as
-    delete_where; the old-image mark and the new-image add publish in ONE
-    commit, so readers see pre-update XOR post-update."""
-    from pyspark.sql import functions as F
+    The matched rows' old images leave their files and their updated
+    images land as one NEW file, in the same commit, so readers see
+    pre-update XOR post-update. ``mode='cow'``: matched files are
+    rewritten without the matched rows. ``mode='dv'`` (merge-on-read
+    UPDATE, like Delta's DV-enabled UPDATE): the matched rows are
+    deletion-vector-marked in their ORIGINAL files (kilobytes of log) —
+    updating 100 rows scattered over 100 one-GB files writes one small
+    file instead of 100 rewrites. Per file, dense updates fall back to
+    copy-on-write under the same ``dv_max_fraction`` bound as
+    delete_where."""
+    from . import dml
 
     if mode not in ("cow", "dv"):
         raise ValueError(f"mode must be 'cow' or 'dv', got {mode!r}")
     active, meta, latest = _replay(table, None)
     _check_writer_protocol(table)
     schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    by_name = {f.name: f for f in schema.fields}
-    unknown = sorted(set(assignments) - set(by_name))
-    if unknown:
-        raise KeyError(f"UPDATE targets not in table schema: {unknown}")
-    pred = F.expr(predicate)
-    hit = F.coalesce(pred, F.lit(False))
-    snap = read_delta(spark, table).withColumn("_dl_file", F.input_file_name())
-    affected = _affected_adds(spark, table, active, snap.filter(pred))
-    if not affected:
-        return None
-    now_ms = int(time.time() * 1000)
-
-    def apply_set(df: DataFrame) -> DataFrame:
-        return df.select(
-            *[
-                F.when(hit, F.expr(assignments[f.name]).cast(f.dataType))
-                .otherwise(F.col(f.name))
-                .alias(f.name)
-                if f.name in assignments
-                else F.col(f.name)
-                for f in schema.fields
-            ]
+    with dml.update(
+        _lineage_scan(spark, table, active, meta), schema, assignments, predicate
+    ) as plan:
+        return _commit_plan(
+            spark, table, active, meta, latest, plan, mode, dv_max_fraction,
+            {"predicate": predicate, "set": dict(assignments), "mode": mode},
         )
-
-    cdf_actions: list[dict] = []
-    if _cdf_enabled(meta):
-        pre = _read_adds(spark, table, meta, affected).filter(hit)
-        cdf_actions = _stage_cdf(
-            table,
-            meta,
-            pre.withColumn(_CDF_COL, F.lit("update_preimage")).unionByName(
-                apply_set(pre).withColumn(_CDF_COL, F.lit("update_postimage"))
-            ),
-        )
-
-    if mode == "dv":
-        # validate only the CHANGED rows (unchanged rows hold by invariant)
-        _enforce_constraints(
-            apply_set(read_delta(spark, table).filter(hit)), meta, "UPDATE result"
-        )
-        actions, cow_adds = _dv_mark(
-            spark, table, meta, affected, pred, dv_max_fraction, now_ms
-        )
-        dv_adds = [a for a in affected if a not in cow_adds]
-        if dv_adds:
-            # new images of the LIVE matching rows (DV-applied read: an
-            # already-deleted row never spawns an updated copy), appended
-            # as fresh files in the same commit as their old-image marks.
-            # coalesce(1): the image set is sparse by the dv_max_fraction
-            # bound — one small file per commit, not one per source file
-            # (small-file discipline; compaction folds it away later)
-            images = apply_set(
-                _read_adds(spark, table, meta, dv_adds).filter(hit)
-            ).coalesce(1)
-            actions += _stage_adds(images, table, meta, now_ms)
-        if cow_adds:
-            actions += _rewrite_files(
-                spark,
-                table,
-                meta,
-                cow_adds,
-                apply_set(_read_adds(spark, table, meta, cow_adds)),
-                now_ms,
-            )
-        _dv_protocol_upgrade(table, actions)
-        actions += cdf_actions
-        actions.append(
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "UPDATE",
-                    "operationParameters": {
-                        "predicate": predicate,
-                        "set": dict(assignments),
-                        "mode": mode,
-                    },
-                }
-            }
-        )
-        version = latest + 1
-        _commit(table, version, actions)
-        return version
-
-    # validate only the CHANGED rows (unchanged rows hold by invariant)
-    _enforce_constraints(
-        apply_set(read_delta(spark, table).filter(hit)), meta, "UPDATE result"
-    )
-    updated = apply_set(_read_adds(spark, table, meta, affected))
-    actions = _rewrite_files(spark, table, meta, affected, updated, now_ms)
-    actions += cdf_actions
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "UPDATE",
-                "operationParameters": {
-                    "predicate": predicate,
-                    "set": dict(assignments),
-                },
-            }
-        }
-    )
-    version = latest + 1
-    _commit(table, version, actions)
-    return version
 
 
 def purge_deletion_vectors(spark: SparkSession, table: str) -> int | None:
@@ -1909,204 +1824,44 @@ def merge_delta(
 ) -> int:
     """Transactional MERGE, copy-on-write. Default is upsert-all (``WHEN
     MATCHED UPDATE SET * WHEN NOT MATCHED INSERT *``): files holding rows
-    whose key matches ``source`` are rewritten with those rows dropped,
-    the update images and inserts land as new files, and everything
-    publishes in ONE commit — readers see pre-merge XOR post-merge. Only
-    matched files rewrite. Returns the committed version.
-
-    Full WHEN-clause routing (r11, parity with ``merge_iceberg``):
+    that a clause hits are rewritten without those rows, the update images
+    and inserts land as one new file, and everything publishes in ONE
+    commit — readers see pre-merge XOR post-merge. Only files holding a
+    hit rewrite; a matched row that no clause hits stays where it is, even
+    when another row of its key is hit. Returns the committed version.
 
     - ``when_matched``: ordered ``(condition, action)`` clauses over
       ``t.<col>`` / ``s.<col>``; ``action`` is ``"delete"`` or
-      ``{"update": {col: expr}}``; FIRST match wins; matched rows hitting
-      no clause stay untouched. Keys compare with PLAIN equality (ANSI
-      ``ON t.k = s.k``: NULL keys never match — delta_lite's historical
-      contract, vs merge_iceberg's null-safe identity keys; both are
-      self-consistent across their match and insert paths).
+      ``{"update": {col: expr}}``; FIRST match wins. Keys compare with
+      PLAIN equality (ANSI ``ON t.k = s.k``: NULL keys never match, so a
+      NULL-key source row inserts — vs merge_iceberg's null-safe identity
+      keys).
     - ``when_not_matched_insert``: True / False / a SQL condition over the
       bare source columns.
 
-    Join shape (same doctrine as ``merge_iceberg``): matched pairs come
-    from an INNER join with the source on the build side (broadcast-hash
-    when the source is small — the target is never shuffled full-width);
-    inserts come from a source anti-join against the target's key
-    projection (column-pruned second scan). Matched rows whose key is
-    touched by any clause are dropped from the rewritten keep-side files
-    and re-emitted from the pairs (old image for untouched-clause rows
-    of a touched key, the clause's new image otherwise), so a key whose
-    target rows split across clause outcomes stays exact.
-
-    ``source`` must be unique per key (dedupe upstream — e.g. latest
-    change per key via a window): duplicate source keys would all insert,
-    like SQL MERGE's multiple-match error, except undetected here because
-    detection would cost an extra aggregation job per merge."""
-    import functools
-    import operator
-
-    from pyspark.sql import functions as F
-
-    from . import merge_clauses as mc
+    The plan (join shape, clause routing) is ``dml.merge``. ``source``
+    must be unique per key (dedupe upstream — e.g. latest change per key
+    via a window), like SQL MERGE's multiple-match error, except
+    undetected here because detection would cost an extra aggregation job
+    per merge."""
+    from . import dml
 
     active, meta, latest = _replay(table, None)
     _check_writer_protocol(table)
-    table_schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    # nullability-insensitive, matching write_delta's contract: a CDC
-    # source built from aggregations flips nullability with identical
-    # storage semantics (review r5)
-    if [(f.name, f.dataType) for f in source.schema.fields] != [
-        (f.name, f.dataType) for f in table_schema.fields
-    ]:
-        raise ValueError("merge source schema must match the table schema")
-    data_cols = [f.name for f in table_schema.fields]
-    by_name = {f.name: f.dataType for f in table_schema.fields}
-    if when_matched is None:
-        when_matched = mc.default_upsert_all(data_cols)
-    mc.validate_when_matched(when_matched, data_cols)
-    src = source.select(*data_cols).localCheckpoint().alias("s")
-    tgt = (
-        read_delta(spark, table)
-        .withColumn("_dl_file", F.input_file_name())
-        .alias("t")
-    )
-    on = functools.reduce(
-        operator.and_,
-        [F.col(f"t.{k}") == F.col(f"s.{k}") for k in key_cols],
-    )
-    sel = [
-        F.col("t._dl_file").alias("_dl_mfile"),
-        mc.clause_index_column(when_matched).alias("_dl_clause"),
-    ]
-    sel += [F.col(f"t.{k}").alias(f"_key_{i}") for i, k in enumerate(key_cols)]
-    sel += [F.col(f"t.{c}").alias(f"_old_{c}") for c in data_cols]
-    sel += mc.image_projections(when_matched, data_cols, by_name)
-    pairs = tgt.join(src, on, "inner").select(*sel).localCheckpoint()
-    # ONE distinct over the matched pairs' keys serves BOTH downstream
-    # consumers: the full key set drives the not-matched anti join
-    # (O(matches), broadcast, exactly consistent with the match by
-    # construction — delta's plain-equality contract means a NULL source
-    # key never matched, so it is never excluded), and its hit-flagged
-    # subset drives the keep-side drop + untouched-row re-emit
-    keys_frame = (
-        pairs.groupBy(
-            *[F.col(f"_key_{i}").alias(k) for i, k in enumerate(key_cols)]
+    schema = StructType.fromJson(json.loads(meta["schemaString"]))
+    with dml.merge(
+        _lineage_scan(spark, table, active, meta),
+        source,
+        schema,
+        key_cols,
+        when_matched,
+        when_not_matched_insert,
+        null_safe=False,
+    ) as plan:
+        return _commit_plan(
+            spark, table, active, meta, latest, plan, "cow", 0.0,
+            {"matchedKeys": key_cols},
         )
-        .agg(F.max(F.col("_dl_clause").isNotNull()).alias("_dl_key_hit"))
-        .localCheckpoint()
-    )
-    anti_on = functools.reduce(
-        operator.and_,
-        [F.col(f"s.{k}").eqNullSafe(F.col(f"mk.{k}")) for k in key_cols],
-    )
-    inserts = src.join(
-        F.broadcast(keys_frame.alias("mk")), anti_on, "left_anti"
-    ).select(*data_cols)
-    inserts = mc.apply_insert_filter(inserts, when_not_matched_insert)
-    hit_keys = keys_frame.filter("_dl_key_hit").select(*key_cols)
-    # new rows: inserts, update images, and re-emitted old images of
-    # untouched-clause rows whose KEY another row's clause touched (their
-    # files drop the whole key, so these rows must ride along)
-    inserts = inserts.localCheckpoint()  # consumers: new rows + CDF
-    new_frames = [inserts]
-    new_frames += mc.update_image_frames(pairs, when_matched, data_cols, "_dl_clause")
-    untouched_of_hit_key = (
-        pairs.filter(F.col("_dl_clause").isNull())
-        .select(
-            *[F.col(f"_key_{i}").alias(k) for i, k in enumerate(key_cols)],
-            *[F.col(f"_old_{c}").alias(f"_old_{c}") for c in data_cols],
-        )
-        .join(hit_keys, on=key_cols, how="left_semi")
-        .select(*[F.col(f"_old_{c}").alias(c) for c in data_cols])
-    )
-    new_frames.append(untouched_of_hit_key)
-    new_rows = mc.union_all(new_frames)
-    new_rows = new_rows.localCheckpoint()  # consumers: constraints, CDF, stage
-    _enforce_constraints(new_rows, meta, "MERGE result")
-    # the rewrite set is EVERY file holding ANY row of a clause-hit KEY —
-    # not just the clause-hit rows' files (VERDICT r11 #1, reproduced
-    # duplication: a clause-null row of a hit key living in a file with no
-    # clause-hit row was kept in place AND re-emitted by
-    # untouched_of_hit_key). The keep-side anti join below drops the whole
-    # key from every rewritten file, so the re-emit must cover exactly the
-    # files being rewritten: all files of hit keys.
-    hit_key_rows = pairs.join(
-        F.broadcast(
-            hit_keys.select(
-                *[F.col(k).alias(f"_key_{i}") for i, k in enumerate(key_cols)]
-            )
-        ),
-        on=[f"_key_{i}" for i in range(len(key_cols))],
-        how="left_semi",
-    )
-    affected = _affected_adds(
-        spark, table, active, hit_key_rows.select(F.col("_dl_mfile").alias("_dl_file"))
-    )
-    now_ms = int(time.time() * 1000)
-    actions: list[dict] = []
-    if _cdf_enabled(meta):
-        # typed per clause: update clauses emit pre/post image pairs,
-        # delete clauses emit deletes, accepted unmatched rows inserts
-        cdf_frames = [
-            inserts.select(
-                *data_cols,
-                F.lit("insert").alias(_CDF_COL),
-            )
-        ]
-        for i, (_cond, action) in enumerate(when_matched):
-            rows_i = pairs.filter(F.col("_dl_clause") == i)
-            if action == "delete":
-                cdf_frames.append(
-                    rows_i.select(
-                        *[F.col(f"_old_{c}").alias(c) for c in data_cols],
-                        F.lit("delete").alias(_CDF_COL),
-                    )
-                )
-            else:
-                cdf_frames.append(
-                    rows_i.select(
-                        *[F.col(f"_old_{c}").alias(c) for c in data_cols],
-                        F.lit("update_preimage").alias(_CDF_COL),
-                    )
-                )
-                cdf_frames.append(
-                    rows_i.select(
-                        *[F.col(f"_img{i}_{c}").alias(c) for c in data_cols],
-                        F.lit("update_postimage").alias(_CDF_COL),
-                    )
-                )
-        cdf = cdf_frames[0]
-        for fr in cdf_frames[1:]:
-            cdf = cdf.unionByName(fr)
-        actions += _stage_cdf(table, meta, cdf)
-    if affected:
-        # _read_adds applies any deletion vectors — a DV-deleted row must
-        # not be resurrected into the rewritten keep-side files
-        keep = _read_adds(spark, table, meta, affected).join(
-            hit_keys, on=key_cols, how="left_anti"
-        )
-        actions += _rewrite_files(spark, table, meta, affected, keep, now_ms)
-    # the inserted/updated/re-emitted rows, as fresh files
-    # (physical names under column mapping, like every staged write)
-    actions += _stage_adds(new_rows, table, meta, now_ms)
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "MERGE",
-                "operationParameters": {"matchedKeys": key_cols},
-            }
-        }
-    )
-    version = latest + 1
-    _commit(table, version, actions)
-    # every consumer of the merge's intermediate checkpoints (CDF staging,
-    # keep-side rewrite, new-file staging, constraint agg) ran above —
-    # release their blocks instead of leaking five frames per MERGE for
-    # the session's lifetime (r13 checkpoint hygiene, guide §5)
-    from ..functions.ckpt import release_local_checkpoint
-
-    for _ckpt in (src, pairs, keys_frame, inserts, new_rows):
-        release_local_checkpoint(_ckpt)
-    return version
 
 
 def vacuum_table(

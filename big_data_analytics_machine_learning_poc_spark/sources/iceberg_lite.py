@@ -31,8 +31,9 @@ Spec mapping (section names from the spec):
   get none while flat columns beside them keep theirs), so file skipping
   is never a correctness dependency.
 - **Row-level deletes** (spec §Position Delete Files): DELETE / UPDATE /
-  MERGE commit *position delete files* — parquet files of
-  ``(file_path, pos)`` pairs registered in delete manifests (manifest-list
+  MERGE, planned by ``sources/dml.py``, commit *position delete files* —
+  parquet files of ``(file_path, pos)`` pairs registered in delete
+  manifests (manifest-list
   ``content=1``) — and every read applies them with a distributed
   anti-join of the data scan (annotated with Spark's
   ``_metadata.file_path`` / ``_metadata.row_index`` hidden columns)
@@ -93,7 +94,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from . import avro_lite, tablefiles
+from . import avro_lite, dml, tablefiles
 from .tablefiles import partition_values
 
 # ---------------------------------------------------------------------------
@@ -1897,16 +1898,12 @@ def read_iceberg(
     return _scan(spark, os.path.abspath(table), plan)
 
 
-# hidden lineage columns a DML scan annotates rows with (normalized
-# absolute data-file path + physical row position within that file)
-_LIN_FILE, _LIN_POS = "_ice_file", "_ice_pos"
-
-
 def _scan(
     spark: SparkSession, table: str, plan: dict, lineage: bool = False
 ) -> DataFrame:
     """Execute a ``plan_scan`` plan. ``lineage=True`` keeps the
-    ``(_ice_file, _ice_pos)`` row-address columns the DML paths turn into
+    ``(dml.FILE, dml.POS)`` row-address columns — normalized absolute
+    data-file path, physical row position — the DML paths turn into
     position delete records; either way, outstanding position deletes are
     applied distributedly (see ``_apply_position_deletes``) so every
     consumer — queries, DML re-scans, compaction — sees logical rows."""
@@ -1916,8 +1913,8 @@ def _scan(
         if lineage:
             from pyspark.sql import functions as F
 
-            out = out.withColumn(_LIN_FILE, F.lit(None).cast("string")).withColumn(
-                _LIN_POS, F.lit(None).cast("long")
+            out = out.withColumn(dml.FILE, F.lit(None).cast("string")).withColumn(
+                dml.POS, F.lit(None).cast("long")
             )
         return out
     from pyspark.sql import functions as F
@@ -1987,8 +1984,8 @@ def _scan(
             uri = F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/")
             d = d.select(
                 *[_pcol(c) for c in cols],
-                F.url_decode(F.regexp_replace(uri, r"\+", "%2B")).alias(_LIN_FILE),
-                F.col("_metadata.row_index").alias(_LIN_POS),
+                F.url_decode(F.regexp_replace(uri, r"\+", "%2B")).alias(dml.FILE),
+                F.col("_metadata.row_index").alias(dml.POS),
             )
         else:
             d = d.select(*[_pcol(c) for c in cols])
@@ -2004,7 +2001,7 @@ def _scan(
             df = _apply_equality_deletes(spark, df, plan)
         df = df.drop("_ice_data_seq")
     if lineage:
-        return df.select(*(cols + [_LIN_FILE, _LIN_POS]))
+        return df.select(*(cols + [dml.FILE, dml.POS]))
     return df.select(*cols)
 
 
@@ -2032,7 +2029,7 @@ def _attach_data_seq(spark: SparkSession, df: DataFrame, plan: dict) -> DataFram
         "_ice_seq_file string, _ice_data_seq long",
     )
     joined = df.join(
-        F.broadcast(seq_df), df[_LIN_FILE] == seq_df["_ice_seq_file"], "left"
+        F.broadcast(seq_df), df[dml.FILE] == seq_df["_ice_seq_file"], "left"
     ).drop("_ice_seq_file")
     return joined.withColumn(
         "_ice_data_seq",
@@ -2044,7 +2041,7 @@ def _attach_data_seq(spark: SparkSession, df: DataFrame, plan: dict) -> DataFram
                         "iceberg_lite: scanned row's file is missing from the "
                         "plan's sequence map (URI normalization mismatch?): "
                     ),
-                    F.col(_LIN_FILE),
+                    F.col(dml.FILE),
                 )
             ).cast("long"),
         ).otherwise(F.col("_ice_data_seq")),
@@ -2072,8 +2069,8 @@ def _apply_position_deletes(spark: SparkSession, df: DataFrame, plan: dict) -> D
         )
         dels = d if dels is None else dels.unionByName(d)
     cond = (
-        (df[_LIN_FILE] == dels["file_path"])
-        & (df[_LIN_POS] == dels["pos"])
+        (df[dml.FILE] == dels["file_path"])
+        & (df[dml.POS] == dels["pos"])
         & (df["_ice_data_seq"] <= dels["_ice_del_seq"])
     )
     return df.join(dels, cond, "left_anti")
@@ -2331,8 +2328,8 @@ def iceberg_table_changes(
             tdf = _scan(spark, table, subplan(tmap, cur_fspec), lineage=True)
             hit = tdf.join(
                 dels,
-                (tdf[_LIN_FILE] == dels["file_path"])
-                & (tdf[_LIN_POS] == dels["pos"]),
+                (tdf[dml.FILE] == dels["file_path"])
+                & (tdf[dml.POS] == dels["pos"]),
                 "left_semi",
             )
             pieces.append(lift(hit, "delete", seq))
@@ -2628,6 +2625,115 @@ def _unpublish_commit_files(
         os.unlink(_resolve(table, list_path))
 
 
+def _pinned(table: str) -> tuple[str, int | None, dict]:
+    """(absolute table path, version, metadata) for a row-level commit:
+    version FIRST, then that EXACT version loaded (ADVICE r10 TOCTOU) — a
+    hint read + an unpinned load are two reads, and a concurrent commit
+    landing between them yields stale meta with an advanced version;
+    put-if-absent would then publish v(N+2) missing the intervening
+    snapshot, the exact lost update IcebergCommitConflict exists to stop."""
+    table = os.path.abspath(table)
+    version = _current_version(table)
+    return table, version, load_metadata(table, version)
+
+
+def _lineage_scan(spark: SparkSession, table: str, meta: dict) -> DataFrame:
+    """The DML planner's scan: live rows of the PINNED snapshot plus their
+    (file, pos) address — not a re-read of the hint, or a commit landing
+    between the metadata load and the scan would make the position deletes
+    target rows the validation never accounted for."""
+    plan = plan_scan(table, snapshot_id=meta.get("current-snapshot-id"), pin_schema=False)
+    return _scan(spark, table, plan, lineage=True)
+
+
+def _commit_files(
+    table: str,
+    meta: dict,
+    version: int | None,
+    seq: int,
+    snap_id: int,
+    operation: str,
+    staged_data: list,
+    part_cols: list[str],
+    staged_del: list[tuple[str, int, int]],
+    equality_ids: list[int] | None = None,
+) -> int:
+    """Commit staged files as one snapshot: a data manifest for
+    ``staged_data`` and a delete manifest for ``staged_del`` — position
+    deletes, or equality deletes on ``equality_ids`` — each only when
+    non-empty, carried after the parent's manifests. The same closure
+    rebuilds them under fresh ids when ``_finish_commit`` retries."""
+    spec_fields = _partition_spec(meta)
+    field_types = _field_types(meta)
+    schema_json = _schema_by_id(meta)
+    name_to_field = _phys_name_to_field(meta, schema_json)
+
+    def own_manifests(m: dict, s: int, sid: int) -> list[dict]:
+        groups = []
+        if staged_data:
+            groups.append(
+                (0, _data_entries(
+                    table, staged_data, part_cols, spec_fields, field_types,
+                    name_to_field, sid,
+                ))
+            )
+        if staged_del:
+            groups.append(
+                (1, _pos_delete_entries(staged_del, spec_fields, sid)
+                 if equality_ids is None
+                 else _eq_delete_entries(staged_del, spec_fields, sid, equality_ids))
+            )
+        return [
+            _write_manifest(
+                table, f"m-{sid}-{i}.avro", entries, spec_fields, field_types,
+                m["default-spec-id"], schema_json, s, sid, content=content,
+            )
+            for i, (content, entries) in enumerate(groups)
+        ]
+
+    own = own_manifests(meta, seq, snap_id)
+    n_del = sum(n for _p, _s, n in staged_del)
+    return _finish_commit(
+        table, meta, version, seq, snap_id, _carried_manifests(table, meta) + own,
+        operation,
+        added_files=len(staged_data),
+        added_records=own[0]["added_rows_count"] if staged_data else 0,
+        pos_deletes_added=n_del if equality_ids is None else 0,
+        eq_deletes_added=0 if equality_ids is None else n_del,
+        rebuild=own_manifests,
+    )
+
+
+def _commit_plan(table: str, version: int | None, meta: dict, plan) -> int | None:
+    """Iceberg's commit step for a ``dml`` plan, merge-on-read: the hits
+    become position-delete files (kilobytes; no data file is rewritten)
+    and the new rows become data files under the table's partition spec,
+    in ONE snapshot — readers see before XOR after. Returns the snapshot
+    id, or None when nothing was staged (a DELETE or UPDATE that matched
+    nothing stages no new rows either)."""
+    from pyspark.sql import functions as F
+
+    seq, snap_id = _next_ids(meta)
+    staged_del = _stage_pos_delete_files(
+        plan.hits.select(F.col(dml.FILE).alias("file_path"), F.col(dml.POS).alias("pos")),
+        table,
+        snap_id,
+    )
+    if plan.new_rows is None or (not staged_del and plan.kind != "merge"):
+        staged_data, part_cols = [], []
+    else:
+        staged_data, part_cols = _stage_partitioned(
+            plan.new_rows.drop(dml.CHANGE), table, meta, _partition_spec(meta)
+        )
+    if not staged_del and not staged_data:
+        return None
+    return _commit_files(
+        table, meta, version, seq, snap_id,
+        "delete" if plan.new_rows is None else "overwrite",
+        staged_data, part_cols, staged_del,
+    )
+
+
 def delete_where(spark: SparkSession, table: str, predicate: str) -> int | None:
     """Transactional row-level DELETE, merge-on-read: ONE distributed scan
     (with prior deletes already applied, so a second DELETE never
@@ -2639,57 +2745,9 @@ def delete_where(spark: SparkSession, table: str, predicate: str) -> int | None:
     costs kilobytes (the GDPR-erasure shape); ``compact_iceberg``
     materializes the debt later. Time travel to pre-delete snapshots
     still sees the rows — their manifest lists carry no delete manifest."""
-    from pyspark.sql import functions as F
-
-    table = os.path.abspath(table)
-    # version FIRST, then load that EXACT version (ADVICE r10 TOCTOU): a
-    # hint read + an unpinned load are two reads, and a concurrent commit
-    # landing between them yields stale meta with an advanced version —
-    # put-if-absent then publishes v(N+2) missing the intervening
-    # snapshot, the exact lost update IcebergCommitConflict exists to stop
-    version = _current_version(table)
-    meta = load_metadata(table, version)
-    seq, snap_id = _next_ids(meta)
-    # scan the PINNED snapshot, not a re-read of the hint: a commit landing
-    # between the metadata load and the scan would otherwise make the
-    # position deletes target rows the validation never accounted for
-    plan = plan_scan(
-        table, snapshot_id=meta.get("current-snapshot-id"), pin_schema=False
-    )
-    df = _scan(spark, table, plan, lineage=True)
-    hits = df.filter(F.expr(predicate)).select(
-        F.col(_LIN_FILE).alias("file_path"), F.col(_LIN_POS).alias("pos")
-    )
-    staged = _stage_pos_delete_files(hits, table, snap_id)
-    if not staged:
-        return None
-    spec_fields = _partition_spec(meta)
-
-    def delete_manifests(m: dict, s: int, sid: int) -> list[dict]:
-        return [
-            _write_manifest(
-                table,
-                f"m-{sid}-0.avro",
-                _pos_delete_entries(staged, spec_fields, sid),
-                spec_fields,
-                _field_types(m),
-                m["default-spec-id"],
-                _schema_by_id(m),
-                s,
-                sid,
-                content=1,
-            )
-        ]
-
-    manifests = _carried_manifests(table, meta) + delete_manifests(
-        meta, seq, snap_id
-    )
-    return _finish_commit(
-        table, meta, version, seq, snap_id, manifests, "delete",
-        added_files=0, added_records=0,
-        pos_deletes_added=sum(n for _p, _s, n in staged),
-        rebuild=delete_manifests,
-    )
+    table, version, meta = _pinned(table)
+    with dml.delete(_lineage_scan(spark, table, meta), predicate) as plan:
+        return _commit_plan(table, version, meta, plan)
 
 
 def update_where(
@@ -2704,87 +2762,11 @@ def update_where(
     declared type — an UPDATE never forks the table schema. NULL-predicate
     rows are untouched. Returns the new snapshot id, or None when nothing
     matched. Same shape as ``delta_lite.update_where(mode='dv')``."""
-    from pyspark.sql import functions as F
-
-    table = os.path.abspath(table)
-    # version FIRST, then load that EXACT version (ADVICE r10 TOCTOU): a
-    # hint read + an unpinned load are two reads, and a concurrent commit
-    # landing between them yields stale meta with an advanced version —
-    # put-if-absent then publishes v(N+2) missing the intervening
-    # snapshot, the exact lost update IcebergCommitConflict exists to stop
-    version = _current_version(table)
-    meta = load_metadata(table, version)
-    schema = _spark_schema(meta)
-    by_name = {f.name: f for f in schema.fields}
-    unknown = sorted(set(assignments) - set(by_name))
-    if unknown:
-        raise KeyError(f"UPDATE targets not in table schema: {unknown}")
-    seq, snap_id = _next_ids(meta)
-    # scan the PINNED snapshot, not a re-read of the hint: a commit landing
-    # between the metadata load and the scan would otherwise make the
-    # position deletes target rows the validation never accounted for
-    plan = plan_scan(
-        table, snapshot_id=meta.get("current-snapshot-id"), pin_schema=False
-    )
-    df = _scan(spark, table, plan, lineage=True)
-    # two consumers (delete addresses, then the updated images) — pin the
-    # matched frame once or the full table scan + delete anti-joins replay
-    # for each (review r10 #5; the repo's checkpoint doctrine)
-    hits = df.filter(F.expr(predicate)).localCheckpoint()
-    staged_del = _stage_pos_delete_files(
-        hits.select(F.col(_LIN_FILE).alias("file_path"), F.col(_LIN_POS).alias("pos")),
-        table,
-        snap_id,
-    )
-    if not staged_del:
-        return None
-    new_rows = hits.select(
-        *[
-            F.expr(assignments[f.name]).cast(f.dataType).alias(f.name)
-            if f.name in assignments
-            else F.col(f.name)
-            for f in schema.fields
-        ]
-    )
-    spec_fields = _partition_spec(meta)
-    staged_data, part_cols = _stage_partitioned(new_rows, table, meta, spec_fields)
-    # both staging writes consumed the matched-rows checkpoint — release
-    # its blocks (r13 hygiene, guide §5)
-    from ..functions.ckpt import release_local_checkpoint
-
-    release_local_checkpoint(hits)
-    field_types = _field_types(meta)
-    schema_json = _schema_by_id(meta)
-    name_to_field = _phys_name_to_field(meta, schema_json)
-    def update_manifests(m: dict, s: int, sid: int) -> list[dict]:
-        data_man = _write_manifest(
-            table,
-            f"m-{sid}-0.avro",
-            _data_entries(
-                table, staged_data, part_cols, spec_fields, field_types,
-                name_to_field, sid,
-            ),
-            spec_fields, field_types, m["default-spec-id"], schema_json,
-            s, sid, content=0,
-        )
-        del_man = _write_manifest(
-            table,
-            f"m-{sid}-1.avro",
-            _pos_delete_entries(staged_del, spec_fields, sid),
-            spec_fields, field_types, m["default-spec-id"], schema_json,
-            s, sid, content=1,
-        )
-        return [data_man, del_man]
-
-    own = update_manifests(meta, seq, snap_id)
-    manifests = _carried_manifests(table, meta) + own
-    return _finish_commit(
-        table, meta, version, seq, snap_id, manifests, "overwrite",
-        added_files=len(staged_data),
-        added_records=own[0]["added_rows_count"],
-        pos_deletes_added=sum(n for _p, _s, n in staged_del),
-        rebuild=update_manifests,
-    )
+    table, version, meta = _pinned(table)
+    with dml.update(
+        _lineage_scan(spark, table, meta), _spark_schema(meta), assignments, predicate
+    ) as plan:
+        return _commit_plan(table, version, meta, plan)
 
 
 def merge_iceberg(
@@ -2797,14 +2779,11 @@ def merge_iceberg(
 ) -> int | None:
     """Transactional MERGE, merge-on-read. The default is upsert-all
     (``WHEN MATCHED UPDATE SET * WHEN NOT MATCHED INSERT *``): rows whose
-    key matches ``source`` get position deletes for their old images (a
-    semi join on the keys — broadcast when source is small, the CDC-upsert
-    shape), and the whole ``source`` lands as new data files; both publish
-    in ONE snapshot. ``source`` must be unique per key (dedupe upstream —
+    key matches ``source`` get position deletes for their old images, and
+    the update images and inserts land as new data files; both publish in
+    ONE snapshot. ``source`` must be unique per key (dedupe upstream —
     same contract as ``delta_lite.merge_delta``). Returns the new snapshot
     id, or None when nothing matched and nothing inserts.
-
-    Full WHEN-clause routing (VERDICT r10 ask #8):
 
     - ``when_matched``: ordered clauses ``(condition, action)`` where
       ``condition`` is a SQL expression over ``t.<col>`` (target) and
@@ -2815,159 +2794,22 @@ def merge_iceberg(
       are left untouched.
     - ``when_not_matched_insert``: True (insert all unmatched source
       rows), False (insert none), or a SQL condition over the BARE source
-      column names (the filter applies to the anti-joined source after
-      projection to plain columns — same contract as ``merge_delta``;
-      ADVICE r11: ``s.``-qualified names may fail to resolve there).
+      column names.
 
-    Every action routes to the existing machinery: matched-clause rows'
-    old images become position deletes; update images and accepted
-    inserts become new data files. Join shape (the one real MERGE engines
-    use): matched pairs come from an INNER join with the source on the
-    BUILD side — broadcast-hash when the source is small, so the target
-    is never shuffled full-width; inserts come from a source anti-join
-    against the target's key projection (column-pruned second scan; only
-    key columns ever shuffle). A source-preserving outer join would read
-    the target once but cannot broadcast its preserved side, forcing a
-    full-width target shuffle — the wrong trade at scale (r11 close:
-    shufflebudget caught exactly that). Keys compare NULL-SAFELY on BOTH
-    paths (review r11 #1: a plain-equality anti join would re-insert a
-    NULL-key source row its null-safe match already updated — silent
-    duplication). The clause decision and every clause's update image
-    are computed in one vectorized projection, checkpointed once at
-    O(matches) rows."""
-    import functools
-    import operator
-
-    from pyspark.sql import functions as F
-
-    from . import merge_clauses as mc
-
-    table = os.path.abspath(table)
-    # version FIRST, then load that EXACT version (ADVICE r10 TOCTOU): a
-    # hint read + an unpinned load are two reads, and a concurrent commit
-    # landing between them yields stale meta with an advanced version —
-    # put-if-absent then publishes v(N+2) missing the intervening
-    # snapshot, the exact lost update IcebergCommitConflict exists to stop
-    version = _current_version(table)
-    meta = load_metadata(table, version)
-    schema = _spark_schema(meta)
-    if [(f.name, f.dataType) for f in source.schema.fields] != [
-        (f.name, f.dataType) for f in schema.fields
-    ]:
-        raise ValueError("merge source schema must match the table schema")
-    data_cols = [f.name for f in schema.fields]
-    by_name = {f.name: f.dataType for f in schema.fields}
-    if when_matched is None:
-        when_matched = mc.default_upsert_all(data_cols)
-    mc.validate_when_matched(when_matched, data_cols)
-    seq, snap_id = _next_ids(meta)
-    # scan the PINNED snapshot, not a re-read of the hint: a commit landing
-    # between the metadata load and the scan would otherwise make the
-    # position deletes target rows the validation never accounted for
-    plan = plan_scan(
-        table, snapshot_id=meta.get("current-snapshot-id"), pin_schema=False
-    )
-    src = source.select(*data_cols).localCheckpoint().alias("s")
-    tgt = _scan(spark, table, plan, lineage=True).alias("t")
-    on = functools.reduce(
-        operator.and_,
-        [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in key_cols],
-    )
-    # ONE qualified projection resolves everything before the checkpoint
-    # flattens the aliases: the clause decision (first match wins, NULL =
-    # untouched — including the insert-only MERGE, review r11 #2) and
-    # every update clause's full new image, side by side (shared surface:
-    # merge_clauses.py, VERDICT r11 #5)
-    sel = [
-        F.col(f"t.{_LIN_FILE}").alias("_ice_mf"),
-        F.col(f"t.{_LIN_POS}").alias("_ice_mp"),
-        mc.clause_index_column(when_matched).alias("_ice_clause"),
-    ]
-    sel += [F.col(f"s.{k}").alias(f"_k_{i}") for i, k in enumerate(key_cols)]
-    sel += mc.image_projections(when_matched, data_cols, by_name)
-    # ALL matched pairs (clause-hit or not): the clause rows drive the
-    # deletes/updates; the key set drives the not-matched anti join
-    pairs = tgt.join(src, on, "inner").select(*sel).localCheckpoint()
-    matched = pairs.filter(F.col("_ice_clause").isNotNull())
-    staged_del = _stage_pos_delete_files(
-        matched.select(
-            F.col("_ice_mf").alias("file_path"), F.col("_ice_mp").alias("pos")
-        ),
-        table,
-        snap_id,
-    )
-    # new data files = the update clauses' new images (from the matched
-    # checkpoint) + accepted inserts. The not-matched set anti-joins the
-    # source against the MATCHED pairs' own source keys — O(matches),
-    # broadcastable, and exactly consistent with the match by
-    # construction (the same rows that matched are the ones excluded;
-    # null-safe so a NULL-key match excludes its NULL-key source row)
-    matched_keys = F.broadcast(
-        pairs.select(
-            *[F.col(f"_k_{i}").alias(f"_mk_{i}") for i in range(len(key_cols))]
-        ).distinct()
-    )
-    anti_on = functools.reduce(
-        operator.and_,
-        [
-            F.col(k).eqNullSafe(F.col(f"_mk_{i}"))
-            for i, k in enumerate(key_cols)
-        ],
-    )
-    inserts = src.join(matched_keys, anti_on, "left_anti").select(*data_cols)
-    inserts = mc.apply_insert_filter(inserts, when_not_matched_insert)
-    new_frames: list[DataFrame] = [inserts]
-    new_frames += mc.update_image_frames(
-        matched, when_matched, data_cols, "_ice_clause"
-    )
-    new_rows = mc.union_all(new_frames)
-    spec_fields = _partition_spec(meta)
-    staged_data, part_cols = _stage_partitioned(new_rows, table, meta, spec_fields)
-    # both staging writes ran — the merge's intermediate checkpoints have
-    # no remaining consumer; release their blocks (r13 hygiene, guide §5)
-    from ..functions.ckpt import release_local_checkpoint
-
-    release_local_checkpoint(src)
-    release_local_checkpoint(pairs)
-    if not staged_del and not staged_data:
-        return None  # empty source, no matches: nothing was published
-    field_types = _field_types(meta)
-    schema_json = _schema_by_id(meta)
-    name_to_field = _phys_name_to_field(meta, schema_json)
-    def merge_manifests(m: dict, s: int, sid: int) -> list[dict]:
-        out = [
-            _write_manifest(
-                table,
-                f"m-{sid}-0.avro",
-                _data_entries(
-                    table, staged_data, part_cols, spec_fields, field_types,
-                    name_to_field, sid,
-                ),
-                spec_fields, field_types, m["default-spec-id"], schema_json,
-                s, sid, content=0,
-            )
-        ]
-        if staged_del:
-            out.append(
-                _write_manifest(
-                    table,
-                    f"m-{sid}-1.avro",
-                    _pos_delete_entries(staged_del, spec_fields, sid),
-                    spec_fields, field_types, m["default-spec-id"], schema_json,
-                    s, sid, content=1,
-                )
-            )
-        return out
-
-    own = merge_manifests(meta, seq, snap_id)
-    manifests = _carried_manifests(table, meta) + own
-    return _finish_commit(
-        table, meta, version, seq, snap_id, manifests, "overwrite",
-        added_files=len(staged_data),
-        added_records=own[0]["added_rows_count"],
-        pos_deletes_added=sum(n for _p, _s, n in staged_del),
-        rebuild=merge_manifests,
-    )
+    Keys compare NULL-SAFELY (identity keys: a NULL-key source row updates
+    the NULL-key target row and is not also inserted). The plan — join
+    shape, clause routing, the insert anti-join — is ``dml.merge``."""
+    table, version, meta = _pinned(table)
+    with dml.merge(
+        _lineage_scan(spark, table, meta),
+        source,
+        _spark_schema(meta),
+        key_cols,
+        when_matched,
+        when_not_matched_insert,
+        null_safe=True,
+    ) as plan:
+        return _commit_plan(table, version, meta, plan)
 
 
 def _eq_delete_entries(
@@ -3000,16 +2842,7 @@ def upsert_by_key(
     size — the right trade when ingest latency matters more than read
     amplification. ``source`` must be unique per key (same contract as
     merge). Returns the new snapshot id, or None for an empty source."""
-    from pyspark.sql import functions as F
-
-    table = os.path.abspath(table)
-    # version FIRST, then load that EXACT version (ADVICE r10 TOCTOU): a
-    # hint read + an unpinned load are two reads, and a concurrent commit
-    # landing between them yields stale meta with an advanced version —
-    # put-if-absent then publishes v(N+2) missing the intervening
-    # snapshot, the exact lost update IcebergCommitConflict exists to stop
-    version = _current_version(table)
-    meta = load_metadata(table, version)
+    table, version, meta = _pinned(table)
     schema = _spark_schema(meta)
     if [(f.name, f.dataType) for f in source.schema.fields] != [
         (f.name, f.dataType) for f in schema.fields
@@ -3020,9 +2853,8 @@ def upsert_by_key(
     if unknown:
         raise KeyError(f"upsert key columns not in table schema: {unknown}")
     seq, snap_id = _next_ids(meta)
-    spec_fields = _partition_spec(meta)
     staged_data, part_cols = _stage_partitioned(
-        source.select(*[f.name for f in schema.fields]), table, meta, spec_fields
+        source.select(*[f.name for f in schema.fields]), table, meta, _partition_spec(meta)
     )
     if not staged_data:
         return None
@@ -3034,41 +2866,10 @@ def upsert_by_key(
         table,
         os.path.join("data", f"eq-deletes-{snap_id}"),
     )
-    field_types = _field_types(meta)
-    schema_json = _schema_by_id(meta)
-    name_to_field = _phys_name_to_field(meta, schema_json)
-    def upsert_manifests(m: dict, s: int, sid: int) -> list[dict]:
-        return [
-            _write_manifest(
-                table,
-                f"m-{sid}-0.avro",
-                _data_entries(
-                    table, staged_data, part_cols, spec_fields, field_types,
-                    name_to_field, sid,
-                ),
-                spec_fields, field_types, m["default-spec-id"], schema_json,
-                s, sid, content=0,
-            ),
-            _write_manifest(
-                table,
-                f"m-{sid}-1.avro",
-                _eq_delete_entries(
-                    staged_keys, spec_fields, sid,
-                    [name_to_id[c] for c in key_cols],
-                ),
-                spec_fields, field_types, m["default-spec-id"], schema_json,
-                s, sid, content=1,
-            ),
-        ]
-
-    own = upsert_manifests(meta, seq, snap_id)
-    manifests = _carried_manifests(table, meta) + own
-    return _finish_commit(
-        table, meta, version, seq, snap_id, manifests, "overwrite",
-        added_files=len(staged_data),
-        added_records=own[0]["added_rows_count"],
-        eq_deletes_added=sum(n for _p, _s, n in staged_keys),
-        rebuild=upsert_manifests,
+    return _commit_files(
+        table, meta, version, seq, snap_id, "overwrite",
+        staged_data, part_cols, staged_keys,
+        equality_ids=[name_to_id[c] for c in key_cols],
     )
 
 

@@ -22,6 +22,8 @@ from big_data_analytics_machine_learning_poc_spark.sources.delta_lite import (
     write_delta,
 )
 
+from .conftest import persistent_rdd_ids
+
 
 def _make(spark, tmp_path, name="t"):
     table = str(tmp_path / name)
@@ -51,13 +53,17 @@ def test_add_validates_existing_and_write_paths_enforce(spark, tmp_path):
     assert read_delta(spark, table).count() == 4
     # merge enforced on the rows it would write (result, not raw source:
     # a clause-filtered source row that never lands cannot violate)
+    # ... and a refused statement releases every checkpoint it made
+    before = persistent_rdd_ids(spark)
     with pytest.raises(ValueError, match="MERGE result"):
         merge_delta(spark, table, bad, ["id"])
+    assert persistent_rdd_ids(spark) == before
     # update (both modes) enforced on the CHANGED rows
     with pytest.raises(ValueError, match="UPDATE result"):
         update_where(spark, table, {"score": "score + 60"}, "id = 2")
     with pytest.raises(ValueError, match="UPDATE result"):
         update_where(spark, table, {"score": "score + 60"}, "id = 2", mode="dv")
+    assert persistent_rdd_ids(spark) == before
     # an in-range update passes
     update_where(spark, table, {"score": "score + 1"}, "id = 1")
     assert read_delta(spark, table).filter(F.col("id") == 1).first()["score"] == 51

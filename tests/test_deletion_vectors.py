@@ -166,6 +166,23 @@ def test_cow_delete_and_merge_do_not_resurrect_dv_rows(spark, tmp_path):
     assert out.count() == 98
 
 
+def test_dv_on_partitioned_table_marks_only_its_own_file(spark, tmp_path):
+    """One task writing two partitions names both files alike; a deletion
+    vector on one must not delete the same row index in the other."""
+    table = str(tmp_path / "part")
+    df = spark.range(20).select(F.col("id"), (F.col("id") % 2).alias("p"))
+    write_delta(df.coalesce(1), table, partition_cols=["p"])
+    names = [os.path.basename(p) for p in _active(table)]
+    assert len(names) == 2 and len(set(names)) == 1  # the layout under test
+    delete_where(spark, table, "id = 0", mode="dv")
+    assert sorted(r["id"] for r in read_delta(spark, table).collect()) == list(range(1, 20))
+    # the copy-on-write keep side reads through the same DVs
+    delete_where(spark, table, "id = 2", mode="cow")
+    assert sorted(r["id"] for r in read_delta(spark, table).collect()) == [1] + list(
+        range(3, 20)
+    )
+
+
 def test_connector_applies_deletion_vectors(spark, tmp_path):
     from big_data_analytics_machine_learning_poc_spark.sources.pyds import (
         DeltaLiteDataSource,

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from big_data_analytics_machine_learning_poc_spark.sources.delta_lite import (
+    _replay,
     enable_change_data_feed,
     merge_delta,
     read_delta,
@@ -74,7 +75,8 @@ def test_delta_merge_default_unchanged(spark, table):
 
 def test_delta_merge_untouched_rows_of_hit_key_survive(spark, table):
     """A key whose target rows split across clause outcomes stays exact:
-    the untouched-clause row is re-emitted, not lost with its file."""
+    the untouched-clause row stays in its rewritten file, not lost with
+    the hit row."""
     df = _frame(spark, 0, 4).unionByName(
         _frame(spark, 2, 3).withColumn("v", F.lit(500.0))  # second row, id=2
     )
@@ -99,16 +101,17 @@ def test_delta_merge_untouched_rows_of_hit_key_survive(spark, table):
 def test_delta_merge_hit_key_split_across_files(spark, table):
     """VERDICT r11 #1 (reproduced duplication): a hit key whose rows live
     in TWO files — one row hits a conditional clause (file A), its twin
-    matches no clause (file B). The rewrite set must cover BOTH files:
-    with only file A rewritten, the twin survives in place in file B AND
-    is re-emitted by the untouched-of-hit-key path, silently duplicating
-    it. Two separate appends guarantee the split (no coalesce(1))."""
+    matches no clause (file B). Hits are row addresses, so only file A
+    rewrites and the twin stays in file B exactly once. Two separate
+    appends guarantee the split (no coalesce(1))."""
     write_delta(_frame(spark, 0, 4).coalesce(1), table)  # id=2 v=3.0, file A
     write_delta(
         _frame(spark, 2, 3).withColumn("v", F.lit(500.0)).coalesce(1),
         table,
         mode="append",
     )  # id=2 v=500.0, file B
+    (file_b,) = _replay(table, 1)[0].keys() - _replay(table, 0)[0].keys()
+    add_b = _replay(table, 1)[0][file_b]
     src = _frame(spark, 2, 3).withColumn("v", F.lit(-1.0))
     merge_delta(
         spark,
@@ -123,6 +126,29 @@ def test_delta_merge_hit_key_split_across_files(spark, table):
     )
     assert rows == [(2, -1.0), (2, 500.0)]
     assert read_delta(spark, table).count() == 5
+    # only file A holds a hit: file B is not rewritten, its add action
+    # survives the merge verbatim
+    assert _replay(table, None)[0][file_b] == add_b
+
+
+def test_delta_merge_null_key_inserts_and_leaves_null_target(spark, table):
+    """The plain-equality twin of iceberg's null-key test: under ANSI
+    ``ON t.k = s.k`` a NULL key never matches, so the NULL-key source row
+    inserts and the NULL-key target row stays untouched."""
+    df = _frame(spark, 0, 5).withColumn(
+        "id", F.when(F.col("id") == 3, F.lit(None)).otherwise(F.col("id"))
+    )
+    write_delta(df, table)
+    src = _frame(spark, 2, 5).withColumn(
+        "id", F.when(F.col("id") == 3, F.lit(None)).otherwise(F.col("id"))
+    ).withColumn("v", F.lit(-1.0))
+    merge_delta(spark, table, src, ["id"])
+    back = read_delta(spark, table)
+    assert back.count() == 6
+    assert sorted(r.v for r in back.filter("id is null").collect()) == [-1.0, 4.5]
+    assert {r.id: r.v for r in back.filter("id is not null").collect()} == {
+        0: 0.0, 1: 1.5, 2: -1.0, 4: -1.0
+    }
 
 
 def test_delta_merge_hit_key_split_files_with_delete_clause(spark, table):
@@ -226,14 +252,27 @@ _clause_idx = st.lists(
 _insert_mode = st.sampled_from([True, False, "val >= 10"])
 
 
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
 @settings(max_examples=12, deadline=None)
 @given(_target_rows, _chunk_seed, _source, _clause_idx, _insert_mode)
 def test_delta_merge_clauses_model_based(
-    spark, rows, chunks, source, clause_idx, insert_mode
+    spark, fmt, rows, chunks, source, clause_idx, insert_mode
 ):
+    """Both formats against one model: the generated keys are never NULL,
+    so Delta's plain-equality and Iceberg's null-safe key rules agree."""
     import shutil as _sh
     import tempfile as _tf
 
+    from big_data_analytics_machine_learning_poc_spark.sources import iceberg_lite
+
+    if fmt == "delta":
+        write, merge, read = write_delta, merge_delta, read_delta
+    else:
+        write, merge, read = (
+            iceberg_lite.write_iceberg,
+            iceberg_lite.merge_iceberg,
+            iceberg_lite.read_iceberg,
+        )
     table = _tf.mkdtemp(prefix="dmrg_prop_")
     _sh.rmtree(table)
     schema = "id long, val long"
@@ -252,16 +291,16 @@ def test_delta_merge_clauses_model_based(
             i += sz
         if i < len(rows):
             parts.append(rows[i:])
-        write_delta(df_of(parts[0]).coalesce(1), table)
+        write(df_of(parts[0]).coalesce(1), table)
         for part in parts[1:]:
-            write_delta(df_of(part).coalesce(1), table, mode="append")
+            write(df_of(part).coalesce(1), table, mode="append")
 
         clauses = [_CLAUSE_VOCAB[i] for i in clause_idx]
         when_matched = [
             (c[0], "delete" if c[2] == "delete" else {"update": c[2][0]})
             for c in clauses
         ]
-        merge_delta(
+        merge(
             spark,
             table,
             df_of(sorted(source.items())),
@@ -297,7 +336,7 @@ def test_delta_merge_clauses_model_based(
             ):
                 expect.append((k, v))
 
-        got = [(r.id, r.val) for r in read_delta(spark, table).collect()]
+        got = [(r.id, r.val) for r in read(spark, table).collect()]
         assert sorted(got) == sorted(expect)
     finally:
         _sh.rmtree(table, ignore_errors=True)
