@@ -587,17 +587,6 @@ def _phys_map(meta: dict) -> dict[str, str]:
     }
 
 
-def _physical_schema(meta: dict) -> StructType:
-    """The schema as data files store it: physical names, logical types."""
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    if not _mapping_enabled(meta):
-        return schema
-    pm = _phys_map(meta)
-    return StructType(
-        [StructField(pm[f.name], f.dataType, f.nullable) for f in schema.fields]
-    )
-
-
 def _to_physical(df: DataFrame, meta: dict) -> DataFrame:
     """Rename a logical-named frame to physical names for staging writes.
     Identity (no projection) when mapping is off, so unmapped write paths
@@ -992,7 +981,6 @@ def table_changes(
         cols.append(F.lit(version).alias("_commit_version"))
         return df.select(*cols)
 
-    pm = _phys_map(meta)
     for v in range(from_version + 1, to_version + 1):
         actions = _read_log(table, v)
         cdcs = [a["cdc"] for a in actions if "cdc" in a]
@@ -1001,16 +989,13 @@ def table_changes(
             a["remove"] for a in actions if "remove" in a and a["remove"].get("dataChange", True)
         ]
         if cdcs:
-            # typed change rows, stored physical + _change_type
-            phys_fields = [
-                StructField(pm[f.name], f.dataType, True) for f in schema.fields
-            ]
-            cdf_schema = StructType(phys_fields + [StructField(_CDF_COL, StringType(), True)])
-            raw = spark.read.schema(cdf_schema).parquet(
-                *[os.path.join(table, c["path"]) for c in cdcs]
-            )
-            raw = raw.select(
-                *[F.col(pm[f.name]).alias(f.name) for f in schema.fields], F.col(_CDF_COL)
+            # typed change rows, stored physical + _change_type, unpartitioned
+            raw = tablefiles.scan(
+                spark,
+                table,
+                {(): [os.path.join(table, c["path"]) for c in cdcs]},
+                StructType([*schema.fields, StructField(_CDF_COL, StringType())]),
+                _phys_map(meta),
             )
             pieces.append(lift(raw, None, v))
             # adds in a cdc-carrying commit are the rewrite/new-image files
@@ -1051,79 +1036,57 @@ def table_changes(
     return out.select(*out_cols)
 
 
+def _data_files(table: str, adds: list[dict]) -> dict[str, dict]:
+    """The add actions by their data file's absolute path — the list
+    ``_read_adds`` hands the shared scan, and the form a row's
+    ``dml.FILE`` takes there."""
+    return {os.path.abspath(os.path.join(table, a["path"])): a for a in adds}
+
+
 def _read_adds(
     spark: SparkSession, table: str, meta: dict, adds: list[dict], lineage: bool = False
 ) -> DataFrame:
-    """THE snapshot read core: the given add-actions' files under the
-    logged schema, with each file's deletion vector applied. Every reader
-    of active files — read_delta, the DML lineage scan and copy-on-write
-    keep side, OPTIMIZE rewrites, snapshot_diff — comes through here, so a
-    DV'd row cannot be resurrected by any code path. Application is one
-    broadcast left-anti join on (file_name, row_index) against the union
-    of inline DVs — executor-side, arbitrarily many data rows; the driver
-    holds only the DV indices themselves, bounded by _DV_MAX_ROWS_PER_FILE
-    per file (the promotion path past that bound is DV sidecar files loaded
-    executor-side — but past that bound copy-on-write already wins).
+    """THE snapshot read core: the given add-actions' files read by the
+    shared ``tablefiles.scan`` under the logged schema (physical names
+    aliased back to logical under column mapping), with each file's
+    deletion vector applied. Every reader of active files — read_delta,
+    the DML lineage scan and copy-on-write keep side, OPTIMIZE rewrites,
+    snapshot_diff — comes through here, so a DV'd row cannot be
+    resurrected by any code path. Application is ``tablefiles.mask``: one
+    broadcast left-anti join on the row address against the union of
+    inline DVs, each keyed by its file's absolute path — executor-side,
+    arbitrarily many data rows; the driver holds only the DV indices
+    themselves, bounded by _DV_MAX_ROWS_PER_FILE per file (the promotion
+    path past that bound is DV sidecar files loaded executor-side — but
+    past that bound copy-on-write already wins).
 
     ``lineage=True`` is the DML planner's scan (``sources/dml.py``): each
-    live row also carries its address, ``dml.FILE`` (Spark's
-    ``_metadata.file_path`` URI) and ``dml.POS`` (physical row index)."""
-    from . import dml
-
-    schema = StructType.fromJson(json.loads(meta["schemaString"]))
-    address = [StructField(dml.FILE, StringType()), StructField(dml.POS, LongType())]
-    if not adds:
-        return spark.createDataFrame(
-            [],
-            StructType(
-                [StructField(f.name, f.dataType, f.nullable) for f in schema.fields]
-                + (address if lineage else [])
-            ),
-        )
+    live row also carries its address, ``dml.FILE`` and ``dml.POS``."""
     from pyspark.sql import functions as F
 
-    df = _snapshot_reader(spark, table, meta).parquet(
-        *[os.path.join(table, a["path"]) for a in adds]
+    from . import dml
+
+    files = _data_files(table, adds)
+    deleted = [
+        (f, i) for f, a in files.items() if a.get("deletionVector") for i in _dv_indices(a)
+    ]
+    df = tablefiles.scan(
+        spark,
+        table,
+        {tuple(meta.get("partitionColumns", [])): list(files)},
+        StructType.fromJson(json.loads(meta["schemaString"])),
+        _phys_map(meta),
+        address=lineage or bool(deleted),
     )
-    if lineage:
-        df = df.withColumn(dml.FILE, F.col("_metadata.file_path")).withColumn(
-            dml.POS, F.col("_metadata.row_index")
-        )
-    dv_adds = [a for a in adds if a.get("deletionVector")]
-    if dv_adds:
-        pairs = [
-            (a["path"].replace(os.sep, "/"), i) for a in dv_adds for i in _dv_indices(a)
-        ]
+    if deleted:
         from ..functions.localrows import local_rows_df
 
         # driver-bounded DV index list as one Arrow batch (r13: the sliced
         # Python-RDD form cost a worker round trip per slice per broadcast)
-        deleted = local_rows_df(spark, pairs, "_dl_fname string, _dl_ridx long")
-        # a file is keyed by its path relative to the table — the last
-        # (partition depth + 1) segments of its decoded URI. The basename
-        # alone repeats across partition directories (a task names its file
-        # alike in every partition it writes), and a DV keyed by it would
-        # delete the same row index in every partition. '+' is protected
-        # before the form-decoding url_decode; a URI renders '%' as %25.
-        depth = len(meta.get("partitionColumns", [])) + 1
-        rel = F.substring_index(
-            F.url_decode(F.regexp_replace(F.col("_metadata.file_path"), r"\+", "%2B")),
-            "/",
-            -depth,
-        )
-        out_cols = df.columns
-        df = (
-            df.withColumn("_dl_fname", rel)
-            .withColumn("_dl_ridx", F.col("_metadata.row_index"))
-            .join(F.broadcast(deleted), ["_dl_fname", "_dl_ridx"], "left_anti")
-            .select(*out_cols)
-        )
-    if _mapping_enabled(meta):
-        pm = _phys_map(meta)
-        df = df.select(
-            *[F.col(pm[f.name]).alias(f.name) for f in schema.fields],
-            *([dml.FILE, dml.POS] if lineage else []),
-        )
+        ddl = f"{dml.FILE} string, {dml.POS} long"
+        df = tablefiles.mask(df, F.broadcast(local_rows_df(spark, deleted, ddl)))
+        if not lineage:
+            df = df.drop(dml.FILE, dml.POS)
     return df
 
 
@@ -1351,18 +1314,6 @@ def delta_foreach_batch_sink(table: str, app_id: str, partition_cols: list[str] 
 # ---------------------------------------------------------------------------
 
 
-def _snapshot_reader(spark: SparkSession, table: str, meta: dict):
-    """DataFrameReader for a snapshot's files: the LOGGED schema (never
-    inference — evolution can mix file shapes) plus basePath so hive
-    partition directories re-derive their columns. Under column mapping
-    the applied schema uses PHYSICAL names — what the files store;
-    _read_adds aliases back to logical."""
-    reader = spark.read.schema(_physical_schema(meta))
-    if meta.get("partitionColumns"):
-        reader = reader.option("basePath", table)
-    return reader
-
-
 def _file_may_match(add: dict, col: str, lo, hi) -> bool:
     """Range-overlap test against the file's logged min/maxValues. A file
     with no stats for the column is conservatively kept — skipping is an
@@ -1545,24 +1496,14 @@ def _commit_plan(
     the rewrites. With the change data feed on, the hits and the new rows
     are the commit's change rows. Returns the version, or None when a
     DELETE or UPDATE touches nothing (a MERGE always commits)."""
-    from urllib.parse import unquote, urlparse
-
     from pyspark.sql import functions as F
 
     from . import dml
 
-    # Spark's file URI → add action; realpath both sides, so a symlinked
-    # table path maps too (an unmapped file raises instead of turning the
-    # statement into a silent no-op)
-    root = os.path.realpath(table)
-    touched = [
-        (
-            uri,
-            active[os.path.relpath(os.path.realpath(unquote(urlparse(uri).path)), root)],
-            n,
-        )
-        for uri, n in plan.hits.groupBy(dml.FILE).count().collect()
-    ]
+    # a hit's file → its add action (an unmapped file raises KeyError
+    # instead of turning the statement into a silent no-op)
+    files = _data_files(table, list(active.values()))
+    touched = [(f, files[f], n) for f, n in plan.hits.groupBy(dml.FILE).count().collect()]
     if not touched and plan.kind != "merge":
         return None
     data_cols = [
@@ -1582,12 +1523,12 @@ def _commit_plan(
 
     dv_files: dict[str, dict] = {}
     cow_files: list[dict] = []
-    for uri, add, n in touched:
+    for path, add, n in touched:
         n_phys = int(json.loads(add.get("stats") or "{}").get("numRecords") or 0)
         bound = len(_dv_indices(add)) + n
         dense = n_phys and bound > dv_max_fraction * n_phys
         if mode == "dv" and not dense and bound <= _DV_MAX_ROWS_PER_FILE:
-            dv_files[uri] = add
+            dv_files[path] = add
         else:
             cow_files.append(add)
     actions: list[dict] = []
@@ -1598,20 +1539,18 @@ def _commit_plan(
             .agg(F.collect_list(dml.POS))
             .collect()
         )
-        for uri, idx in marked:
-            add = dv_files[uri]
+        for path, idx in marked:
+            add = dv_files[path]
             merged = _dv_encode(set(_dv_indices(add)) | set(idx))
             actions += [remove(add), {"add": {**add, "deletionVector": merged}}]
     rows = None if plan.new_rows is None else plan.new_rows.select(*data_cols).coalesce(1)
     if cow_files:
         # _read_adds applies any deletion vectors — a DV-deleted row must
         # not be resurrected into the rewritten files
-        address = [dml.FILE, dml.POS]
-        keep = (
-            _read_adds(spark, table, meta, cow_files, lineage=True)
-            .join(F.broadcast(plan.hits.select(*address)), address, "left_anti")
-            .select(*data_cols)
-        )
+        keep = tablefiles.mask(
+            _read_adds(spark, table, meta, cow_files, lineage=True),
+            F.broadcast(plan.hits.select(dml.FILE, dml.POS)),
+        ).select(*data_cols)
         rows = keep if rows is None else keep.unionByName(rows)
         actions += [remove(a) for a in cow_files]
     if rows is not None:

@@ -9,9 +9,11 @@ the new ones. This module is that first half, written once.
 Shared (here):
 
 - the *lineage scan* contract: the format hands in its live rows plus each
-  row's address, ``FILE`` (the data file as Spark's ``_metadata.file_path``
-  reports it, normalized however the format needs) and ``POS`` (the row's
-  physical index in that file);
+  row's address, ``FILE`` (the data file's absolute local path) and
+  ``POS`` (the row's physical index in that file). Both formats read it
+  through ``tablefiles.scan``, so ``FILE`` has one form: the same string
+  the format handed the scan for that file, which its commit step looks
+  up (a Delta add action, an Iceberg position-delete record);
 - the plan of each statement: which rows go (``Plan.hits``) and which rows
   come in (``Plan.new_rows``), both tagged with their change-feed type in
   ``CHANGE``;
@@ -29,7 +31,8 @@ Shared (here):
 
 Per format (``delta_lite`` / ``iceberg_lite``):
 
-- the lineage scan itself (``_read_adds(..., lineage=True)`` / ``_scan``);
+- the file list the lineage scan reads (``_read_adds(..., lineage=True)``
+  / ``_scan``), with the format's own deletes applied;
 - the MERGE key rule, passed in as ``null_safe``: Delta compares keys with
   plain equality (ANSI ``ON t.k = s.k``: a NULL key never matches, so a
   NULL-key source row inserts), Iceberg null-safely (identity keys: a NULL

@@ -34,12 +34,11 @@ Spec mapping (section names from the spec):
   MERGE, planned by ``sources/dml.py``, commit *position delete files* —
   parquet files of ``(file_path, pos)`` pairs registered in delete
   manifests (manifest-list
-  ``content=1``) — and every read applies them with a distributed
-  anti-join of the data scan (annotated with Spark's
-  ``_metadata.file_path`` / ``_metadata.row_index`` hidden columns)
-  against the delete frame, honoring the spec's sequence-number rule: a
-  delete applies only to data files whose data sequence number is ≤ the
-  delete file's. Merge-on-read economics: erasing 100 rows scattered over
+  ``content=1``) — and every read applies them with
+  ``tablefiles.mask``, a distributed anti-join of the data scan's
+  ``(file, pos)`` row addresses against the delete frame, honoring the
+  spec's sequence-number rule: a delete applies only to data files whose
+  data sequence number is ≤ the delete file's. Merge-on-read economics: erasing 100 rows scattered over
   100 one-GB files costs kilobytes of delete parquet, never a rewrite;
   ``compact_iceberg`` later materializes the delete debt.
 - **Commit protocol**: every file enters the table through
@@ -71,10 +70,10 @@ Layout on disk::
       data/deletes-<snapshot-id>/part-*.parquet   # position delete files
       data/eq-deletes-<snapshot-id>/part-*.parquet  # equality delete files
 
-Data files keep hive-style partition directories so a plain
-``spark.read.option("basePath", ...)`` re-derives identity partition
-columns (Spark's ``partitionBy`` writer drops them from the files; same
-approach as ``delta_lite._snapshot_reader``). Scale shape: the metadata
+Data files keep hive-style partition directories so the shared
+``tablefiles.scan`` (``basePath`` = ``data/``) re-derives identity
+partition columns (Spark's ``partitionBy`` writer drops them from the
+files; delta_lite reads through the same scan). Scale shape: the metadata
 files a reader touches are O(manifests), not O(data); file pruning happens
 driver-side against footer-derived bounds before any task is scheduled,
 exactly like the Iceberg runtime's scan planning.
@@ -84,6 +83,7 @@ from __future__ import annotations
 
 import contextlib
 import datetime
+import functools
 import json
 import os
 import re
@@ -1901,108 +1901,47 @@ def read_iceberg(
 def _scan(
     spark: SparkSession, table: str, plan: dict, lineage: bool = False
 ) -> DataFrame:
-    """Execute a ``plan_scan`` plan. ``lineage=True`` keeps the
-    ``(dml.FILE, dml.POS)`` row-address columns — normalized absolute
-    data-file path, physical row position — the DML paths turn into
-    position delete records; either way, outstanding position deletes are
-    applied distributedly (see ``_apply_position_deletes``) so every
-    consumer — queries, DML re-scans, compaction — sees logical rows."""
-    schema: T.StructType = plan["schema"]
-    if not plan["files"]:
-        out = spark.createDataFrame([], schema)
-        if lineage:
-            from pyspark.sql import functions as F
-
-            out = out.withColumn(dml.FILE, F.lit(None).cast("string")).withColumn(
-                dml.POS, F.lit(None).cast("long")
-            )
-        return out
+    """Execute a ``plan_scan`` plan through the shared ``tablefiles.scan``:
+    the plan's files grouped by partition layout (after
+    ``evolve_partition_spec`` one snapshot legally mixes specs, each file
+    under its own manifest's spec), read under the TABLE schema with
+    physical names aliased back to logical. ``lineage=True`` keeps the
+    ``(dml.FILE, dml.POS)`` row-address columns the DML paths turn into
+    position delete records; either way, outstanding deletes are applied
+    distributedly — position deletes by ``tablefiles.mask`` with the
+    spec's sequence-number rule as its one extra condition, equality
+    deletes by ``_apply_equality_deletes`` — so every consumer — queries,
+    DML re-scans, compaction — sees logical rows."""
     from pyspark.sql import functions as F
 
-    # the FULL table schema, partition columns included (delta_lite's
-    # _snapshot_reader doctrine): with an explicit schema, basePath
-    # partition discovery casts directory values to the DECLARED type
-    # instead of inferring one — inference would silently turn a string
-    # partition value '0123' into int 123. The files (and hive dirs) carry
-    # PHYSICAL column names — identical to the logical ones until the
-    # first rename_column — so the scan declares the physical shape and
-    # aliases back to logical in the very next projection.
-    phys = plan.get("physical_by_name") or {}
-    renamed = any(phys.get(f.name, f.name) != f.name for f in schema.fields)
-    read_schema = (
-        T.StructType(
-            [
-                T.StructField(phys.get(f.name, f.name), f.dataType, f.nullable)
-                for f in schema.fields
-            ]
-        )
-        if renamed
-        else schema
-    )
-    cols = [f.name for f in schema.fields]
-
-    def _pcol(c: str):
-        p = phys.get(c, c)
-        return F.col(p).alias(c) if p != c else F.col(c)
-
-    need_lineage = lineage or bool(plan["delete_files"]) or bool(
-        plan["eq_delete_files"]
-    )
-    # group files by partition LAYOUT: after evolve_partition_spec one
-    # snapshot legally mixes specs, and Spark's basePath hive derivation
-    # needs consistent dirs within one read — one read per layout, then a
-    # zero-shuffle unionByName (each group already projected to the same
-    # logical columns)
+    schema: T.StructType = plan["schema"]
     file_specs = plan.get("file_specs") or {}
     pcols_by_spec = plan.get("partition_cols_by_spec") or {}
-    groups: dict[tuple, list[str]] = {}
+    groups: dict[tuple[str, ...], list[str]] = {}
     for f in plan["files"]:
-        sid = file_specs.get(f)
-        pc = tuple(
-            pcols_by_spec.get(sid, plan["partition_cols"])
-            if sid is not None
-            else plan["partition_cols"]
-        )
-        groups.setdefault(pc, []).append(f)
-    parts: list[DataFrame] = []
-    for pc, fl in sorted(groups.items()):
-        reader = spark.read.schema(read_schema)
-        if pc:
-            reader = reader.option("basePath", os.path.join(table, "data"))
-        d = reader.parquet(*fl)
-        if need_lineage:
-            # Spark's hidden parquet metadata columns give each row its
-            # exact physical address (file URI + row position, row-group
-            # aware). Normalize the URI to the manifest-recorded absolute
-            # path form: strip the scheme ("file:/x" / "file:///x" → "/x")
-            # AND decode the percent-encoding Hadoop's Path URI applies to
-            # spaces/non-ASCII (review r10 #2: an encoded path never
-            # matched the seq map and deleted rows silently resurrected).
-            # url_decode is form-decoding ('+' → space), so literal '+' is
-            # protected as %2B first — exact, because a URI renders
-            # literal '%' as %25, never raw.
-            uri = F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/")
-            d = d.select(
-                *[_pcol(c) for c in cols],
-                F.url_decode(F.regexp_replace(uri, r"\+", "%2B")).alias(dml.FILE),
-                F.col("_metadata.row_index").alias(dml.POS),
-            )
-        else:
-            d = d.select(*[_pcol(c) for c in cols])
-        parts.append(d)
-    df = parts[0]
-    for d in parts[1:]:
-        df = df.unionByName(d)
-    if plan["delete_files"] or plan["eq_delete_files"]:
+        pc = pcols_by_spec.get(file_specs.get(f), plan["partition_cols"])
+        groups.setdefault(tuple(pc), []).append(f)
+    deletes = bool(plan["files"]) and bool(plan["delete_files"] or plan["eq_delete_files"])
+    df = tablefiles.scan(
+        spark,
+        os.path.join(table, "data"),
+        groups,
+        schema,
+        plan.get("physical_by_name") or {},
+        address=lineage or deletes,
+    )
+    if deletes:
         df = _attach_data_seq(spark, df, plan)
         if plan["delete_files"]:
-            df = _apply_position_deletes(spark, df, plan)
+            df = tablefiles.mask(
+                df,
+                _position_deletes(spark, plan),
+                F.col("_ice_data_seq") <= F.col("_ice_del_seq"),
+            )
         if plan["eq_delete_files"]:
             df = _apply_equality_deletes(spark, df, plan)
-        df = df.drop("_ice_data_seq")
-    if lineage:
-        return df.select(*(cols + [dml.FILE, dml.POS]))
-    return df.select(*cols)
+    cols = [f.name for f in schema.fields]
+    return df.select(*cols, *([dml.FILE, dml.POS] if lineage else []))
 
 
 def _attach_data_seq(spark: SparkSession, df: DataFrame, plan: dict) -> DataFrame:
@@ -2048,32 +1987,31 @@ def _attach_data_seq(spark: SparkSession, df: DataFrame, plan: dict) -> DataFram
     )
 
 
-def _apply_position_deletes(spark: SparkSession, df: DataFrame, plan: dict) -> DataFrame:
-    """Anti-join the lineage-annotated data scan against the snapshot's
-    position delete frame. Scale shape: the delete frame stays distributed
-    (parquet scan, never collected); the join is a HASH anti-join on the
-    (file, pos) equi-pair with the spec's sequence-number rule
-    (``data_seq <= delete_seq``) as a residual condition — the same shape
-    Spark's own DV application uses."""
+def _position_deletes(spark: SparkSession, plan: dict) -> DataFrame:
+    """The snapshot's position deletes as ``(dml.FILE, dml.POS,
+    _ice_del_seq)``, for ``tablefiles.mask`` under the spec's rule
+    ``data_seq <= delete_seq``. Scale shape: the frame stays distributed
+    (parquet scan, never collected), so the mask is a HASH anti-join on the
+    (file, pos) equi-pair with the rule as a residual condition — the
+    same shape Spark's own DV application uses."""
     from pyspark.sql import functions as F
 
     by_seq: dict[int, list[str]] = {}
     for path, seq in plan["delete_files"]:
         by_seq.setdefault(seq, []).append(path)
-    dels = None
-    for seq in sorted(by_seq):
-        d = (
-            spark.read.schema("file_path string, pos long")
-            .parquet(*by_seq[seq])
-            .withColumn("_ice_del_seq", F.lit(seq))
-        )
-        dels = d if dels is None else dels.unionByName(d)
-    cond = (
-        (df[dml.FILE] == dels["file_path"])
-        & (df[dml.POS] == dels["pos"])
-        & (df["_ice_data_seq"] <= dels["_ice_del_seq"])
+    return functools.reduce(
+        DataFrame.unionByName,
+        [
+            spark.read.schema(_POS_DELETE_SCHEMA)
+            .parquet(*paths)
+            .select(
+                F.col("file_path").alias(dml.FILE),
+                F.col("pos").alias(dml.POS),
+                F.lit(seq).alias("_ice_del_seq"),
+            )
+            for seq, paths in sorted(by_seq.items())
+        ],
     )
-    return df.join(dels, cond, "left_anti")
 
 
 def _apply_equality_deletes(spark: SparkSession, df: DataFrame, plan: dict) -> DataFrame:

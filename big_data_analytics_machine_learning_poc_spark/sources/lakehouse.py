@@ -36,14 +36,21 @@ _FORMATS = {
 
 
 def format_available(spark: SparkSession, fmt: str) -> bool:
-    """True if the format's extension classes are on the JVM classpath."""
+    """True if the format's extension classes are on the JVM classpath.
+    Only the JVM's ClassNotFoundException means "no jar"; any other error
+    (a broken Py4J gateway, a linkage error) raises instead of silently
+    routing the call to the lite fallback."""
+    from py4j.protocol import Py4JJavaError
+
     if fmt not in _FORMATS:
         raise KeyError(f"unknown lakehouse format {fmt!r}; known: {sorted(_FORMATS)}")
     try:
         spark._jvm.java.lang.Class.forName(_FORMATS[fmt])
-        return True
-    except Exception:
-        return False
+    except Py4JJavaError as e:
+        if e.java_exception.getClass().getName() == "java.lang.ClassNotFoundException":
+            return False
+        raise
+    return True
 
 
 def read_table(spark: SparkSession, fmt: str, path: str) -> DataFrame:

@@ -683,12 +683,11 @@ class _DeltaLiteWriterCore:
         )
 
     def discard(self, messages) -> None:
-        for m in messages:
-            if m is not None and m.rel:
-                try:
-                    os.unlink(os.path.join(self.table, m.rel))
-                except OSError:
-                    pass
+        from .tablefiles import unpublish
+
+        unpublish(
+            self.table, [(m.rel, m.size, m.stats) for m in messages if m is not None and m.rel]
+        )
 
 
 class DeltaLiteBatchWriter(DataSourceArrowWriter):

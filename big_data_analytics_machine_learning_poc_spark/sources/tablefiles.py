@@ -1,4 +1,5 @@
-"""tablefiles — every way a file enters a lakehouse table, for both formats.
+"""tablefiles — every way a file enters a lakehouse table, and how it is
+read back, for both formats.
 
 ``delta_lite`` and ``iceberg_lite`` keep their own logs and manifests and
 their own conflict-retry rules; the files underneath go through here:
@@ -21,6 +22,16 @@ their own conflict-retry rules; the files underneath go through here:
   reader may parse mid-rewrite (a checkpoint).
 - ``unpublish(table, staged)``: remove what a ``stage`` published, for a
   writer that gives up before any commit references the files.
+- ``scan(spark, base, groups, schema, physical, address)``: a snapshot's
+  data files read back as logical rows — the declared schema under its
+  physical names (never inference: evolution mixes file shapes), one read
+  per partition layout, aliased back to logical names. With ``address``
+  each row also carries ``dml.FILE`` and ``dml.POS``, its ``(file, pos)``
+  address: the file's absolute local path (the one decoding rule, for
+  both formats) and its physical row index.
+- ``mask(rows, deleted, on)``: drop the rows whose address is in
+  ``deleted`` — one left-anti join, used for Delta's deletion vectors, the
+  copy-on-write keep side and Iceberg's position deletes.
 
 The moves use the local filesystem API; an object store swaps them for its
 conditional put. Temp names start with a dot and end in ``.tmp``, so no
@@ -30,12 +41,17 @@ table scan or vacuum sweep mistakes one for data.
 from __future__ import annotations
 
 import contextlib
+import functools
 import os
 import shutil
 import uuid
 from urllib.parse import unquote
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+from .dml import FILE, POS
 
 STAGING_PREFIX = ".staging-"  # in-flight writes; never table data
 _STATS_PHYSICAL_TYPES = ("INT32", "INT64", "FLOAT", "DOUBLE", "BOOLEAN")
@@ -222,3 +238,68 @@ def unpublish(table: str, staged) -> None:
     for rel, _size, _stats in staged:
         with contextlib.suppress(OSError):
             os.unlink(os.path.join(table, rel))
+
+
+def scan(
+    spark: SparkSession,
+    base: str,
+    groups: dict[tuple[str, ...], list[str]],
+    schema: StructType,
+    physical: dict[str, str],
+    address: bool = False,
+) -> DataFrame:
+    """Read data files back as the logical rows of ``schema``.
+
+    ``groups`` maps a partition layout (its hive partition columns) to the
+    absolute paths of its files; a partitioned layout is read with
+    ``basePath=base``, so Spark derives the partition columns from the
+    directory names, cast to their declared type (inference would turn a
+    string partition value '0123' into int 123). Layouts are read apart
+    (one snapshot may mix them after partition evolution) and unioned by
+    name. ``physical`` maps a logical column to the name its files store
+    (missing = same name). With ``address``, ``FILE`` is the file's
+    absolute local path — the file URI from Spark's hidden ``_metadata``
+    column with the ``file:`` scheme stripped and the percent-encoding
+    decoded — and ``POS`` its physical row index (row-group aware). A
+    symlinked table path stays as given: Spark reports the path it was
+    handed, so ``FILE`` matches the caller's own absolute paths."""
+    if not any(groups.values()):
+        address_fields = [StructField(FILE, StringType()), StructField(POS, LongType())]
+        return spark.createDataFrame(
+            [], StructType(schema.fields + (address_fields if address else []))
+        )
+    read_schema = StructType(
+        [StructField(physical.get(f.name, f.name), f.dataType, f.nullable) for f in schema.fields]
+    )
+    out = [
+        F.col(_quoted(physical.get(f.name, f.name))).alias(f.name) for f in schema.fields
+    ]
+    if address:
+        # url_decode is form-decoding ('+' → space): a literal '+' is
+        # protected as %2B first — exact, because the URI renders a
+        # literal '%' as %25, never raw
+        uri = F.regexp_replace(F.col("_metadata.file_path"), "^file:/+", "/")
+        out += [
+            F.url_decode(F.regexp_replace(uri, r"\+", "%2B")).alias(FILE),
+            F.col("_metadata.row_index").alias(POS),
+        ]
+    parts = []
+    for pcols, files in sorted(groups.items()):
+        reader = spark.read.schema(read_schema)
+        if pcols:
+            reader = reader.option("basePath", base)
+        parts.append(reader.parquet(*files).select(*out))
+    return functools.reduce(DataFrame.unionByName, parts)
+
+
+def mask(rows: DataFrame, deleted: DataFrame, on: Column | None = None) -> DataFrame:
+    """``rows`` minus those whose ``(FILE, POS)`` address is in ``deleted``:
+    one left-anti join (the caller picks its strategy, e.g. a broadcast
+    hint on a driver-bounded ``deleted``). ``on`` adds a condition over
+    both sides' columns."""
+    cond = (rows[FILE] == deleted[FILE]) & (rows[POS] == deleted[POS])
+    return rows.join(deleted, cond if on is None else cond & on, "left_anti")
+
+
+def _quoted(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"

@@ -31,6 +31,7 @@ from big_data_analytics_machine_learning_poc_spark.sources.delta_lite import (
     restore_table,
     snapshot_diff,
     snapshot_summary,
+    update_where,
     write_delta,
 )
 
@@ -181,6 +182,32 @@ def test_dv_on_partitioned_table_marks_only_its_own_file(spark, tmp_path):
     assert sorted(r["id"] for r in read_delta(spark, table).collect()) == [1] + list(
         range(3, 20)
     )
+
+
+def test_dv_on_partitioned_table_under_percent_encoded_path(spark, tmp_path):
+    """DVs are keyed by the data file's absolute path: under a table path
+    with a space, a '+' and a '%', a DV DELETE and a DV UPDATE mark only
+    their own row in their own partition, and a copy-on-write MERGE over
+    the DV'd files keeps every other row."""
+    table = str(tmp_path / "dv sp+ace %41" / "t")
+    df = spark.range(40).select(
+        F.col("id"), (F.col("id") % 4).alias("p"), (F.col("id") * 2.0).alias("v")
+    )
+    write_delta(df.repartition(2), table, partition_cols=["p"])
+    assert delete_where(spark, table, "id = 6", mode="dv", dv_max_fraction=1.0) is not None
+    assert update_where(spark, table, {"v": "-1.0"}, "id = 13", mode="dv", dv_max_fraction=1.0)
+    assert any(a.get("deletionVector") for a in _active(table).values())
+    got = read_delta(spark, table)
+    assert sorted(r.id for r in got.collect()) == [i for i in range(40) if i != 6]
+    assert [r.id for r in got.filter("v = -1.0").collect()] == [13]
+    source = (
+        read_delta(spark, table).filter("id IN (7, 13)").select("id", "p", F.lit(0.5).alias("v"))
+    )
+    merge_delta(spark, table, source, ["id"])
+    got = read_delta(spark, table)
+    assert got.count() == 39
+    assert sorted(r.id for r in got.filter("v = 0.5").collect()) == [7, 13]
+    assert got.filter("v = -1.0").count() == 0
 
 
 def test_connector_applies_deletion_vectors(spark, tmp_path):

@@ -97,6 +97,29 @@ def test_lakehouse_formats_stubbed(spark):
         lakehouse.format_available(spark, "paimon")
 
 
+def test_format_probe_raises_on_gateway_errors():
+    """Only the JVM's ClassNotFoundException means "no jar": any other
+    failure of the probe (here a dead Py4J gateway) propagates instead of
+    silently routing the call to the lite fallback."""
+    from types import SimpleNamespace
+
+    import pytest as _pytest
+    from py4j.protocol import Py4JNetworkError
+
+    from big_data_analytics_machine_learning_poc_spark.sources import lakehouse
+
+    def stub(for_name):
+        lang = SimpleNamespace(Class=SimpleNamespace(forName=for_name))
+        return SimpleNamespace(_jvm=SimpleNamespace(java=SimpleNamespace(lang=lang)))
+
+    def broken(name):
+        raise Py4JNetworkError("Answer from Java side is empty")
+
+    with _pytest.raises(Py4JNetworkError):
+        lakehouse.format_available(stub(broken), "delta")
+    assert lakehouse.format_available(stub(lambda name: object()), "iceberg") is True
+
+
 def test_delta_lite_roundtrip_append_timetravel(spark, tmp_path):
     """delta_lite speaks the public Delta log protocol: overwrite/append
     commits, snapshot isolation (overwrite removes in the same commit),
