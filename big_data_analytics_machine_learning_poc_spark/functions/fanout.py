@@ -9,11 +9,14 @@ slots and the driver plans one while another runs.
 
 The threads are ``pyspark.InheritableThread``: each copies the caller's
 local properties (job group, scheduler pool, description) when it starts,
-so the jobs it runs count under the caller's job group.
+so the jobs it runs count under the caller's job group. Each also runs in
+a copy of the caller's context, so a checkpoint it pins belongs to the
+caller's ``functions.ckpt`` scope.
 """
 
 from __future__ import annotations
 
+import contextvars
 from typing import Any, Callable
 
 from pyspark import InheritableThread
@@ -33,7 +36,10 @@ def fanout(*thunks: Callable[[], Any]) -> list:
         except BaseException as e:  # re-raised in the caller after the join
             errors[i] = e
 
-    threads = [InheritableThread(call, args=(i,)) for i in range(1, len(thunks))]
+    threads = [
+        InheritableThread(contextvars.copy_context().run, args=(call, i))
+        for i in range(1, len(thunks))
+    ]
     for t in threads:
         t.start()
     if thunks:

@@ -26,6 +26,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .ckpt import pin
+
 
 def partitioned_prefix_sum(
     df: DataFrame,
@@ -107,10 +109,9 @@ def partitioned_prefix_sums(
     # avoids re-running the upstream plan per job. Callers pass
     # aggregate-grain frames (per-score, per-part), so the checkpoint is
     # small relative to the data that produced it.
-    ranged = (
+    ranged = pin(
         df.repartitionByRange(num_partitions, order_col)
         .withColumn("_pp_pid", F.spark_partition_id())
-        .localCheckpoint()
     )
     hi = -1 if exclusive else 0
     w = (

@@ -16,5 +16,5 @@ the fit and the scoring never read, its halves are narrowed to the read
 columns and checkpointed (``functions.ckpt.checkpointed_split``), so the
 estimator's iteration tasks do not ship the split's sort over every
 column. ``tfidf_regression`` and ``random_forest`` qualify; ``spam``
-already splits a cached two-column frame, and ``correlator`` has no split.
+already splits a pinned two-column frame, and ``correlator`` has no split.
 """

@@ -4,7 +4,7 @@ Pipeline shape preserved at the operator level — cast-to-null cleaning (:34-36
 na.drop (:40), Bucketizer on age (:41-49), groupBy aggregates (:51,53),
 StringIndexer on sex/smoker (:56-63), schema-driven per-column correlation
 (:66-72), VectorAssembler (:78-82) — with engine upgrades: try_cast under
-ANSI mode, a cache() before the multi-pass correlation loop (the reference
+ANSI mode, a pin before the multi-pass correlation loop (the reference
 re-executes the whole upstream plan per corr call, SURVEY §3.3), and the
 correlation loop expressed as ONE aggregate job over all numeric columns
 instead of one job per column.
@@ -12,8 +12,8 @@ instead of one job per column.
 ``run`` overlaps its three reads of the cleaned frame (the age-bucket
 aggregate, the region/smoker minimum, and the indexer fits plus the
 correlation job) with ``functions.fanout``, once ``count()`` has filled the
-cache they share. None of them reads another's output, and each is a
-deterministic aggregate of the same cached rows, so the results do not
+pin they share. None of them reads another's output, and each is a
+deterministic aggregate of the same pinned rows, so the results do not
 depend on how their jobs interleave.
 """
 
@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, IntegerType, LongType
 
+from ..functions.ckpt import pin, scope
 from ..functions.fanout import fanout
 
 AGE_SPLITS = [float("-inf"), 25.0, 35.0, 45.0, 55.0, float("inf")]
@@ -97,9 +98,9 @@ def assemble_features(df: DataFrame) -> DataFrame:
 
 
 def run(raw: DataFrame) -> dict:
-    df = clean(raw).cache()
-    try:
-        clean_count = df.count()  # materializes the cache the branches share
+    with scope():
+        df = pin(clean(raw), eager=False)
+        clean_count = df.count()  # materializes the pin the branches share
         by_age, by_region, corrs = fanout(
             lambda: agg_by_age_bucket(df).collect(),
             lambda: min_charges_by_region_smoker(df).collect(),
@@ -112,6 +113,4 @@ def run(raw: DataFrame) -> dict:
             "correlations": corrs,
             "features_schema": assemble_features(df).schema.simpleString(),
         }
-    finally:
-        df.unpersist()
     return out

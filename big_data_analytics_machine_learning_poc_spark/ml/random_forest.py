@@ -19,9 +19,10 @@ split, so the forest, its importances and the metrics are unchanged.
 audit runs beside the forest fit, and the confusion matrix, the f1
 evaluation and the test count run together on the fitted predictions.
 Each branch has its own estimator or evaluator, and each reads only
-deterministic inputs (the cached indexed frame and the checkpointed
+deterministic inputs (the pinned indexed frame and the checkpointed
 halves of its seeded split), so the results do not depend on how the
-branches' jobs interleave. The halves are released after the last join.
+branches' jobs interleave. The program's scope releases them after the
+last join.
 """
 
 from __future__ import annotations
@@ -31,7 +32,7 @@ from pyspark.ml.evaluation import MulticlassClassificationEvaluator
 from pyspark.ml.feature import IndexToString, StringIndexer, VectorAssembler
 from pyspark.sql import DataFrame
 
-from ..functions.ckpt import checkpointed_split, release_local_checkpoint
+from ..functions.ckpt import checkpointed_split, pin, scope
 from ..functions.fanout import fanout
 
 FEATURES = ["SST", "SRT", "SAT", "SAP", "SEP"]
@@ -39,12 +40,10 @@ FEATURES = ["SST", "SRT", "SAT", "SAP", "SEP"]
 
 def run(data: DataFrame, seed: int = 42, num_trees: int = 20) -> dict:
     indexer_model = StringIndexer(inputCol="SKL", outputCol="label").fit(data)
-    indexed = indexer_model.transform(data).cache()
-    halves: list[DataFrame] = []
-    try:
+    with scope():
+        indexed = pin(indexer_model.transform(data), eager=False)
         assembled = VectorAssembler(inputCols=FEATURES, outputCol="features").transform(indexed)
-        halves = checkpointed_split(assembled, [0.7, 0.3], seed, ("label", "features"))
-        train, test = halves
+        train, test = checkpointed_split(assembled, [0.7, 0.3], seed, ("label", "features"))
 
         rf = RandomForestClassifier(
             labelCol="label", featuresCol="features", numTrees=num_trees, seed=seed
@@ -84,7 +83,3 @@ def run(data: DataFrame, seed: int = 42, num_trees: int = 20) -> dict:
             "num_trees": model.getNumTrees,
             "total_num_nodes": model.totalNumNodes,
         }
-    finally:
-        for half in halves:
-            release_local_checkpoint(half)
-        indexed.unpersist()

@@ -13,7 +13,7 @@ select → na.drop → seeded split → fit.
 
 ``run`` overlaps the two split counts and the two model branches (fit,
 transform, evaluate) with ``functions.fanout``. Each branch builds its own
-pipeline and evaluator, and all of them read the same cached frame through
+pipeline and evaluator, and all of them read the same pinned frame through
 the same seeded split, so every branch sees the rows it saw when the
 branches ran one after the other and the results are unchanged.
 """
@@ -26,6 +26,7 @@ from pyspark.ml.evaluation import MulticlassClassificationEvaluator
 from pyspark.ml.feature import IDF, HashingTF, IndexToString, StopWordsRemover, StringIndexer, Tokenizer
 from pyspark.sql import DataFrame
 
+from ..functions.ckpt import pin, scope
 from ..functions.fanout import fanout
 from ..operators.encoding import ENGLISH_STOPWORDS
 
@@ -58,8 +59,8 @@ def _accuracy(clf, train: DataFrame, test: DataFrame) -> float:
 
 
 def run(raw: DataFrame, seed: int = 42) -> dict:
-    clean = raw.select("v1", "v2").na.drop().cache()
-    try:
+    with scope():
+        clean = pin(raw.select("v1", "v2").na.drop(), eager=False)
         train, test = clean.randomSplit([0.7, 0.3], seed=seed)
         n_train, n_test, rf_acc, dt_acc = fanout(
             train.count,
@@ -81,5 +82,3 @@ def run(raw: DataFrame, seed: int = 42) -> dict:
             "dt_accuracy": dt_acc,
             "dt_test_error": 1.0 - dt_acc,
         }
-    finally:
-        clean.unpersist()

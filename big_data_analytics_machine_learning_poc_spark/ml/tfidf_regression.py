@@ -6,7 +6,7 @@ Operator chain preserved: select 6 columns (:38-45) → Tokenizer ×2 (:49-52)
 → corr(label, indexed nationality) (:111) → VectorAssembler over the two
 tf-idf vectors + Average Score (:114-117) → Normalizer p=1 (:120-124) →
 seeded 70/30 split (:126-128; unseeded there) → LinearRegression (:131-139)
-→ RMSE (:143-148). Engine upgrades: one Pipeline object, cache before fit,
+→ RMSE (:143-148). Engine upgrades: one Pipeline object, pin before fit,
 seeded split.
 
 The featurized frame is checkpointed once, and the split halves are
@@ -21,7 +21,8 @@ same order, so the coefficients and metrics are unchanged.
 then the RMSE evaluation with the test count, through ``functions.fanout``.
 Each branch has its own estimator or evaluator and reads only
 checkpointed frames, so the results do not depend on how the branches'
-jobs interleave; every checkpoint is released only after the joins.
+jobs interleave; the program's scope releases every checkpoint after the
+joins.
 """
 
 from __future__ import annotations
@@ -41,7 +42,7 @@ from pyspark.ml.regression import LinearRegression
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.ckpt import checkpointed_split, release_local_checkpoint
+from ..functions.ckpt import checkpointed_split, pin, scope
 from ..functions.fanout import fanout
 from ..operators.encoding import ENGLISH_STOPWORDS
 
@@ -70,8 +71,9 @@ def featurize_pipeline(num_features: int = 10_000) -> Pipeline:
 
 
 def run(reviews: DataFrame, seed: int = 42) -> dict:
-    labeled = reviews.withColumn("label", F.col("Reviewer Score")).cache()
-    try:
+    # the returned dict is plain metrics: the scope releases every pin
+    with scope():
+        labeled = pin(reviews.withColumn("label", F.col("Reviewer Score")), eager=False)
         model = featurize_pipeline().fit(labeled)
         # `feats` is the featurized frame, materialized once so that corr
         # and the split do not each replay the dual tokenize→TF→IDF chain;
@@ -80,33 +82,22 @@ def run(reviews: DataFrame, seed: int = 42) -> dict:
         # halves narrowed to what the fit, transform, evaluator and count
         # read, so the fit's iteration tasks ship a scan of their blocks
         # instead of the split's sort over all 18 columns.
-        feats = model.transform(labeled).localCheckpoint()
-        halves: list[DataFrame] = []
-        try:
-            halves = checkpointed_split(feats, [0.7, 0.3], seed, ("label", "features"))
-            train, test = halves
-            lr = LinearRegression(featuresCol="features", labelCol="label")
-            nat_corr, lr_model = fanout(
-                lambda: feats.stat.corr("label", "nationality_idx"),  # TfIdfCalculator.java:111
-                lambda: lr.fit(train),
-            )
-            predictions = lr_model.transform(test)
-            rmse, n_test = fanout(
-                lambda: RegressionEvaluator(
-                    labelCol="label", predictionCol="prediction", metricName="rmse"
-                ).evaluate(predictions),
-                predictions.count,
-            )
-            return {
-                "nationality_corr": nat_corr,
-                "rmse": rmse,
-                "n_test": n_test,
-            }
-        finally:
-            # every consumer (corr, fit, evaluate, count) has joined and the
-            # returned dict is plain metrics — release the checkpoints'
-            # blocks instead of leaking them for the session's lifetime
-            for ck in (feats, *halves):
-                release_local_checkpoint(ck)
-    finally:
-        labeled.unpersist()
+        feats = pin(model.transform(labeled))
+        train, test = checkpointed_split(feats, [0.7, 0.3], seed, ("label", "features"))
+        lr = LinearRegression(featuresCol="features", labelCol="label")
+        nat_corr, lr_model = fanout(
+            lambda: feats.stat.corr("label", "nationality_idx"),  # TfIdfCalculator.java:111
+            lambda: lr.fit(train),
+        )
+        predictions = lr_model.transform(test)
+        rmse, n_test = fanout(
+            lambda: RegressionEvaluator(
+                labelCol="label", predictionCol="prediction", metricName="rmse"
+            ).evaluate(predictions),
+            predictions.count,
+        )
+        return {
+            "nationality_corr": nat_corr,
+            "rmse": rmse,
+            "n_test": n_test,
+        }

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import load_table
+from ..functions.ckpt import pin
 from ..functions.vector import cosine, cosine_sql
 from ..registry import QueryRegistry
 
@@ -120,16 +121,14 @@ def ann_ivf_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids; sampling the centroids instead trades a little list balance
     for full auditability, which is exactly what this lane buys."""
     emb = load_table(spark, sf_dir, "embeddings")
-    q = (
+    q = pin(  # three consumers: probes, scorer, final join
         emb.filter(F.col("vec_id") < _NQ)
         .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe"))
-        .localCheckpoint()  # three consumers: probes, scorer, final join
     )
     corpus = emb.filter(F.col("vec_id") >= _NQ)
-    cent = (
+    cent = pin(  # two consumers: assignment and probe ranking
         corpus.filter(F.col("vec_id") < _NQ + _C)
         .select(F.col("vec_id").alias("cid"), F.col("embedding").alias("ce"))
-        .localCheckpoint()  # two consumers: assignment and probe ranking
     )
     # assignment: corpus x C-row broadcast, argmax cosine (map-only + window)
     w_assign = Window.partitionBy("vec_id").orderBy(

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.ckpt import pin
 from ..functions.localrows import local_rows_df
 from ..registry import QueryRegistry
 from .text import TOKENS_SQL, tokens_col
@@ -153,7 +154,7 @@ def learn_bpe_merges(
     # (lazy wins both orders); encode lazy 3.02/3.93/4.86 vs eager
     # 3.83/3.95/4.21 (a wash; tie-break pair 3.93 vs 3.95). The sweep
     # regression was shared-session drift, not this change — lazy kept.
-    words = words.localCheckpoint(eager=False)
+    words = pin(words, eager=False)
     merges: list[tuple[int, str, str, str, int]] = []
     for rank in range(1, n_merges + 1):
         pairs = (
@@ -180,12 +181,13 @@ def learn_bpe_merges(
         merges.append(
             (rank, best["lhs"], best["rhs"], best["lhs"] + best["rhs"], best["pair_count"])
         )
-        words = words.select(
-            _merge_pair_fold(F.col("symbols"), best["lhs"], best["rhs"]).alias(
-                "symbols"
+        words = pin(  # materialized by the next argmax job
+            words.select(
+                _merge_pair_fold(F.col("symbols"), best["lhs"], best["rhs"]).alias("symbols"),
+                "wc",
             ),
-            "wc",
-        ).localCheckpoint(eager=False)  # materialized by the next argmax job
+            eager=False,
+        )
     return merges
 
 

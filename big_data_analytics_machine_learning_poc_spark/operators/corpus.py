@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.ckpt import pin
 from ..functions.hashing import (
     md5_hash32,
     md5_hash32_sql,
@@ -411,7 +412,7 @@ def corpus_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     sp = docs.select("doc_id", "lang", _split_col().alias("split"))
-    sh = doc_shingle_hashes(spark, sf_dir).localCheckpoint()
+    sh = pin(doc_shingle_hashes(spark, sf_dir))
     train_sh = (
         sh.join(sp.filter(F.col("split") == "train"), "doc_id")
         .select("h")

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.ckpt import pin
 from ..functions.hashing import md5_hash32_sql
 from ..functions.vector import cosine, dot, l2_norm
 from ..functions.localrows import local_rows_df
@@ -66,7 +67,7 @@ def semdedup(
         [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
         "cluster int, centroid array<double>",
     )
-    members = (
+    members = pin(
         model.transform(fitted)
         .select("vec_id", "embedding", "cluster")
         .join(F.broadcast(centroids), "cluster")
@@ -76,7 +77,6 @@ def semdedup(
             "cluster",
             F.round(cosine(F.col("embedding"), F.col("centroid")), 5).alias("csim"),
         )
-        .localCheckpoint()
     )
     # Hoist the pair-invariant norms OUT of the O(pairs) join expression
     # (the dedup_embedding_cosine `normed` pattern, r12): cosine() folds
@@ -300,7 +300,7 @@ def corpus_contamination_by_split(spark: SparkSession, sf_dir: str) -> DataFrame
     localCheckpoint-pinned for its two consumers."""
     docs = load_table(spark, sf_dir, "documents")
     sp = docs.select("doc_id", _split_col().alias("split"))
-    sh = doc_shingle_hashes(spark, sf_dir).localCheckpoint()
+    sh = pin(doc_shingle_hashes(spark, sf_dir))
     train_sh = (
         sh.join(sp.filter(F.col("split") == "train"), "doc_id")
         .select("h")

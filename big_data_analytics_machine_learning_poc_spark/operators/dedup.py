@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import load_table
+from ..functions.ckpt import pin, release
 from ..functions.hashing import (
     MERSENNE_P,
     MINHASH_PERMS,
@@ -326,7 +327,7 @@ def minhash_near_dup_pairs(
     # unpinned, each replays shingle→hash→min-agg from the docs scan
     # (r7 scan audit: 4 documents scans → 1, A/B-measured — the
     # "checkpointed once at warehouse scale" note above, now done)
-    sig = minhash_signatures_df(spark, sf_dir, perms).localCheckpoint()
+    sig = pin(minhash_signatures_df(spark, sf_dir, perms))
     cand = minhash_candidate_pairs(sig, len(perms), rows_per_band)
     sa, sb = sig.alias("sa"), sig.alias("sb")
     matches = sum(
@@ -569,21 +570,21 @@ def ingest_batch(
     # interleaving converges to exactly-once rows in both tables
     sigs_t, bands_t = f"{root}/sigs", f"{root}/bands"
     sigs_done, bands_done = committed(sigs_t), committed(bands_t)
-    batch_sig = minhash_signatures_from(
-        doc_shingle_hashes_from(batch_docs), perms
-    ).localCheckpoint()
-    batch_bands = _band_rows(batch_sig, n, rows_per_band).localCheckpoint()
+    batch_sig = pin(minhash_signatures_from(doc_shingle_hashes_from(batch_docs), perms))
+    batch_bands = pin(_band_rows(batch_sig, n, rows_per_band))
     idx_sigs = read_delta(spark, sigs_t)
     idx_bands = read_delta(spark, bands_t)
     newdocs = batch_sig.select("doc_id")
-    pairs = _batch_touching_pairs(
-        batch_bands,
-        idx_bands if bands_done else idx_bands.unionByName(batch_bands),
-        idx_sigs if sigs_done else idx_sigs.unionByName(batch_sig),
-        newdocs,
-        n,
-        threshold,
-    ).localCheckpoint()  # materialize BEFORE the index grows
+    pairs = pin(  # materialize BEFORE the index grows
+        _batch_touching_pairs(
+            batch_bands,
+            idx_bands if bands_done else idx_bands.unionByName(batch_bands),
+            idx_sigs if sigs_done else idx_sigs.unionByName(batch_sig),
+            newdocs,
+            n,
+            threshold,
+        )
+    )
     if not sigs_done:
         write_delta(batch_sig, sigs_t, mode="append", txn=txn)
     if not bands_done:
@@ -800,7 +801,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     the difference between one corpus scan and ten.
     """
     docs = load_table(spark, sf_dir, "documents")
-    sh0 = doc_shingles(docs, "doc_id").distinct().localCheckpoint()
+    sh0 = pin(doc_shingles(docs, "doc_id").distinct())
     sizes = sh0.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     rare = (
         sh0.groupBy("shingle")
@@ -940,12 +941,14 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cosine verify joins still scan the corpus — they need the raw
     # vectors, and pinning full embeddings would materialize the corpus).
     # r7 scan audit: 4 embeddings scans → 3, A/B-measured.
-    tables = bucketed.select(
-        "vec_id",
-        F.posexplode(
-            F.array(*[F.col(f"bk{t}") for t in range(len(_EMB_TABLES))])
-        ).alias("tbl", "bk"),
-    ).localCheckpoint()
+    tables = pin(
+        bucketed.select(
+            "vec_id",
+            F.posexplode(
+                F.array(*[F.col(f"bk{t}") for t in range(len(_EMB_TABLES))])
+            ).alias("tbl", "bk"),
+        )
+    )
     a, b = tables.alias("a"), tables.alias("b")
     cand = (
         a.join(
@@ -1043,7 +1046,7 @@ def mllib_lsh_pairs(docs: DataFrame) -> DataFrame:
     # hashes + sizes) — uncheckpointed, Spark re-ran tokenize→shingle per
     # consumer (measured r5-tail: lane 14.4 s → 8.5 s with the shingle
     # frame materialized once; it is |docs| rows of shingle arrays).
-    sh = sh.localCheckpoint()
+    sh = pin(sh)
     # binary=True → set semantics (presence, not counts), matching Jaccard
     tf = (
         HashingTF(
@@ -1171,7 +1174,7 @@ def verified_near_dup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     prep — inherit the saving). Same doctrine as mllib_lsh_pairs. At
     100 TB the frame is |docs|·|shingles| 12-byte rows — the thing you
     materialize precisely so the corpus scan happens once."""
-    sh0 = doc_shingle_hashes(spark, sf_dir).localCheckpoint()
+    sh0 = pin(doc_shingle_hashes(spark, sf_dir))
     sig = minhash_signatures_from(sh0)
     cand = minhash_candidate_pairs(sig, N_PERMS, ORACLE_ROWS_PER_BAND)
     inter, sizes = _shingle_intersections(cand, sh0)
@@ -1243,13 +1246,11 @@ def connected_components(edges: DataFrame) -> DataFrame:
             )
         ).alias("e")
     ).select("e.src", "e.dst")
-    from ..functions.ckpt import release_local_checkpoint
-
     # LAZY checkpoints: the job that first reads a frame materializes it
     # (Spark backfills any partition that job skipped), so no round pays a
     # separate pass just to fill its checkpoint. `sym` is computed once, by
     # round 1, and reused every round.
-    sym = sym.localCheckpoint(eager=False)
+    sym = pin(sym, eager=False)
     # Semi-naive rounds over (doc, lab, old): `old` is the node's label
     # before the round, so a round's changed nodes are `lab < old` on its
     # own checkpoint and no second join is needed to find them. Only the
@@ -1258,11 +1259,12 @@ def connected_components(edges: DataFrame) -> DataFrame:
     # labels as full propagation. Round 1 needs no join at all: every node
     # starts as its own label, so it takes the min of itself and its
     # neighbours.
-    labels = (
+    labels = pin(
         sym.groupBy(F.col("src").alias("doc"))
         .agg(F.min("dst").alias("nb"))
-        .select("doc", F.least("doc", "nb").alias("lab"), F.col("doc").alias("old"))
-    ).localCheckpoint(eager=False)
+        .select("doc", F.least("doc", "nb").alias("lab"), F.col("doc").alias("old")),
+        eager=False,
+    )
     lab_type = labels.schema["lab"].dataType
     prev = None
     for _ in range(_CC_MAX_ITERS):
@@ -1272,21 +1274,22 @@ def connected_components(edges: DataFrame) -> DataFrame:
         # round's labels any more: release their blocks instead of leaking
         # one vector per round for the session's lifetime
         if prev is not None:
-            release_local_checkpoint(prev)
+            release(prev)
         if converged:
             break
         prop = sym.join(changed, sym.src == changed.doc).select(
             F.col("dst").alias("doc"), "lab", F.lit(None).cast(lab_type).alias("old")
         )
-        prev, labels = labels, (
+        prev, labels = labels, pin(
             labels.select("doc", "lab", F.col("lab").alias("old"))
             .unionByName(prop)
             .groupBy("doc")
-            .agg(F.min("lab").alias("lab"), F.min("old").alias("old"))
-        ).localCheckpoint(eager=False)
+            .agg(F.min("lab").alias("lab"), F.min("old").alias("old")),
+            eager=False,
+        )
     else:
         raise RuntimeError(f"label propagation did not converge in {_CC_MAX_ITERS} rounds")
-    release_local_checkpoint(sym)
+    release(sym)
     return labels.select(F.col("doc").alias("doc_id"), F.col("lab").alias("component"))
 
 
@@ -1348,7 +1351,7 @@ def dedup_pipeline_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     extra eager job measured net-negative (3.61 s → 3.82 s).
     """
     docs = load_table(spark, sf_dir, "documents")
-    sh0 = doc_shingle_hashes(spark, sf_dir).localCheckpoint()
+    sh0 = pin(doc_shingle_hashes(spark, sf_dir))
     sig = minhash_signatures_from(sh0)
     cand = minhash_candidate_pairs(sig, N_PERMS, ORACLE_ROWS_PER_BAND)
 
@@ -1471,7 +1474,7 @@ def dedup_edit_distance_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     k = F.expr(_k_sql)
     banded = F.expr(f"levenshtein(da.text, db.text, {_k_sql})")
-    scored = (
+    scored = pin(
         cand.join(da, F.col("da.doc_id") == F.col("doc_a"))
         .join(db, F.col("db.doc_id") == F.col("doc_b"))
         # exact prefilter: lev >= maxl - minl, so a gap > k already forces
@@ -1488,7 +1491,6 @@ def dedup_edit_distance_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
         # join condition AND the projection — 3 evaluations per pair
         # (measured 3×: 9.3 s → 3.1 s at sf0.1). The scored pair list is a
         # production artifact anyway (it feeds removal + audit).
-        .localCheckpoint()
     )
     sim = F.lit(1.0) - F.col("lev").cast("double") / F.col("maxl")
     return (

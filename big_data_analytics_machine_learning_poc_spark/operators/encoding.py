@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.ckpt import pin
 from ..functions.windows import ranked
 from ..registry import QueryRegistry
 
@@ -231,11 +232,10 @@ def hashingtf_idf_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # transform) otherwise each replay the tokenize→HashingTF chain from
     # the parquet scan; MLlib's IDF does not cache its input (r13, the
     # ml_lr_rmse/tfidf discipline). Lazy: the fit materializes it. The
-    # checkpoint is NOT released — the returned frame still reads it.
-    tf = (
-        HashingTF(inputCol="tokens", outputCol="tf", numFeatures=1000)
-        .transform(toks)
-        .localCheckpoint(eager=False)
+    # returned frame still reads it, so the caller's scope releases it.
+    tf = pin(
+        HashingTF(inputCol="tokens", outputCol="tf", numFeatures=1000).transform(toks),
+        eager=False,
     )
     idf_model = IDF(inputCol="tf", outputCol="tfidf").fit(tf)
     out = idf_model.transform(tf)

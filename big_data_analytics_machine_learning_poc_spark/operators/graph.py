@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.ckpt import release_local_checkpoint
+from ..functions.ckpt import pin, release
 from ..registry import QueryRegistry
 
 REG = QueryRegistry()
@@ -101,12 +101,13 @@ def pagerank(
     # nodes checkpoint and once into the edges checkpoint (r12, guide
     # §1.2: don't compute things twice). Same rows either way. Lazy: the
     # n_nodes count below is the first action and materializes both.
-    edges = edges.localCheckpoint(eager=False)
-    nodes = (
+    edges = pin(edges, eager=False)
+    nodes = pin(
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
-    ).localCheckpoint(eager=False)
+        .distinct(),
+        eager=False,
+    )
     n_nodes = nodes.count()
     # Hoist everything iteration-invariant OUT of the loop (the r5 rewrite
     # that took the sf0.1 lane from ~14 s to single digits):
@@ -116,12 +117,10 @@ def pagerank(
     # - dnodes: the (static) set of dangling nodes, so the dangling mass is
     #   a semi-join + 1-row aggregate instead of re-deriving outdeg-null
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    wedges = edges.join(outdeg, "src").localCheckpoint(eager=False)
+    wedges = pin(edges.join(outdeg, "src"), eager=False)
     # dangling nodes (no out-edges) are a STATIC set; left unhinted, AQE
     # broadcasts it when small and falls back to shuffle when it isn't
-    dnodes = nodes.join(
-        outdeg, nodes.node == outdeg.src, "left_anti"
-    ).localCheckpoint(eager=False)
+    dnodes = pin(nodes.join(outdeg, nodes.node == outdeg.src, "left_anti"), eager=False)
     ranks = nodes.withColumn("rank", F.lit(1.0 / n_nodes))
     prev_ckpt = None  # superseded rank checkpoints are released (§5 hygiene)
     for i in range(iterations):
@@ -129,14 +128,14 @@ def pagerank(
         # the accumulated lazy updates (dangling aggregates + contribs
         # joins + rank rebuilds); nothing is ever collected mid-loop
         if i % ckpt_every == 0:
-            ranks = ranks.localCheckpoint()
+            ranks = pin(ranks)
             if prev_ckpt is not None:
                 # the eager checkpoint above just materialized FROM the
                 # previous one — its blocks have no remaining consumer.
                 # Without this, every pagerank call leaks one rank vector
                 # per ckpt_every iterations for the session's lifetime
                 # (r13; the r12 sweep's late-lane drift, guide §5).
-                release_local_checkpoint(prev_ckpt)
+                release(prev_ckpt)
             prev_ckpt = ranks
         # dangling mass: rank that would leak from nodes with no out-edges,
         # handed back uniformly. Computed as a LAZY 1-row aggregate and

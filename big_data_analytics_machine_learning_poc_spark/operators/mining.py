@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import load_table
+from ..functions.ckpt import pin
 from ..functions.windows import ranked
 from ..functions.localrows import local_rows_df
 from ..registry import QueryRegistry
@@ -278,7 +279,7 @@ def basket_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the lineitem scan + collect_set shuffle; one compact per-order row
     # is exactly the thing to pin (r7 scan audit: 4 lineitem scans → 1,
     # A/B-measured; on a lossy cluster this pin becomes persist(DISK))
-    baskets = _baskets(spark, sf_dir).localCheckpoint()
+    baskets = pin(_baskets(spark, sf_dir))
     nb = baskets.agg(F.count(F.lit(1)).alias("n_baskets"))
     isupp = (
         baskets.select(F.explode("parts").alias("l_partkey"))
@@ -422,9 +423,7 @@ def prefix_filter_pairs_frame(
     # pairs 3.59→3.04 s, cross-source matrix 2.70→2.05 s. Open
     # vocabularies change the rank to hash ids (docstring) and would drop
     # this pin with it.
-    dfreq = (
-        tokrows.groupBy("tok").agg(F.count(F.lit(1)).alias("df")).localCheckpoint()
-    )
+    dfreq = pin(tokrows.groupBy("tok").agg(F.count(F.lit(1)).alias("df")))
     tdict = dfreq.select(
         "tok",
         F.row_number()
@@ -465,7 +464,7 @@ def prefix_filter_pairs_frame(
         set_aggs.append(
             F.sum(F.expr("shiftleft(CAST(1 AS BIGINT), tid - 1)")).alias("mask")
         )
-    sets = tokrows.join(tdict, "tok").groupBy("doc_id").agg(*set_aggs).localCheckpoint()
+    sets = pin(tokrows.join(tdict, "tok").groupBy("doc_id").agg(*set_aggs))
     n = F.size("ids")
     # prefix length p = n - ceil(t*n) + 1, integer-exact
     alpha = F.expr(f"({num} * size(ids) + {num}) div {den}")
@@ -598,7 +597,7 @@ def graph_triangle_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-row aggregates (declared ALLOWED — scalar broadcasts, not a
     quadratic stage). Clustering coefficient = ONE int64/int64 division."""
     baskets = _baskets(spark, sf_dir)
-    edges = (
+    edges = pin(
         # canonical p1 < p2 pairs generated in-row (no self-join shuffle —
         # the shared basket-local expansion)
         baskets.select(_inrow_pairs(">", "p1", "p2").alias("e"))
@@ -610,7 +609,6 @@ def graph_triangle_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the edge list feeds degree, both wedge sides, the closure probe
         # and two one-row aggregates — materialize the (small) edge set
         # once instead of re-running the basket expansion per consumer
-        .localCheckpoint()
     )
     return triangle_census_frame(edges)
 
@@ -1121,7 +1119,7 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the reference-day aggregate, the median aggregate, and the final
     # scoring pass; unpinned, each replays the orders scan + groupBy
     # (r7 scan audit: 4 orders scans → 1, A/B-measured)
-    base = (
+    base = pin(
         _t(spark, sf_dir, "orders")
         .groupBy("o_custkey")
         .agg(
@@ -1131,7 +1129,6 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "cents"
             ),
         )
-        .localCheckpoint()
     )
     ref = base.agg(F.max("last_day").alias("ref_day"))
     rfm = base.crossJoin(F.broadcast(ref)).select(
@@ -1202,7 +1199,7 @@ def ml_fpgrowth_itemsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # items, conditional trees) WITHOUT caching it ("Input data is not
     # cached" MLlib warning) — uncheckpointed, each pass replays the
     # lineitem scan + collect_set shuffle (r12)
-    baskets = _baskets(spark, sf_dir, items_col="items").localCheckpoint(eager=False)
+    baskets = pin(_baskets(spark, sf_dir, items_col="items"), eager=False)
     model = FPGrowth(
         itemsCol="items", minSupport=_FP_MIN_SUPPORT, minConfidence=0.5
     ).fit(baskets)
@@ -1847,7 +1844,7 @@ def ml_als_recommend(spark: SparkSession, sf_dir: str) -> DataFrame:
     weighting. recommendForUserSubset bounds the serving fan-out."""
     from pyspark.ml.recommendation import ALS
 
-    ratings = (
+    ratings = pin(
         _t(spark, sf_dir, "lineitem")
         .join(
             _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey"),
@@ -1860,7 +1857,6 @@ def ml_als_recommend(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("l_quantity").cast("float").alias("rating"))
         # two consumers (the ALS fit and the user-subset distinct below)
         # otherwise each replay the lineitem⋈orders join + groupBy (r12)
-        .localCheckpoint()
     )
     als = ALS(
         rank=8,

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.ckpt import pin
 from ..functions.localrows import local_rows_df
 from ..registry import QueryRegistry
 
@@ -55,21 +56,20 @@ def ml_lr_rmse(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_extendedprice").alias("label"), "l_quantity", "l_discount", "l_tax"
     )
-    assembled = VectorAssembler(
-        inputCols=["l_quantity", "l_discount", "l_tax"], outputCol="features"
-    ).transform(li).localCheckpoint(eager=False)  # fit + evaluate otherwise
-    # each replay the lineitem scan + assembler; checkpoint preserves
-    # partitioning so the seeded split draws identical rows (r12)
+    # fit + evaluate otherwise each replay the lineitem scan + assembler;
+    # checkpoint preserves partitioning so the seeded split draws identical
+    # rows (r12)
+    assembled = pin(
+        VectorAssembler(
+            inputCols=["l_quantity", "l_discount", "l_tax"], outputCol="features"
+        ).transform(li),
+        eager=False,
+    )
     train, test = assembled.randomSplit([0.7, 0.3], seed=42)
     model = LinearRegression(featuresCol="features", labelCol="label").fit(train)
     rmse = RegressionEvaluator(
         labelCol="label", predictionCol="prediction", metricName="rmse"
     ).evaluate(model.transform(test))
-    # fit + evaluate both ran; the checkpoint has no remaining consumer —
-    # release its blocks (r13 checkpoint hygiene, guide §5)
-    from ..functions.ckpt import release_local_checkpoint
-
-    release_local_checkpoint(assembled)
     return local_rows_df(spark, [(float(rmse),)], "rmse double")
 
 

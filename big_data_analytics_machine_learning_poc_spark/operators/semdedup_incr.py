@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.ckpt import pin
 from ..functions.vector import cosine, dot, l2_norm
 from ..functions.localrows import local_rows_df
 from ..registry import QueryRegistry
@@ -64,7 +65,7 @@ def fit_semdedup_index(
         [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
         "cluster int, centroid array<double>",
     )
-    members = (
+    members = pin(
         model.transform(fitted)
         .select("vec_id", "embedding", "cluster")
         .join(F.broadcast(centroids), "cluster")
@@ -74,7 +75,6 @@ def fit_semdedup_index(
             "cluster",
             F.round(cosine(F.col("embedding"), F.col("centroid")), 5).alias("csim"),
         )
-        .localCheckpoint()
     )
     return centroids, members
 
@@ -131,7 +131,7 @@ def incremental_semdedup(
     # union's new side, the pair join's left side) — pin it once or every
     # consumer replays the assignment shuffle (the dedup.py signature-frame
     # checkpoint doctrine)
-    assigned = assign_to_centroids(batch, centroids).localCheckpoint()
+    assigned = pin(assign_to_centroids(batch, centroids))
     touched = assigned.select("cluster").distinct()
     touched_members = members.join(F.broadcast(touched), "cluster", "left_semi")
     corpus_side = touched_members.select(
@@ -223,7 +223,7 @@ def dedup_semdedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the stats below consume pairs three ways (two loser scans + the
     # per-cluster kind counts) — pin the small pair frame once
-    pairs = pairs.localCheckpoint()
+    pairs = pin(pairs)
     # a batch doc survives unless it loses at least one pair
     batch_losers = (
         pairs.filter(F.col("loser_vec") == F.col("vec_a"))

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import load_table
+from ..functions.ckpt import pin
 from ..functions.vector import cosine, cosine_sql, l2_norm, l2_norm_sql
 from ..registry import QueryRegistry
 
@@ -665,10 +666,9 @@ def recall_audit(
     Deliberately NOT materializing ``scored``: its two consumers (brute
     top-k, candidate re-rank) would save one cosine pass, but the
     |Q|·|corpus| spill measured net-negative (0.82 s) at this geometry."""
-    q = (
+    q = pin(
         emb.filter(F.col("vec_id") < nq)
         .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe"))
-        .localCheckpoint()
     )
     corpus = emb.filter(F.col("vec_id") >= nq)
     scored = corpus.crossJoin(F.broadcast(q)).select(

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.ckpt import pin
 from ..registry import QueryRegistry
 
 REG = QueryRegistry()
@@ -664,7 +665,7 @@ def sql_scripting_leaky_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     (events_user_cusum_alarms) — scripting is for bounded orchestration,
     and the docstring saying so is the point."""
     spark.conf.set("spark.sql.scripting.enabled", "true")
-    (
+    pin(
         load_table(spark, sf_dir, "orders")
         .filter(F.year("o_orderdate") == 1995)
         .groupBy(F.month("o_orderdate").cast("int").alias("m"))
@@ -676,9 +677,7 @@ def sql_scripting_leaky_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
         # a temp view is LAZY: each of the WHILE loop's 12 scalar lookups
         # would otherwise replay the whole orders scan + aggregation (r12);
         # checkpointing pins the 12-row aggregate so lookups scan 12 rows
-        .localCheckpoint()
-        .createOrReplaceTempView("sql_script_mrev")
-    )
+    ).createOrReplaceTempView("sql_script_mrev")
     return spark.sql(
         """
         BEGIN

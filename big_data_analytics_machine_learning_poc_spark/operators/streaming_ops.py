@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..catalog import load_table
+from ..functions.ckpt import pin
 from ..functions.exact import cents
 from ..registry import QueryRegistry
 from ..streaming import events as sev
@@ -933,13 +934,12 @@ def stream_from_delta_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.pyds import DeltaLiteStreamDataSource
 
     spark.dataSource.register(DeltaLiteStreamDataSource)
-    ev = (
+    ev = pin(
         load_table(spark, sf_dir, "events")
         .filter(F.col("user_id") < 100)
         .select("event_id", "event_type", cents("value").alias("value_cents"))
         # three append commits below each filter this slice; checkpointed,
         # the events scan + nanos conversion runs once, not three times (r12)
-        .localCheckpoint()
     )
     table = tempfile.mkdtemp(prefix="delta_stream_src_")
     try:
@@ -949,12 +949,6 @@ def stream_from_delta_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
                 table,
                 mode="append" if i else "overwrite",
             )
-        # all three commits landed; the checkpointed slice has no further
-        # consumer (the stream below reads the delta TABLE) — release its
-        # blocks (r13 checkpoint hygiene, guide §5)
-        from ..functions.ckpt import release_local_checkpoint
-
-        release_local_checkpoint(ev)
         stream = spark.readStream.format("delta_lite_stream").load(table)
         agg = stream.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("n"),

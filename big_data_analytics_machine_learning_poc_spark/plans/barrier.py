@@ -9,10 +9,10 @@ The r6 budget ratchet drops on the checkpointing lanes (e.g.
 dedup_prefix_filter_pairs 7→2 shuffles) partly measured exactly this
 blindness, not eliminated work.
 
-``capture_subtrees()`` closes the hole: while active, every
-``DataFrame.localCheckpoint`` call — anywhere in the package, helpers and
-iterative loops included — records the PRE-barrier DataFrame before the
-barrier executes, so a gate can audit the full lane as
+``capture_subtrees()`` closes the hole: while it is open, every
+``functions.ckpt.pin`` — anywhere in the package, helpers, iterative
+loops, nested scopes and ``fanout`` threads included — records the
+PRE-barrier DataFrame, so a gate can audit the full lane as
 
     returned frame's plan  +  every captured subtree's plan.
 
@@ -20,18 +20,14 @@ Nested barriers don't double-count: a frame built ON a checkpointed
 parent plans from the parent's RDD scan, so each captured subtree covers
 only the segment since the previous barrier.
 
-The capture is a scoped monkeypatch rather than a call-site wrapper, on
-purpose: there are ~25 checkpoint sites across eight modules and more
-will appear — a wrapper convention can be forgotten at exactly one site
-and the gate silently loses that subtree; the patch structurally cannot
-miss one, and production paths never pay anything (the patch exists only
-inside the gate's ``with`` block). Gates run lanes sequentially in one
-thread; the context manager is not reentrancy-safe and doesn't need to
-be — but misuse must fail LOUDLY: a nested or concurrent entry (e.g.
-pytest-xdist running two gate tests in one process) would cross-capture
-subtrees and, worse, restore the PATCHED function as the "original" on
-exit, leaking the capture forever (ADVICE r7). Entry therefore raises if
-the method is already patched.
+A call-site convention can be forgotten at exactly one site, and the gate
+would silently lose that subtree. ``pin`` is the only checkpoint call in
+the package, and ``tests/test_ckpt.py`` walks the package's source and
+fails on any other ``localCheckpoint``, ``cache`` or ``persist`` call, so
+no site can bypass the capture. Captures are ``ckpt`` scopes, so they
+nest without cross-capturing: each sees the pins made inside it (an
+outer capture also sees an inner one's), and a capture in another thread
+sees none of them.
 """
 
 from __future__ import annotations
@@ -41,53 +37,14 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame
 
-
-def _checkpoint_classes() -> list[type]:
-    """Every class whose OWN dict defines localCheckpoint. Spark 4 splits
-    DataFrame into an abstract base (pyspark.sql.dataframe) and the classic
-    implementation subclass (pyspark.sql.classic.dataframe) which overrides
-    the method — patching only the base would never be reached through a
-    classic instance's MRO."""
-    classes: list[type] = [DataFrame]
-    try:
-        from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
-
-        classes.append(ClassicDataFrame)
-    except ImportError:  # older/alternate builds: base class is concrete
-        pass
-    return [c for c in classes if "localCheckpoint" in vars(c)]
+from ..functions.ckpt import scope
 
 
 @contextmanager
 def capture_subtrees() -> Iterator[list[DataFrame]]:
-    """Yield a list that accumulates the pre-barrier DataFrame of every
-    ``localCheckpoint`` executed while the context is active. Read it
-    AFTER constructing the lane; entries appear in execution order."""
-    log: list[DataFrame] = []
-    originals = {cls: vars(cls)["localCheckpoint"] for cls in _checkpoint_classes()}
-    for cls, orig in originals.items():
-        if getattr(orig, "_barrier_capture_patch", False):
-            raise RuntimeError(
-                f"capture_subtrees is already active on {cls.__name__} — "
-                "nested/concurrent use would cross-capture subtrees and "
-                "leak the patch on exit; gates must not overlap"
-            )
-
-    def make_patched(orig):
-        # pass-through signature: Spark 4's real method also takes
-        # storageLevel — a positional/keyword mismatch here would make a
-        # lane that is fine in production crash only under the gates
-        def patched(self, *args, **kwargs):
-            log.append(self)
-            return orig(self, *args, **kwargs)
-
-        patched._barrier_capture_patch = True
-        return patched
-
-    for cls, orig in originals.items():
-        setattr(cls, "localCheckpoint", make_patched(orig))
-    try:
-        yield log
-    finally:
-        for cls, orig in originals.items():
-            setattr(cls, "localCheckpoint", orig)
+    """Yield a list that accumulates the pre-barrier DataFrame of every pin
+    made while the context is open, in pin order. Read it AFTER
+    constructing the lane. Closing it releases the lane's storage, as any
+    scope does; the gates read plans only, which need no blocks."""
+    with scope() as s:
+        yield s.subtrees

@@ -26,8 +26,9 @@ Shared (here):
   ``s.<col>`` (source), the FIRST matching clause winning per row (ANSI
   MERGE clause order); matched rows that hit no clause stay in place;
 - validation, with the messages both formats raise;
-- checkpoint ownership: every frame a plan checkpoints is released when
-  its ``with`` block exits, by success or by exception.
+- checkpoint ownership: each statement is a ``functions.ckpt`` scope, so
+  every frame its plan pins is released when its ``with`` block exits, by
+  success or by exception.
 
 Per format (``delta_lite`` / ``iceberg_lite``):
 
@@ -62,7 +63,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..functions.ckpt import release_local_checkpoint
+from ..functions.ckpt import pin, scope
 
 # row address and change-feed columns a plan's frames carry
 FILE, POS, CHANGE = "_dml_file", "_dml_pos", "_dml_change"
@@ -85,27 +86,10 @@ class Plan:
 
 
 @contextmanager
-def _pins() -> Iterator:
-    """``pin(df)`` = ``df.localCheckpoint()``, released on exit."""
-    pinned: list[DataFrame] = []
-
-    def pin(df: DataFrame) -> DataFrame:
-        out = df.localCheckpoint()
-        pinned.append(out)
-        return out
-
-    try:
-        yield pin
-    finally:
-        for df in pinned:
-            release_local_checkpoint(df)
-
-
-@contextmanager
 def delete(scan: DataFrame, predicate: str) -> Iterator[Plan]:
     """``DELETE WHERE predicate``: rows where it is TRUE go; NULL keeps the
     row (SQL three-valued logic)."""
-    with _pins() as pin:
+    with scope():
         hits = pin(scan.filter(F.expr(predicate)).withColumn(CHANGE, F.lit("delete")))
         yield Plan("delete", hits, None)
 
@@ -120,7 +104,7 @@ def update(
     unknown = sorted(set(assignments) - {f.name for f in schema.fields})
     if unknown:
         raise KeyError(f"UPDATE targets not in table schema: {unknown}")
-    with _pins() as pin:
+    with scope():
         hits = pin(
             scan.filter(F.expr(predicate)).withColumn(CHANGE, F.lit("update_preimage"))
         )
@@ -196,7 +180,7 @@ def merge(
     _validate_when_matched(when_matched, data_cols)
     by_name = {f.name: f.dataType for f in schema.fields}
     keys = [f"_dml_key_{i}" for i in range(len(key_cols))]
-    with _pins() as pin:
+    with scope():
         # the source is read twice (match, inserts): pinned so both reads
         # see the same rows
         src = pin(source.select(*data_cols)).alias("s")

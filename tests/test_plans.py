@@ -489,11 +489,12 @@ def test_headline_lane_shuffle_budgets(spark):
 def test_barrier_capture_sees_through_local_checkpoint(spark):
     """ADVICE r6 (medium): a localCheckpoint truncates lineage, so gates
     walking only the returned plan are blind to pre-barrier work. The
-    capture hook must (a) record the pre-barrier frame, (b) let
+    capture must (a) record the pre-barrier frame of each pin, (b) let
     lane_exchange_counts restore the full-lane shuffle count, and (c) let
     lint_query flag a disallowed pattern hidden behind the barrier."""
     import pyspark.sql.functions as SF
 
+    from big_data_analytics_machine_learning_poc_spark.functions.ckpt import pin
     from big_data_analytics_machine_learning_poc_spark.plans.barrier import capture_subtrees
     from big_data_analytics_machine_learning_poc_spark.plans.budget import (
         exchange_counts,
@@ -503,7 +504,7 @@ def test_barrier_capture_sees_through_local_checkpoint(spark):
 
     base = spark.range(100).withColumn("k", SF.col("id") % 7)
     with capture_subtrees() as subtrees:
-        pinned = base.groupBy("k").count().localCheckpoint()  # 1 hidden shuffle
+        pinned = pin(base.groupBy("k").count())  # 1 hidden shuffle
     out = pinned.groupBy((SF.col("k") % 2).alias("b")).agg(SF.sum("count"))
     assert len(subtrees) == 1
     # blind count: only the post-barrier agg shuffle
@@ -514,41 +515,48 @@ def test_barrier_capture_sees_through_local_checkpoint(spark):
     from pyspark.sql.window import Window
 
     with capture_subtrees() as subtrees2:
-        hidden = (
-            base.withColumn("rk", SF.row_number().over(Window.orderBy("id")))
-            .localCheckpoint()
-        )
+        hidden = pin(base.withColumn("rk", SF.row_number().over(Window.orderBy("id"))))
     clean_tail = hidden.groupBy("k").count()
     assert lint_query("no_such_lane", clean_tail)[0] == set()  # blind: passes
     violations, _ = lint_query("no_such_lane", clean_tail, subtrees2)
     assert "global_window" in violations  # captured: flagged
-    # the patch is scoped: outside the context the method is Spark's own
+    # the capture patches nothing: the method is Spark's own
     from pyspark.sql import DataFrame
 
     assert DataFrame.localCheckpoint.__qualname__ == "DataFrame.localCheckpoint"
 
 
-def test_barrier_capture_refuses_nesting(spark):
-    """ADVICE r7 (low): a nested entry would cross-capture subtrees and —
-    fatally — restore the PATCHED function as the 'original' on exit,
-    leaking the capture process-wide. Misuse must raise on entry, and the
-    failed inner entry must leave the outer capture fully functional."""
-    import pytest as _pytest
+def test_barrier_nested_captures_do_not_cross_capture(spark):
+    """A capture sees the pins made inside it and no others: an inner one
+    sees only its own, the outer one sees all of them in pin order, and a
+    capture in another thread sees none of this thread's."""
+    import threading
+
     import pyspark.sql.functions as SF
 
+    from big_data_analytics_machine_learning_poc_spark.functions.ckpt import pin
     from big_data_analytics_machine_learning_poc_spark.plans.barrier import capture_subtrees
 
     base = spark.range(10).withColumn("k", SF.col("id") % 2)
-    with capture_subtrees() as subtrees:
-        with _pytest.raises(RuntimeError, match="already active"):
-            with capture_subtrees():
-                pass
-        base.groupBy("k").count().localCheckpoint()
-    assert len(subtrees) == 1
-    # and the clean unwind restored Spark's own method, not the patch
-    from pyspark.sql import DataFrame
+    frames = [base.groupBy("k").count(), base.filter("k = 0"), base.filter("k = 1")]
+    other: list = []
 
-    assert not getattr(DataFrame.localCheckpoint, "_barrier_capture_patch", False)
+    def capture_in_another_thread():
+        with capture_subtrees() as seen:
+            pin(base.select("id"))
+        other.extend(seen)
+
+    with capture_subtrees() as outer:
+        pin(frames[0])
+        with capture_subtrees() as inner:
+            pin(frames[1])
+            t = threading.Thread(target=capture_in_another_thread)
+            t.start()
+            t.join()
+        pin(frames[2])
+    assert [id(f) for f in inner] == [id(frames[1])]
+    assert [id(f) for f in outer] == [id(f) for f in frames]
+    assert len(other) == 1 and not any(other[0] is f for f in frames)
 
 
 def test_r7_pinned_lanes_scan_shapes(spark):

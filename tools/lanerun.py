@@ -10,10 +10,11 @@
   time depends on its neighbours (checkpoint and GC tails, executor churn
   after a heavy MLlib fit).
 - ``run(spark, name, fn, sf_dir)`` builds and collects one lane under its
-  own job group and returns its run record, read from Spark's own
-  execution record through ``perfbench/sparkprobe.py``. It then releases
-  every RDD the run left persisted, so a long sweep measures each lane
-  without the storage its predecessors leaked.
+  own job group and inside its own ``functions.ckpt`` scope, and returns
+  its run record, read from Spark's own execution record through
+  ``perfbench/sparkprobe.py``. Closing the scope releases every RDD the
+  run made persistent, so a long sweep measures each lane without the
+  storage its predecessors left.
 """
 
 from __future__ import annotations
@@ -22,6 +23,7 @@ import sys
 import time
 import uuid
 
+from big_data_analytics_machine_learning_poc_spark.functions.ckpt import scope
 from perfbench.sparkprobe import SparkProbe, catalyst_phases, exchanges
 
 
@@ -51,8 +53,8 @@ def select(names=()):
     return reg
 
 
-def _persisted_ids(spark) -> set[int]:
-    return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+def _persisted(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
 def run(spark, name: str, fn, sf_dir: str) -> dict:
@@ -66,17 +68,17 @@ def run(spark, name: str, fn, sf_dir: str) -> dict:
     - ``catalyst_phases`` (phase -> seconds) and ``exchanges`` of the
       returned frame's plan;
     - ``persisted_before``, ``persisted_after``: persisted RDDs before the
-      run and after its release.
+      run and after its scope closed.
 
-    The release unpersists, blocking, every RDD that became persistent
-    during the run: the rows are in the driver, so nothing still reads
-    them, and a blocking release cannot overlap the next timed run. It runs
-    when the lane raises too."""
+    The scope releases, blocking, every RDD that became persistent during
+    the run: the rows are collected, so nothing still reads them, and
+    a blocking release cannot overlap the next timed run. It closes when
+    the lane raises too."""
     probe = SparkProbe(spark)
     group = f"lanerun-{name}-{uuid.uuid4().hex[:12]}"
-    before = _persisted_ids(spark)
+    before = _persisted(spark)
     probe.set_group(group)
-    try:
+    with scope():
         t0 = time.perf_counter()
         df = fn(spark, sf_dir)
         t1 = time.perf_counter()
@@ -90,12 +92,7 @@ def run(spark, name: str, fn, sf_dir: str) -> dict:
             "jobs": probe.jobs(group),
             "catalyst_phases": {k: end - start for k, (start, end) in catalyst_phases(df).items()},
             "exchanges": exchanges(df),
-            "persisted_before": len(before),
+            "persisted_before": before,
         }
-    finally:
-        held = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in held.keySet():
-            if int(rid) not in before:
-                held.get(rid).unpersist(True)
-    record["persisted_after"] = len(_persisted_ids(spark))
+    record["persisted_after"] = _persisted(spark)
     return record

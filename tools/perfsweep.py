@@ -11,10 +11,11 @@ Per lane: one untimed warm-up execution, then the median of N timed
 executions (each = build the DataFrame from the registered callable +
 ``collect()``, so lanes that do driver-side assembly — PCA, BPE — are
 charged their real cost). Every execution goes through
-``tools/lanerun.run``, which releases what the run left persisted after
-the timed span. A lane's entry keeps the run record of its median run:
-jobs and stages, Catalyst phases, exchanges and the persisted-RDD count
-before the run and after its release. Results land in one JSON file.
+``tools/lanerun.run``, inside a ``functions.ckpt`` scope that releases
+what the run made persistent after the timed span. A lane's entry keeps
+the run record of its median run: jobs and stages, Catalyst phases,
+exchanges and the persisted-RDD count before the run and after its scope
+closed. Results land in one JSON file.
 
 Usage::
 
