@@ -27,6 +27,16 @@ def default_cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8)))
 
 
+def default_driver_memory(physical_bytes: int | None = None) -> str:
+    """The driver heap a session asks for unless ``SPARK_GRAFT_DRIVER_MEM``
+    says otherwise: a third of physical memory in whole GiB, at least 1g
+    and at most 24g. Two sessions side by side then still leave a third of
+    the machine to their Python processes and the OS."""
+    if physical_bytes is None:
+        physical_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(24, max(1, physical_bytes // (3 * 2**30)))}g"
+
+
 def get_session(
     app_name: str = "bdaml-poc-spark",
     cpus: int | None = None,
@@ -69,7 +79,10 @@ def get_session(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))

@@ -1487,10 +1487,12 @@ def _commit_plan(
     amplification stays bounded. Files without a hit are never touched, and
     the rows of a touched file that no statement clause hits stay in place.
 
-    Per-file hit COUNTS are collected first (tiny), so the density decision
-    happens before any index list reaches the driver; the bound
-    old_cardinality + new_hits is exact, as hits are live rows only. The
-    new rows (update and merge images, accepted inserts) are validated
+    The hit addresses are collected ONCE, as ``(file, pos)`` pairs (no
+    more rows than the keep-side broadcast of a copy-on-write rewrite
+    ships anyway); the per-file counts and the DV indices come from them,
+    and the rewrite's mask broadcasts the same pinned hits. The density
+    bound old_cardinality + new_hits is exact, as hits are live rows only.
+    The new rows (update and merge images, accepted inserts) are validated
     against the CHECK constraints before anything is staged, then land as
     one new file (compaction folds it later), written in the same job as
     the rewrites. With the change data feed on, the hits and the new rows
@@ -1503,8 +1505,10 @@ def _commit_plan(
     # a hit's file → its add action (an unmapped file raises KeyError
     # instead of turning the statement into a silent no-op)
     files = _data_files(table, list(active.values()))
-    touched = [(f, files[f], n) for f, n in plan.hits.groupBy(dml.FILE).count().collect()]
-    if not touched and plan.kind != "merge":
+    hits: dict[str, list[int]] = {}
+    for f, pos in plan.hits.select(dml.FILE, dml.POS).collect():
+        hits.setdefault(f, []).append(pos)
+    if not hits and plan.kind != "merge":
         return None
     data_cols = [
         f.name for f in StructType.fromJson(json.loads(meta["schemaString"])).fields
@@ -1522,37 +1526,30 @@ def _commit_plan(
         }
 
     dv_files: dict[str, dict] = {}
-    cow_files: list[dict] = []
-    for path, add, n in touched:
+    cow_files: dict[str, dict] = {}
+    for path, idx in hits.items():
+        add = files[path]
         n_phys = int(json.loads(add.get("stats") or "{}").get("numRecords") or 0)
-        bound = len(_dv_indices(add)) + n
+        bound = len(_dv_indices(add)) + len(idx)
         dense = n_phys and bound > dv_max_fraction * n_phys
         if mode == "dv" and not dense and bound <= _DV_MAX_ROWS_PER_FILE:
             dv_files[path] = add
         else:
-            cow_files.append(add)
+            cow_files[path] = add
     actions: list[dict] = []
-    if dv_files:
-        marked = (
-            plan.hits.filter(F.col(dml.FILE).isin(list(dv_files)))
-            .groupBy(dml.FILE)
-            .agg(F.collect_list(dml.POS))
-            .collect()
-        )
-        for path, idx in marked:
-            add = dv_files[path]
-            merged = _dv_encode(set(_dv_indices(add)) | set(idx))
-            actions += [remove(add), {"add": {**add, "deletionVector": merged}}]
+    for path, add in dv_files.items():
+        merged = _dv_encode(set(_dv_indices(add)) | set(hits[path]))
+        actions += [remove(add), {"add": {**add, "deletionVector": merged}}]
     rows = None if plan.new_rows is None else plan.new_rows.select(*data_cols).coalesce(1)
     if cow_files:
         # _read_adds applies any deletion vectors — a DV-deleted row must
         # not be resurrected into the rewritten files
         keep = tablefiles.mask(
-            _read_adds(spark, table, meta, cow_files, lineage=True),
+            _read_adds(spark, table, meta, list(cow_files.values()), lineage=True),
             F.broadcast(plan.hits.select(dml.FILE, dml.POS)),
         ).select(*data_cols)
         rows = keep if rows is None else keep.unionByName(rows)
-        actions += [remove(a) for a in cow_files]
+        actions += [remove(a) for a in cow_files.values()]
     if rows is not None:
         actions += _stage_adds(rows, table, meta, now_ms)
     _dv_protocol_upgrade(table, actions)

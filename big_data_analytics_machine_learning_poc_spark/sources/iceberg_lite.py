@@ -51,7 +51,18 @@ Spec mapping (section names from the spec):
   mid-truncate empty hint (ADVICE r9). Data and delete files go through
   ``tablefiles.stage`` (staging prefix, footer stats, put-if-absent
   publish: a name collision fails loudly instead of silently overwriting
-  a file an older snapshot still references).
+  a file an older snapshot still references). Every snapshot — a write's
+  append, overwrite, create or replace (compaction), a DELETE / UPDATE /
+  MERGE, an upsert — is committed by ONE function, ``_finish_commit``: it
+  writes the commit's own manifests, carries the parent's forward for
+  append, DML and upsert, builds the summary, publishes the metadata and
+  removes everything it published when the commit does not land. A lost
+  race retries metadata-only under one rule — the retry must find the
+  schema and default partition spec the files were staged under — plus
+  one per operation: append and overwrite rebase over anything, DML and
+  upsert only over appends, replace never. Every metadata version, with
+  or without a snapshot, is bumped by ``_write_metadata``, which logs the
+  version it replaces.
 - **Paths**: manifests, manifest lists and data files are recorded as
   fully-qualified absolute locations (rooted at the metadata
   ``location``), matching the Iceberg runtime's resolution rules
@@ -487,6 +498,19 @@ def load_metadata(table: str, version: int | None = None) -> dict:
 
 
 def _write_metadata(table: str, meta: dict, version: int) -> None:
+    """Publish ``meta`` as metadata ``version`` and move the hint to it —
+    the one metadata version bump. It stamps ``last-updated-ms`` and logs
+    the version it replaces in ``metadata-log`` (with that version's own
+    timestamp, as the spec's log records it), so every caller hands in
+    the previous metadata with only its own change applied."""
+    now_ms = int(time.time() * 1000)
+    log = list(meta.get("metadata-log", []))
+    if version > 1:
+        log.append({
+            "timestamp-ms": meta.get("last-updated-ms", now_ms),
+            "metadata-file": os.path.join("metadata", f"v{version - 1}.metadata.json"),
+        })
+    meta = dict(meta, **{"last-updated-ms": now_ms, "metadata-log": log})
     md = _meta_dir(table)
     body = json.dumps(meta, indent=1, sort_keys=True).encode()
     try:
@@ -920,20 +944,20 @@ def _apply_partition_exprs(
 
 
 def _stage_partitioned(
-    frame: DataFrame, table: str, meta: dict, spec_fields: list[dict]
+    frame: DataFrame, table: str, meta: dict
 ) -> tuple[list, list[str]]:
-    """Stage a DML result frame under the table's (possibly transform-)
-    partition spec, deriving hidden-partition columns exactly as the
-    original write did — under PHYSICAL column names (renames never touch
-    files or dirs). Returns (staged files, partition field names)."""
-    field_types = _field_types(meta)
+    """Stage a frame of the table's logical rows (a write's frame, DML's
+    new rows, an upsert's source) under ``meta``'s default (possibly
+    transform-) partition spec, deriving hidden-partition columns — under
+    PHYSICAL column names (renames never touch files or dirs). Returns
+    (staged files, partition field names)."""
     frame = _to_physical_frame(frame, meta)
     phys = _physical_names(meta)
     fid_to_phys = {
         f["id"]: phys[f["name"]] for f in _schema_by_id(meta)["fields"]
     }
     frame, part_names = _apply_partition_exprs(
-        frame, spec_fields, field_types, fid_to_phys
+        frame, _partition_spec(meta), _field_types(meta), fid_to_phys
     )
     return tablefiles.stage(frame, table, "data", part_names), part_names
 
@@ -1097,7 +1121,6 @@ def _write_manifest(
     stem, ext = os.path.splitext(filename)
     filename = f"{stem}-{uuid.uuid4().hex[:8]}{ext}"
     manifest_path = os.path.join(os.path.abspath(table), "metadata", filename)
-    os.makedirs(os.path.dirname(manifest_path), exist_ok=True)
     avro_lite.write_ocf(
         manifest_path,
         _manifest_schema(spec_fields, field_types),
@@ -1152,6 +1175,336 @@ def _rows_in(manifests: list[dict], content: int) -> int:
     )
 
 
+def _next_ids(meta: dict) -> tuple[int, int]:
+    seq = meta["last-sequence-number"] + 1
+    snap_id = max((s["snapshot-id"] for s in meta.get("snapshots", [])), default=0) + 1
+    return seq, snap_id
+
+
+def _layout(meta: dict) -> tuple:
+    """What a commit's files were staged under: the table (its uuid), its
+    current schema id, its default spec id and how many specs it has (a
+    spec minted since, even if no longer the default, would clash with a
+    spec this commit mints). A retry must find the same tuple."""
+    return (
+        meta["table-uuid"],
+        meta["current-schema-id"],
+        meta.get("default-spec-id"),
+        len(meta["partition-specs"]),
+    )
+
+
+def _finish_commit(
+    table: str,
+    version: int | None,
+    meta: dict,
+    operation: str,
+    staged_data: list,
+    part_cols: list[str],
+    staged_del: list = (),
+    equality_ids: list[int] | None = None,
+    changes: dict | None = None,
+    revalidate=None,
+    row_level: bool = False,
+    retries: int = 3,
+) -> int:
+    """Commit staged files as ONE snapshot on top of metadata ``version``
+    (``meta``; None for a table this commit creates) — the one snapshot
+    commit every Iceberg write goes through: ``write_iceberg``'s append,
+    overwrite, create and replace, the DML statements and
+    ``upsert_by_key``. Returns the new snapshot id.
+
+    The commit's own manifests are a data manifest for ``staged_data``
+    (hive partition dirs ``part_cols``) and a delete manifest for
+    ``staged_del`` — position deletes, or equality deletes on
+    ``equality_ids`` — each only when non-empty, stamped with the schema
+    and default spec of ``meta`` updated by ``changes`` (a write's adopted
+    or minted spec), i.e. the layout the files were staged under. An
+    ``append`` and every ``row_level`` commit (DML, upsert) carry the
+    parent's manifests forward, delete manifests included; ``overwrite``
+    and ``replace`` reference only their own. The summary's two delete
+    totals are tracked apart: position-delete rows subtract 1:1 from
+    total-records (the ``replace`` guard's arithmetic), while an
+    equality-delete KEY may kill 0..N rows, so its total only signals
+    that logical cardinality is no longer metadata-derivable. A carrying
+    commit adds its deletes to the parent's totals; the others reset them.
+
+    Optimistic concurrency (spec §Optimistic Concurrency): losing the
+    put-if-absent on the metadata version reloads the table and retries,
+    up to ``retries`` times, METADATA-ONLY — the staged files stay where
+    they landed; only the manifests, the manifest list and the metadata
+    JSON are rebuilt under fresh ids on top of the new base. A retry
+    first runs ``revalidate(fresh_meta)`` (a write re-checks its frame, so
+    it fails as a write made after the concurrent change would), then one
+    rule: it must find the ``_layout`` the files were staged under — a
+    concurrent schema or partition-spec change makes the staged files'
+    layout a lie, so it is a typed conflict. Per operation on top of it:
+
+    - ``append``, ``overwrite``: rebase over any snapshot;
+    - DML and upsert (``row_level``): rebase only over ``append``
+      snapshots — a concurrent DML or overwrite may have touched the rows
+      this commit scanned. Under an interleaved append the retried commit
+      keeps snapshot isolation: the appended rows were not scanned, so a
+      predicate DELETE does not cover them, while an equality delete
+      re-sequenced ABOVE the append covers its keys (CDC last-writer-wins,
+      what a re-run would produce);
+    - ``replace``: never retries — its data-unchanged claim was made
+      against a parent that just moved.
+
+    No retry either when the hint did not advance: that is an ORPHAN
+    metadata file from a crashed writer (see ``recover_orphan_metadata``),
+    and retrying would recompute the same version forever. Whenever the
+    commit does not land, every file it published is removed again
+    (``_unpublish_commit_files``)."""
+    changes = changes or {}
+    staged_layout = _layout(meta)
+    target = dict(meta, **changes)
+    spec_fields = _partition_spec(target)
+    schema_json = _schema_by_id(target)
+    field_types = _field_types(target)
+    name_to_field = _phys_name_to_field(target, schema_json)
+    carries = row_level or operation == "append"
+    n_del = sum(stats["numRecords"] for _rel, _size, stats in staged_del)
+
+    def own_manifests(seq: int, snap_id: int) -> list[dict]:
+        groups = []
+        if staged_data:
+            groups.append((0, _data_entries(
+                table, staged_data, part_cols, spec_fields, field_types,
+                name_to_field, snap_id,
+            )))
+        if staged_del:
+            groups.append(
+                (1, _delete_entries(table, staged_del, spec_fields, snap_id, equality_ids))
+            )
+        return [
+            _write_manifest(
+                table, f"m-{snap_id}-{i}.avro", entries, spec_fields, field_types,
+                target["default-spec-id"], schema_json, seq, snap_id, content=content,
+            )
+            for i, (content, entries) in enumerate(groups)
+        ]
+
+    os.makedirs(_meta_dir(table), exist_ok=True)
+    list_path, own = None, []
+    try:
+        for attempt in range(retries + 1):
+            seq, snap_id = _next_ids(meta)
+            own = own_manifests(seq, snap_id)
+            parent = next(
+                (s for s in meta.get("snapshots", [])
+                 if s["snapshot-id"] == meta.get("current-snapshot-id")),
+                None,
+            )
+            psum = parent["summary"] if parent else {}
+            carried = []
+            if carries and parent is not None:
+                _, carried = avro_lite.read_ocf(_resolve(table, parent["manifest-list"]))
+            added_rows = _rows_in(own, content=0)
+            if operation == "replace":
+                # a replace claims "same LOGICAL rows, different files" and
+                # the streaming tail SKIPS it on that claim — hold the
+                # writer to it. Logical = physical data rows minus
+                # outstanding POSITION deletes (1:1 by construction);
+                # outstanding EQUALITY deletes make logical cardinality
+                # metadata-underivable (a key kills 0..N rows), so the
+                # guard stands down there — the lifecycle fuzzer
+                # model-checks compaction row preservation instead
+                # (tests/test_iceberg_lifecycle_fuzz.py).
+                expect = int(psum.get("total-records", -1))
+                if expect >= 0:
+                    expect -= int(psum.get("total-position-deletes", 0))
+                if int(psum.get("total-equality-deletes", 0)) > 0:
+                    expect = -1
+                if expect >= 0 and expect != added_rows:
+                    raise ValueError(
+                        f"replace (compaction) must not change data: parent "
+                        f"snapshot holds {expect} logical rows, rewrite holds "
+                        f"{added_rows}; use mode='overwrite' for a data change"
+                    )
+            debt = psum if carries else {}
+            list_path = _write_manifest_list(table, snap_id, carried + own)
+            now_ms = int(time.time() * 1000)
+            snapshot = {
+                "snapshot-id": snap_id,
+                "sequence-number": seq,
+                "timestamp-ms": now_ms,
+                "manifest-list": list_path,
+                "schema-id": target["current-schema-id"],
+                "summary": {
+                    # "replace" = a rewrite that changes no data
+                    # (compaction): the streaming tail skips it the way
+                    # delta_lite_stream skips dataChange=false commits
+                    "operation": operation,
+                    "added-data-files": str(len(staged_data)),
+                    "added-records": str(added_rows),
+                    "total-records": str(_rows_in(carried + own, content=0)),
+                    "total-position-deletes": str(
+                        int(debt.get("total-position-deletes", 0))
+                        + (n_del if equality_ids is None else 0)
+                    ),
+                    "total-equality-deletes": str(
+                        int(debt.get("total-equality-deletes", 0))
+                        + (0 if equality_ids is None else n_del)
+                    ),
+                },
+            }
+            # spec: every snapshot but the first records its parent — the
+            # streaming tail tells a mid-history rewrite from the
+            # parentless initial load by it
+            if parent is not None:
+                snapshot["parent-snapshot-id"] = parent["snapshot-id"]
+            new_meta = dict(
+                meta,
+                **changes,
+                **{
+                    "last-sequence-number": seq,
+                    "current-snapshot-id": snap_id,
+                    "snapshots": meta.get("snapshots", []) + [snapshot],
+                    "snapshot-log": meta.get("snapshot-log", [])
+                    + [{"timestamp-ms": now_ms, "snapshot-id": snap_id}],
+                },
+            )
+            try:
+                _write_metadata(table, new_meta, (version or 0) + 1)
+                return snap_id
+            except IcebergCommitConflict:
+                fresh = _current_version(table)
+                if fresh == version:
+                    raise  # an orphan, not a race (docstring)
+                if operation == "replace":
+                    raise IcebergCommitConflict(
+                        f"{table}: commit lost the race and replace "
+                        f"(compaction) does not retry — its data-unchanged "
+                        f"claim was made against a parent that just moved; "
+                        f"re-run compact_iceberg"
+                    ) from None
+                if attempt == retries:
+                    raise IcebergCommitConflict(
+                        f"{table}: commit lost the race {retries + 1} times; "
+                        f"giving up"
+                    ) from None
+            base_seq = meta["last-sequence-number"]
+            meta, version = load_metadata(table, fresh), fresh
+            if revalidate is not None:
+                revalidate(meta)
+            if _layout(meta) != staged_layout:
+                raise IcebergCommitConflict(
+                    f"{table}: the table changed under this {operation} "
+                    f"(table, schema id, default spec id, spec count "
+                    f"{staged_layout[1:]} -> {_layout(meta)[1:]}): its files "
+                    f"were staged under the old layout; re-run the operation"
+                )
+            clash = [
+                s["snapshot-id"]
+                for s in meta.get("snapshots", [])
+                if row_level
+                and s["sequence-number"] > base_seq
+                and s["summary"]["operation"] != "append"
+            ]
+            if clash:
+                raise IcebergCommitConflict(
+                    f"{table}: concurrent non-append snapshot(s) {clash} "
+                    f"committed since this {operation} scanned the table — "
+                    f"the rows it targeted may have changed; reload and "
+                    f"re-run the operation"
+                )
+            # rebase: drop THIS attempt's manifests and list only; the
+            # staged files stay
+            _unpublish_commit_files(table, [], list_path, own)
+            list_path, own = None, []
+    except BaseException:
+        _unpublish_commit_files(table, [*staged_data, *staged_del], list_path, own)
+        raise
+
+
+def _unpublish_commit_files(
+    table: str, staged: list, list_path: str | None, own: list[dict]
+) -> None:
+    """Remove what a commit that did not land published: the ``staged``
+    data and delete files, its own manifests and its manifest list (files
+    already gone are fine). No committed metadata version references any
+    of them — the put-if-absent failed or never ran — and nothing else
+    would ever reclaim them (``expire_snapshots`` only removes files that
+    expired snapshots referenced)."""
+    tablefiles.unpublish(table, staged)
+    paths = [m["manifest_path"] for m in own] + ([list_path] if list_path else [])
+    for path in paths:
+        with contextlib.suppress(OSError):
+            os.unlink(path)
+
+
+def _first_metadata(table: str, schema: T.StructType) -> dict:
+    """The metadata a create commits on top of: a fresh table uuid and
+    field ids, no spec (the write adopts or mints it), no snapshot."""
+    ice = _iceberg_schema(schema)
+    return {
+        "format-version": 2,
+        "table-uuid": str(uuid.UUID(bytes=os.urandom(16), version=4)),
+        "location": os.path.abspath(table),
+        "last-sequence-number": 0,
+        "last-column-id": ice.pop("_last_column_id"),
+        "schemas": [ice],
+        "current-schema-id": ice["schema-id"],
+        "partition-specs": [],
+        "last-partition-id": 999,
+        "sort-orders": [{"order-id": 0, "fields": []}],
+        "default-sort-order-id": 0,
+        "properties": {},
+    }
+
+
+def _conform(df: DataFrame, meta: dict, mode: str) -> DataFrame:
+    """``df`` in the column order of the table's current schema, or a loud
+    error when its columns differ: reusing the table's field ids keeps
+    bounds/stats keys and old snapshots coherent, so a shape change goes
+    through add_column (or a new location), never a silent re-numbering."""
+    expected = {f.name: f.dataType for f in _spark_schema(meta).fields}
+    incoming = {f.name: f.dataType for f in df.schema.fields}
+    if incoming != expected:
+        if mode == "append":
+            raise ValueError(
+                f"append schema mismatch: table {expected} vs frame {incoming}"
+            )
+        raise NotImplementedError(
+            f"overwrite with a different schema (table {expected}, frame "
+            f"{incoming}): evolve via add_column or write a new table"
+        )
+    return df.select(*expected)
+
+
+def _spec_terms(meta: dict, partition_cols: list[str] | None) -> list[tuple]:
+    """Partition terms — ``days(ts)``, ``bucket(8, id)``, ``truncate(2,
+    s)`` or plain identity columns — as the spec tuple ``[(field name,
+    transform, source-id), ...]`` under the table's current schema, with
+    every check made before any file lands. Spec field names use the
+    source column's PHYSICAL name: hive dirs and the files' own columns
+    share it, so renames never move directories, and a spec created
+    before a rename keeps matching (spec identity compares the tuple)."""
+    schema_json = _schema_by_id(meta)
+    name_to_id = {f["name"]: f["id"] for f in schema_json["fields"]}
+    field_types = _field_types(meta)
+    phys = _physical_names(meta, schema_json)
+    want = []
+    for t, src in (_parse_partition_term(c) for c in partition_cols or []):
+        if src not in name_to_id:
+            raise KeyError(f"partition column {src!r} not in schema")
+        # loud unsupported-transform/type check
+        _avro_partition_type(_transform_result_type(t, field_types[name_to_id[src]]))
+        want.append((_partition_field_name(t, phys[src]), t, name_to_id[src]))
+    names = [n for n, _t, _sid in want]
+    if len(set(names)) != len(names):
+        # two same-base transforms of one column share the default field
+        # name — the second derived column would silently overwrite the
+        # first's values while the spec claims both transforms
+        dupes = sorted({n for n in names if names.count(n) > 1})
+        raise ValueError(
+            f"partition terms collide on derived field name(s) {dupes}: "
+            f"at most one transform per (kind, column) is supported"
+        )
+    return want
+
+
 def write_iceberg(
     df: DataFrame,
     table: str,
@@ -1166,372 +1519,54 @@ def write_iceberg(
     time travel to them still works — the manifest list is authoritative
     for a snapshot's content per spec §Snapshots). ``append`` carries the
     previous snapshot's manifest_file records forward unchanged (their
-    sequence numbers are theirs) and adds one new manifest.
+    sequence numbers are theirs) and adds one new manifest. ``replace``
+    is compaction's overwrite: it must keep the parent's logical rows.
 
-    Losing the put-if-absent race retries automatically up to
-    ``commit_retries`` times (VERDICT r10 ask #3 — spec-conformant
-    optimistic concurrency: append/append never truly conflicts). Retry is
-    METADATA-ONLY: the staged data files stay where they landed, and only
-    the manifest, manifest list and metadata JSON are rebuilt against the
-    reloaded table — re-validated per mode (schema and, for append, the
-    partition spec must still match; ``replace`` never retries, because
-    its data-unchanged claim was made against a parent that just moved).
-    """
+    What is decided here is only what a write decides: the frame checked
+    against the table, a new table's first metadata, and the partition
+    spec — an append adopts the table's; the other modes reuse a spec
+    with the same ``(name, transform, source-id)`` fields or mint a new
+    spec id, so older snapshots' manifests keep resolving their own
+    partition fields. The data lands ONCE (``_stage_partitioned``); the
+    snapshot is committed by ``_finish_commit``, whose put-if-absent
+    losses retry up to ``commit_retries`` times, metadata-only, by its one
+    rule: the retry must find the schema and default spec the files were
+    staged under (a concurrent add_column fails the frame check first).
+    ``append`` and ``overwrite`` rebase over anything else; ``replace``
+    never retries."""
     if mode not in ("overwrite", "append", "replace"):
         raise ValueError(f"mode {mode!r}: overwrite|append|replace")
-    if mode == "replace" and _current_version(table) is None:
-        raise ValueError("replace (compaction commit) needs an existing table")
-    # terms accept hidden-partitioning transforms — "days(ts)",
-    # "bucket(8, id)", "truncate(2, s)" — alongside plain identity columns
-    user_terms = [_parse_partition_term(c) for c in (partition_cols or [])]
-    staged = None  # data files land ONCE; retries rebuild metadata only
-    stage_want = None  # the spec tuple the staged hive layout was built for
-    retries_left = commit_retries
-    while True:
-        try:
-            snap_or_conflict = _write_iceberg_attempt(
-                df, table, mode, user_terms, staged, stage_want
-            )
-        except BaseException:
-            # a RETRY attempt that raises during re-validation against the
-            # reloaded table (e.g. append after a concurrent add_column →
-            # schema ValueError) must not strand the first attempt's staged
-            # parquet: nothing references it and there is no orphan reclaim
-            # (VERDICT r11 #4). The spec-change conflict path inside the
-            # attempt already unlinks; double-unlink is a suppressed no-op.
-            if staged is not None:
-                tablefiles.unpublish(table, staged)
-            raise
-        if snap_or_conflict[0] == "ok":
-            return snap_or_conflict[1]
-        # conflict: (kind, list_path, new_manifest_path, staged, stage_want)
-        _k, list_path, man_path, staged, stage_want = snap_or_conflict
-        if mode == "replace" or retries_left <= 0:
-            _unpublish_commit_files(table, list_path, [man_path])
-            raise IcebergCommitConflict(
-                f"{table}: commit lost the race"
-                + (
-                    " and replace (compaction) does not retry — its "
-                    "data-unchanged claim was made against a parent that "
-                    "just moved; re-run compact_iceberg"
-                    if mode == "replace"
-                    else f" {commit_retries + 1} times; giving up"
-                )
-            )
-        # metadata-only retry: drop this attempt's manifest + list, keep
-        # the staged data files, rebuild against the reloaded table
-        with contextlib.suppress(OSError):
-            os.unlink(man_path)
-        with contextlib.suppress(OSError):
-            os.unlink(_resolve(table, list_path))
-        retries_left -= 1
-
-
-def _write_iceberg_attempt(
-    df: DataFrame,
-    table: str,
-    mode: str,
-    user_terms: list[tuple[str, str]],
-    staged,
-    stage_want,
-):
-    """One optimistic attempt: load the pinned table state, validate,
-    stage data files if not already staged, assemble manifests + metadata,
-    put-if-absent. Returns ``("ok", snap_id)`` on success or
-    ``("conflict", list_path, manifest_path, staged, stage_want)`` when
-    the metadata publish lost the race (published data files intact)."""
-    partition_terms: list[tuple[str, str]] | None = list(user_terms)
-    now_ms = int(time.time() * 1000)
     version = _current_version(table)
-    exists = version is not None
-    # load the PINNED version, not a re-read of the hint (r10 TOCTOU)
-    meta = load_metadata(table, version) if exists else None
-
-    if exists and mode == "append":
-        spec_nt = [
-            (pf["name"], pf["transform"]) for pf in _partition_spec(meta)
-        ]
-        # spec field names are PHYSICAL; user terms come in LOGICAL — map
-        # before comparing, like the overwrite path's `want` does (review
-        # r12 #3: an explicit-terms append after renaming the partition
-        # source would otherwise spuriously fail the identity check)
-        lphys = _physical_names(meta)
-        want_nt = [
-            (_partition_field_name(t, lphys.get(src, src)), t)
-            for t, src in partition_terms
-        ]
-        if want_nt and want_nt != spec_nt:
-            raise ValueError(
-                f"append partition spec {want_nt} != table spec {spec_nt}"
-            )
-        partition_terms = None  # append always adopts the table's own spec
-        table_schema = _spark_schema(meta)
-        incoming = {f.name: f.dataType for f in df.schema.fields}
-        expected = {f.name: f.dataType for f in table_schema.fields}
-        if incoming != expected:
-            raise ValueError(
-                f"append schema mismatch: table {expected} vs frame {incoming}"
-            )
-        df = df.select(*[f.name for f in table_schema.fields])
-        schema_json = _schema_by_id(meta)  # append always uses the CURRENT schema
-        last_column_id = meta["last-column-id"]
-        table_uuid = meta["table-uuid"]
-        parent_id = meta.get("current-snapshot-id")
-    elif exists:  # overwrite of an existing table
-        table_schema = _spark_schema(meta)
-        incoming = {f.name: f.dataType for f in df.schema.fields}
-        expected = {f.name: f.dataType for f in table_schema.fields}
-        if incoming != expected:
-            # reusing the table's field ids keeps bounds/stats keys and old
-            # snapshots coherent; a shape change must go through add_column
-            # (or a new location) rather than silently re-numbering ids
-            raise NotImplementedError(
-                f"overwrite with a different schema (table {expected}, frame "
-                f"{incoming}): evolve via add_column or write a new table"
-            )
-        df = df.select(*[f.name for f in table_schema.fields])
-        schema_json = _schema_by_id(meta)
-        last_column_id = meta["last-column-id"]
-        table_uuid = meta["table-uuid"]
-        # spec: replace/overwrite snapshots record their parent too — and
-        # the streaming tail relies on it to tell a mid-history rewrite
-        # from the parentless initial load
-        parent_id = meta.get("current-snapshot-id")
+    if version is None:
+        if mode == "replace":
+            raise ValueError("replace (compaction commit) needs an existing table")
+        meta = _first_metadata(table, df.schema)
     else:
-        ice = _iceberg_schema(df.schema)
-        last_column_id = ice.pop("_last_column_id")
-        schema_json = ice
-        table_uuid = str(uuid.UUID(bytes=os.urandom(16), version=4))
-        parent_id = None
-    version = version or 0
-    prev_snaps = meta.get("snapshots", []) if meta else []
-    seq = (meta["last-sequence-number"] + 1) if meta else 1
-    snap_id = (max((s["snapshot-id"] for s in prev_snaps), default=0)) + 1
-
-    name_to_id = {f["name"]: f["id"] for f in schema_json["fields"]}
-    field_types = {
-        f["id"]: f["type"] for f in schema_json["fields"] if isinstance(f["type"], str)
-    }
-    # logical -> physical parquet names (identity until the first
-    # rename_column; a new table trivially has no mapping)
-    phys = (
-        _physical_names(meta, schema_json)
-        if meta
-        else {f["name"]: f["name"] for f in schema_json["fields"]}
-    )
-    if partition_terms is None:  # append: adopt the table's spec verbatim
-        want = [
-            (pf["name"], pf["transform"], pf["source-id"])
-            for pf in _partition_spec(meta)
-        ]
+        # the PINNED version, not a re-read of the hint (r10 TOCTOU)
+        meta = load_metadata(table, version)
+        df = _conform(df, meta, mode)
+    want = _spec_terms(meta, partition_cols)
+    changes: dict = {}
+    if mode == "append" and version is not None:
+        spec = [(pf["name"], pf["transform"], pf["source-id"]) for pf in _partition_spec(meta)]
+        if want and want != spec:
+            raise ValueError(f"append partition spec {want} != table spec {spec}")
     else:
-        for t, src in partition_terms:
-            if src not in name_to_id:
-                raise KeyError(f"partition column {src!r} not in schema")
-            # loud unsupported-transform/type check before any file lands
-            _avro_partition_type(
-                _transform_result_type(t, field_types[name_to_id[src]])
-            )
-        # spec field names use the PHYSICAL source name: hive dirs and the
-        # files' own columns share it, so renames never move directories —
-        # and a spec created before a rename keeps matching (spec identity
-        # compares (name, transform, source-id))
-        want = [
-            (_partition_field_name(t, phys[src]), t, name_to_id[src])
-            for t, src in partition_terms
-        ]
-        names = [n for n, _t, _sid in want]
-        if len(set(names)) != len(names):
-            # two same-base transforms of one column share the default
-            # field name — the second derived column would silently
-            # overwrite the first's values while the spec claims both
-            # transforms (review r11 #6)
-            dupes = sorted({n for n in names if names.count(n) > 1})
-            raise ValueError(
-                f"partition terms collide on derived field name(s) {dupes}: "
-                f"at most one transform per (kind, column) is supported"
-            )
-
-    # partition-spec identity: reuse a prior spec when (name, transform,
-    # source-id) match — an overwrite that REPARTITIONS the table gets a new
-    # spec-id instead of clobbering spec 0, so older snapshots' manifests
-    # keep resolving their own partition fields (time travel would otherwise
-    # silently lose the hive-dir column rederivation)
-    prev_specs = list(meta["partition-specs"]) if meta else []
-    prev_last_pid = meta["last-partition-id"] if meta else 999
-    spec_id, spec_fields, prev_specs, last_partition_id = _match_or_mint_spec(
-        prev_specs, prev_last_pid, want
-    )
-
-    # --- data files (once — retries reuse the already-landed parquet) -----
-    part_names = [n for n, _t, _sid in want]
-    if staged is None:
-        from pyspark.sql import functions as F
-
-        if any(phys.get(c, c) != c for c in df.columns):
-            df = df.select(*[F.col(c).alias(phys.get(c, c)) for c in df.columns])
-        fid_to_phys = {name_to_id[k]: v for k, v in phys.items()}
-        df_part, part_names = _apply_partition_exprs(
-            df, spec_fields, field_types, fid_to_phys
+        spec_id, _fields, specs, last_pid = _match_or_mint_spec(
+            meta["partition-specs"], meta["last-partition-id"], want
         )
-        staged = tablefiles.stage(df_part, table, "data", part_names)
-        stage_want = want
-    elif want != stage_want:
-        # the table's spec changed under the retry: the staged hive layout
-        # no longer matches — clean up and surface a true conflict
-        tablefiles.unpublish(table, staged)
-        raise IcebergCommitConflict(
-            f"{table}: partition spec changed concurrently "
-            f"({stage_want} -> {want}); staged layout invalid — re-run the write"
-        )
-
-    # --- manifest ---------------------------------------------------------
-    # footer stats are keyed by the names IN the files (physical)
-    name_to_field = {
-        phys[f["name"]]: (f["id"], f["type"])
-        for f in schema_json["fields"]
-        if isinstance(f["type"], str)
-    }
-    entries = _data_entries(
-        table, staged, part_names, spec_fields, field_types, name_to_field, snap_id
+        changes = {
+            "partition-specs": specs,
+            "default-spec-id": spec_id,
+            "last-partition-id": last_pid,
+        }
+    staged, part_cols = _stage_partitioned(df, table, dict(meta, **changes))
+    return _finish_commit(
+        table, version, meta, mode, staged, part_cols,
+        changes=changes,
+        revalidate=lambda fresh: _conform(df, fresh, mode),
+        retries=commit_retries,
     )
-    new_manifest = _write_manifest(
-        table, f"m-{snap_id}-0.avro", entries, spec_fields, field_types,
-        spec_id, schema_json, seq, snap_id, content=0,
-    )
-    manifests = [new_manifest]
-    if mode == "append" and parent_id is not None:
-        parent = next(s for s in prev_snaps if s["snapshot-id"] == parent_id)
-        _, carried = avro_lite.read_ocf(
-            _resolve(table, parent["manifest-list"])
-        )
-        manifests = carried + manifests
-    list_path = _write_manifest_list(table, snap_id, manifests)
-
-    # --- table metadata ---------------------------------------------------
-    added_rows = new_manifest["added_rows_count"]
-    parent_snap = next(
-        (s for s in prev_snaps if s["snapshot-id"] == parent_id), None
-    )
-    psum = (parent_snap or {}).get("summary", {})
-    if mode == "replace":
-        # a replace claims "same LOGICAL rows, different files" and the
-        # streaming tail SKIPS it on that claim — hold the writer to it.
-        # Logical = physical data rows minus outstanding POSITION deletes
-        # (1:1 by construction); outstanding EQUALITY deletes make logical
-        # cardinality metadata-underivable (a key kills 0..N rows), so the
-        # guard stands down there — the lifecycle fuzzer model-checks
-        # compaction row preservation instead (tests/test_iceberg_
-        # lifecycle_fuzz.py).
-        expect = int(psum.get("total-records", -1))
-        if expect >= 0:
-            expect -= int(psum.get("total-position-deletes", 0))
-        if int(psum.get("total-equality-deletes", 0)) > 0:
-            expect = -1
-        if expect >= 0 and expect != added_rows:
-            raise ValueError(
-                f"replace (compaction) must not change data: parent snapshot "
-                f"holds {expect} logical rows, rewrite holds {added_rows}; "
-                f"use mode='overwrite' for a data change"
-            )
-    total_rows = _rows_in(manifests, content=0)
-    # delete-debt totals: an append carries the parent's debt verbatim
-    # (its delete manifests travel in the manifest list); overwrite and
-    # replace reference only their own new data manifest — debt resets
-    carries_debt = mode == "append" and parent_snap is not None
-    snapshot = {
-        "snapshot-id": snap_id,
-        "sequence-number": seq,
-        "timestamp-ms": now_ms,
-        "manifest-list": list_path,
-        "schema-id": schema_json["schema-id"],
-        "summary": {
-            # "replace" = a rewrite that changes no data (compaction): the
-            # streaming tail skips it the way delta_lite_stream skips
-            # dataChange=false commits
-            "operation": mode,
-            "added-data-files": str(len(entries)),
-            "added-records": str(added_rows),
-            "total-records": str(total_rows),
-            "total-position-deletes": (
-                psum.get("total-position-deletes", "0") if carries_debt else "0"
-            ),
-            "total-equality-deletes": (
-                psum.get("total-equality-deletes", "0") if carries_debt else "0"
-            ),
-        },
-    }
-    if parent_id is not None:
-        snapshot["parent-snapshot-id"] = parent_id
-    new_meta = {
-        "format-version": 2,
-        "table-uuid": table_uuid,
-        "location": os.path.abspath(table),
-        "last-sequence-number": seq,
-        "last-updated-ms": now_ms,
-        "last-column-id": last_column_id,
-        # evolution keeps every schema-id a live snapshot may reference
-        "schemas": (
-            (meta.get("schemas", []) if meta else [])
-            + ([schema_json] if not (meta and any(
-                s["schema-id"] == schema_json["schema-id"] for s in meta["schemas"]
-            )) else [])
-        ),
-        "current-schema-id": schema_json["schema-id"],
-        "partition-specs": prev_specs,
-        "default-spec-id": spec_id,
-        "last-partition-id": last_partition_id,
-        "sort-orders": [{"order-id": 0, "fields": []}],
-        "default-sort-order-id": 0,
-        # properties CARRY OVER (review r10 #1): expire_snapshots records
-        # the harmless expired-replace sequence numbers here; a fresh {}
-        # on the next append would wipe that record and wedge a healthy
-        # stream tail on the retention-gap check
-        "properties": dict(meta.get("properties", {})) if meta else {},
-        "current-snapshot-id": snap_id,
-        "snapshots": prev_snaps + [snapshot],
-        "snapshot-log": (
-            (meta.get("snapshot-log", []) if meta else [])
-            + [{"timestamp-ms": now_ms, "snapshot-id": snap_id}]
-        ),
-        "metadata-log": (
-            (meta.get("metadata-log", []) if meta else [])
-            + (
-                [
-                    {
-                        "timestamp-ms": now_ms,
-                        "metadata-file": os.path.join(
-                            "metadata", f"v{version}.metadata.json"
-                        ),
-                    }
-                ]
-                if exists
-                else []
-            )
-        ),
-    }
-    try:
-        _write_metadata(table, new_meta, (version or 0) + 1)
-    except IcebergCommitConflict:
-        if _current_version(table) == version:
-            # the hint did NOT advance: not a racing commit but an ORPHAN
-            # metadata file from a crashed writer — retrying recomputes the
-            # same version forever; unpublish and surface the recovery path
-            _unpublish_commit_files(
-                table, list_path, [_resolve(table, new_manifest["manifest_path"])]
-            )
-            raise
-        # a real race: hand it back to write_iceberg's retry loop, which
-        # either rebuilds metadata against the reloaded table or — out of
-        # retries — unpublishes what only this writer created (ADVICE r10 #2)
-        return (
-            "conflict",
-            list_path,
-            _resolve(table, new_manifest["manifest_path"]),
-            staged,
-            stage_want,
-        )
-    return ("ok", snap_id)
 
 
 # ---------------------------------------------------------------------------
@@ -2320,57 +2355,20 @@ def iceberg_table_changes(
 _POS_DELETE_SCHEMA = "file_path string, pos long"
 
 
-def _next_ids(meta: dict) -> tuple[int, int]:
-    seq = meta["last-sequence-number"] + 1
-    snap_id = max((s["snapshot-id"] for s in meta.get("snapshots", [])), default=0) + 1
-    return seq, snap_id
-
-
-def _carried_manifests(table: str, meta: dict) -> list[dict]:
-    """The current snapshot's full manifest list (data AND delete
-    manifests), carried forward verbatim into a child commit."""
-    current = meta.get("current-snapshot-id")
-    snap = next(
-        (s for s in meta.get("snapshots", []) if s["snapshot-id"] == current), None
-    )
-    if snap is None:
-        return []
-    _, manifests = avro_lite.read_ocf(_resolve(table, snap["manifest-list"]))
-    return manifests
-
-
-def _stage_delete_files(
-    frame: DataFrame, table: str, subdir: str
-) -> list[tuple[str, int, int]]:
-    """Stage a small unpartitioned delete frame under ``table/subdir``,
-    one file per non-empty task (the Iceberg runtime's write shape; the
-    frame never touches the driver). Returns (abs path, size, record
-    count) per published file."""
-    return [
-        (os.path.join(table, rel), size, stats["numRecords"])
-        for rel, size, stats in tablefiles.stage(frame, table, subdir)
-    ]
-
-
-def _stage_pos_delete_files(
-    hits: DataFrame, table: str, snap_id: int
-) -> list[tuple[str, int, int]]:
-    """Position delete files: ``(file_path, pos)`` rows sorted within each
-    task's file as the spec requires."""
-    return _stage_delete_files(
-        hits.sortWithinPartitions("file_path", "pos"),
-        table,
-        os.path.join("data", f"deletes-{snap_id}"),
-    )
-
-
-def _pos_delete_entries(
-    staged: list[tuple[str, int, int]], spec_fields: list[dict], snap_id: int
+def _delete_entries(
+    table: str,
+    staged: list,
+    spec_fields: list[dict],
+    snap_id: int,
+    equality_ids: list[int] | None = None,
 ) -> list[dict]:
-    """Position-delete files → ADDED manifest_entry records. The partition
-    tuple is all-null: lite position deletes are written table-global (they
-    match by exact file path), and ``plan_scan`` never partition-prunes
-    delete manifests, so null tuples cannot resurrect rows."""
+    """Delete files → ADDED manifest_entry records: position deletes, or
+    equality deletes (content=2) carrying the spec's ``equality_ids``
+    (field 135) so readers know which columns the keys match on. The
+    partition tuple is all-null: lite delete files are written
+    table-global (they match by exact file path or by key), and
+    ``plan_scan`` never partition-prunes delete manifests, so null tuples
+    cannot resurrect rows."""
     return [
         {
             "status": 1,
@@ -2378,189 +2376,21 @@ def _pos_delete_entries(
             "sequence_number": None,
             "file_sequence_number": None,
             "data_file": {
-                "content": 1,  # POSITION_DELETES
-                "file_path": path,
+                # POSITION_DELETES | EQUALITY_DELETES
+                "content": 1 if equality_ids is None else 2,
+                "file_path": os.path.join(os.path.abspath(table), rel),
                 "file_format": "PARQUET",
                 "partition": {pf["name"]: None for pf in spec_fields},
-                "record_count": n,
+                "record_count": stats["numRecords"],
                 "file_size_in_bytes": size,
-                "equality_ids": None,
+                "equality_ids": None if equality_ids is None else list(equality_ids),
                 "null_value_counts": None,
                 "lower_bounds": None,
                 "upper_bounds": None,
             },
         }
-        for path, size, n in staged
+        for rel, size, stats in staged
     ]
-
-
-def _finish_commit(
-    table: str,
-    meta: dict,
-    version: int,
-    seq: int,
-    snap_id: int,
-    manifests: list[dict],
-    operation: str,
-    added_files: int,
-    added_records: int,
-    pos_deletes_added: int = 0,
-    eq_deletes_added: int = 0,
-    rebuild=None,
-    retries: int = 3,
-) -> int:
-    """Write the manifest list, snapshot record and new metadata version
-    for a DML commit (manifests already written under ``seq``/``snap_id``).
-    Schemas, partition specs and properties carry over unchanged — DML
-    never evolves the table shape. The two delete totals are tracked
-    SEPARATELY in the summary: position-delete rows subtract 1:1 from
-    total-records to give logical rows (the replace guard's arithmetic),
-    while an equality-delete KEY may kill 0..N rows, so its total only
-    signals that logical cardinality is no longer metadata-derivable.
-
-    Optimistic retry (VERDICT r10 ask #3): when ``rebuild`` is given and
-    the put-if-absent loses, reload the table, RE-VALIDATE — every
-    intervening snapshot must be an ``append``; a concurrent DML/overwrite
-    may have touched the rows this commit scanned, so that stays a typed
-    conflict — then call ``rebuild(fresh_meta, new_seq, new_snap_id)`` to
-    re-write this commit's own manifests under fresh ids (data and delete
-    FILES are untouched — retry is metadata-only, the spec's commit
-    model), carry the NEW parent's manifests, and re-commit. Under an
-    interleaved append the retried DML keeps snapshot-isolation semantics:
-    the appended rows were not scanned, so a predicate DELETE does not
-    cover them (Iceberg's snapshot isolation level); an equality delete
-    re-sequenced ABOVE the append now covers its keys — CDC
-    last-writer-wins, exactly what a re-run would produce."""
-    base_seq = meta["last-sequence-number"]
-    attempt_manifests = manifests
-    while True:
-        now_ms = int(time.time() * 1000)
-        psum = _select_snapshot(meta)["summary"] if meta.get("snapshots") else {}
-        # paths only THIS commit created — unlinked if the commit loses the
-        # race (ADVICE r10 #2: files published before the metadata
-        # put-if-absent were orphaned forever on conflict, since
-        # expire_snapshots only removes files referenced by expired
-        # snapshots)
-        carried = {
-            _resolve(table, m["manifest_path"])
-            for m in _carried_manifests(table, meta)
-        }
-        new_manifests = [
-            _resolve(table, m["manifest_path"])
-            for m in attempt_manifests
-            if _resolve(table, m["manifest_path"]) not in carried
-        ]
-        list_path = _write_manifest_list(table, snap_id, attempt_manifests)
-        snapshot = {
-            "snapshot-id": snap_id,
-            "sequence-number": seq,
-            "timestamp-ms": now_ms,
-            "manifest-list": list_path,
-            "schema-id": meta["current-schema-id"],
-            "summary": {
-                "operation": operation,
-                "added-data-files": str(added_files),
-                "added-records": str(added_records),
-                "total-records": str(_rows_in(attempt_manifests, content=0)),
-                "total-position-deletes": str(
-                    int(psum.get("total-position-deletes", 0)) + pos_deletes_added
-                ),
-                "total-equality-deletes": str(
-                    int(psum.get("total-equality-deletes", 0)) + eq_deletes_added
-                ),
-            },
-        }
-        parent = meta.get("current-snapshot-id")
-        if parent is not None:
-            snapshot["parent-snapshot-id"] = parent
-        new_meta = dict(
-            meta,
-            **{
-                "last-sequence-number": seq,
-                "last-updated-ms": now_ms,
-                "current-snapshot-id": snap_id,
-                "snapshots": meta.get("snapshots", []) + [snapshot],
-                "snapshot-log": meta.get("snapshot-log", [])
-                + [{"timestamp-ms": now_ms, "snapshot-id": snap_id}],
-                "metadata-log": meta.get("metadata-log", [])
-                + [
-                    {
-                        "timestamp-ms": now_ms,
-                        "metadata-file": os.path.join(
-                            "metadata", f"v{version}.metadata.json"
-                        ),
-                    }
-                ],
-            },
-        )
-        try:
-            _write_metadata(table, new_meta, version + 1)
-            return snap_id
-        except IcebergCommitConflict:
-            fresh = _current_version(table)
-            if rebuild is None or retries <= 0 or fresh == version:
-                # fresh == version: the hint did not advance — an ORPHAN
-                # metadata file (crashed writer), not a racing commit;
-                # retrying recomputes the same version forever
-                _unpublish_commit_files(table, list_path, new_manifests)
-                raise
-            retries -= 1
-            version = fresh
-            meta = load_metadata(table, version)
-            clash = [
-                s
-                for s in meta.get("snapshots", [])
-                if s["sequence-number"] > base_seq
-                and s["summary"]["operation"] != "append"
-            ]
-            if clash:
-                # abort: unlink everything this commit published (the
-                # manifests are still on disk — they go last, after their
-                # entries identify the data/delete files)
-                _unpublish_commit_files(table, list_path, new_manifests)
-                raise IcebergCommitConflict(
-                    f"{table}: concurrent non-append snapshot(s) "
-                    f"{[s['snapshot-id'] for s in clash]} committed since this "
-                    f"{operation} scanned the table — the rows it targeted "
-                    f"may have changed; reload and re-run the operation"
-                ) from None
-            # retriable: drop THIS attempt's manifest list + manifests
-            # only; the data/delete files stay — retry is metadata-only
-            for mpath in new_manifests:
-                with contextlib.suppress(OSError):
-                    os.unlink(mpath)
-            with contextlib.suppress(OSError):
-                os.unlink(_resolve(table, list_path))
-            seq, snap_id = _next_ids(meta)
-            attempt_manifests = _carried_manifests(table, meta) + rebuild(
-                meta, seq, snap_id
-            )
-
-
-def _unpublish_commit_files(
-    table: str, list_path: str, new_manifests: list[str]
-) -> None:
-    """Best-effort removal of a LOSING commit's published files: the new
-    manifest list, the manifests only it wrote, and every data/delete file
-    those manifests ADDED (status=1 entries are by construction this
-    commit's own publishes — carried-forward parent entries are status 0).
-    Only reached after put-if-absent failed, so none of these paths are
-    referenced by any committed metadata version; removing them keeps a
-    retry loop from leaking disk indefinitely (ADVICE r10 #2)."""
-    for mpath in new_manifests:
-        try:
-            _, entries = avro_lite.read_ocf(mpath)
-        except OSError:
-            entries = []
-        for e in entries:
-            if e.get("status") == 1:
-                fpath = _resolve(table, e["data_file"]["file_path"])
-                with contextlib.suppress(OSError):
-                    os.unlink(fpath)
-        with contextlib.suppress(OSError):
-            os.unlink(mpath)
-    with contextlib.suppress(OSError):
-        os.unlink(_resolve(table, list_path))
 
 
 def _pinned(table: str) -> tuple[str, int | None, dict]:
@@ -2584,64 +2414,6 @@ def _lineage_scan(spark: SparkSession, table: str, meta: dict) -> DataFrame:
     return _scan(spark, table, plan, lineage=True)
 
 
-def _commit_files(
-    table: str,
-    meta: dict,
-    version: int | None,
-    seq: int,
-    snap_id: int,
-    operation: str,
-    staged_data: list,
-    part_cols: list[str],
-    staged_del: list[tuple[str, int, int]],
-    equality_ids: list[int] | None = None,
-) -> int:
-    """Commit staged files as one snapshot: a data manifest for
-    ``staged_data`` and a delete manifest for ``staged_del`` — position
-    deletes, or equality deletes on ``equality_ids`` — each only when
-    non-empty, carried after the parent's manifests. The same closure
-    rebuilds them under fresh ids when ``_finish_commit`` retries."""
-    spec_fields = _partition_spec(meta)
-    field_types = _field_types(meta)
-    schema_json = _schema_by_id(meta)
-    name_to_field = _phys_name_to_field(meta, schema_json)
-
-    def own_manifests(m: dict, s: int, sid: int) -> list[dict]:
-        groups = []
-        if staged_data:
-            groups.append(
-                (0, _data_entries(
-                    table, staged_data, part_cols, spec_fields, field_types,
-                    name_to_field, sid,
-                ))
-            )
-        if staged_del:
-            groups.append(
-                (1, _pos_delete_entries(staged_del, spec_fields, sid)
-                 if equality_ids is None
-                 else _eq_delete_entries(staged_del, spec_fields, sid, equality_ids))
-            )
-        return [
-            _write_manifest(
-                table, f"m-{sid}-{i}.avro", entries, spec_fields, field_types,
-                m["default-spec-id"], schema_json, s, sid, content=content,
-            )
-            for i, (content, entries) in enumerate(groups)
-        ]
-
-    own = own_manifests(meta, seq, snap_id)
-    n_del = sum(n for _p, _s, n in staged_del)
-    return _finish_commit(
-        table, meta, version, seq, snap_id, _carried_manifests(table, meta) + own,
-        operation,
-        added_files=len(staged_data),
-        added_records=own[0]["added_rows_count"] if staged_data else 0,
-        pos_deletes_added=n_del if equality_ids is None else 0,
-        eq_deletes_added=0 if equality_ids is None else n_del,
-        rebuild=own_manifests,
-    )
-
-
 def _commit_plan(table: str, version: int | None, meta: dict, plan) -> int | None:
     """Iceberg's commit step for a ``dml`` plan, merge-on-read: the hits
     become position-delete files (kilobytes; no data file is rewritten)
@@ -2651,24 +2423,29 @@ def _commit_plan(table: str, version: int | None, meta: dict, plan) -> int | Non
     nothing stages no new rows either)."""
     from pyspark.sql import functions as F
 
-    seq, snap_id = _next_ids(meta)
-    staged_del = _stage_pos_delete_files(
-        plan.hits.select(F.col(dml.FILE).alias("file_path"), F.col(dml.POS).alias("pos")),
+    _seq, snap_id = _next_ids(meta)
+    # one unpartitioned delete file per non-empty task (the Iceberg
+    # runtime's write shape; the hits never touch the driver), its rows
+    # sorted as the spec requires
+    staged_del = tablefiles.stage(
+        plan.hits.select(F.col(dml.FILE).alias("file_path"), F.col(dml.POS).alias("pos"))
+        .sortWithinPartitions("file_path", "pos"),
         table,
-        snap_id,
+        os.path.join("data", f"deletes-{snap_id}"),
     )
     if plan.new_rows is None or (not staged_del and plan.kind != "merge"):
         staged_data, part_cols = [], []
     else:
         staged_data, part_cols = _stage_partitioned(
-            plan.new_rows.drop(dml.CHANGE), table, meta, _partition_spec(meta)
+            plan.new_rows.drop(dml.CHANGE), table, meta
         )
     if not staged_del and not staged_data:
         return None
-    return _commit_files(
-        table, meta, version, seq, snap_id,
+    return _finish_commit(
+        table, version, meta,
         "delete" if plan.new_rows is None else "overwrite",
         staged_data, part_cols, staged_del,
+        row_level=True,
     )
 
 
@@ -2750,22 +2527,6 @@ def merge_iceberg(
         return _commit_plan(table, version, meta, plan)
 
 
-def _eq_delete_entries(
-    staged: list[tuple[str, int, int]],
-    spec_fields: list[dict],
-    snap_id: int,
-    equality_ids: list[int],
-) -> list[dict]:
-    """Equality-delete files (content=2) → ADDED manifest_entry records
-    carrying the spec's ``equality_ids`` (field 135) so readers know which
-    columns the keys match on."""
-    entries = _pos_delete_entries(staged, spec_fields, snap_id)
-    for e in entries:
-        e["data_file"]["content"] = 2  # EQUALITY_DELETES
-        e["data_file"]["equality_ids"] = list(equality_ids)
-    return entries
-
-
 def upsert_by_key(
     spark: SparkSession, table: str, source: DataFrame, key_cols: list[str]
 ) -> int | None:
@@ -2790,24 +2551,24 @@ def upsert_by_key(
     unknown = sorted(set(key_cols) - set(name_to_id))
     if unknown:
         raise KeyError(f"upsert key columns not in table schema: {unknown}")
-    seq, snap_id = _next_ids(meta)
+    _seq, snap_id = _next_ids(meta)
     staged_data, part_cols = _stage_partitioned(
-        source.select(*[f.name for f in schema.fields]), table, meta, _partition_spec(meta)
+        source.select(*[f.name for f in schema.fields]), table, meta
     )
     if not staged_data:
         return None
     # the delete side: the source's distinct keys, sorted for determinism
     keys = source.select(*key_cols).distinct().sortWithinPartitions(*key_cols)
     # key files carry PHYSICAL names, like every staged parquet
-    staged_keys = _stage_delete_files(
+    staged_keys = tablefiles.stage(
         _to_physical_frame(keys, meta),
         table,
         os.path.join("data", f"eq-deletes-{snap_id}"),
     )
-    return _commit_files(
-        table, meta, version, seq, snap_id, "overwrite",
-        staged_data, part_cols, staged_keys,
+    return _finish_commit(
+        table, version, meta, "overwrite", staged_data, part_cols, staged_keys,
         equality_ids=[name_to_id[c] for c in key_cols],
+        row_level=True,
     )
 
 
@@ -2881,23 +2642,12 @@ def _evolve_schema(table: str, mutate) -> int:
         "schema-id": max(s["schema-id"] for s in meta["schemas"]) + 1,
         "fields": new_fields,
     }
-    now_ms = int(time.time() * 1000)
     new_meta = dict(
         meta,
         **{
             "schemas": meta["schemas"] + [new_schema],
             "current-schema-id": new_schema["schema-id"],
             "properties": props,
-            "last-updated-ms": now_ms,
-            "metadata-log": meta.get("metadata-log", [])
-            + [
-                {
-                    "timestamp-ms": now_ms,
-                    "metadata-file": os.path.join(
-                        "metadata", f"v{version}.metadata.json"
-                    ),
-                }
-            ],
             **extra,
         },
     )
@@ -2990,52 +2740,18 @@ def evolve_partition_spec(table: str, partition_cols: list[str] | None) -> int:
     if version is None:
         raise ValueError("evolve_partition_spec needs an existing table")
     meta = load_metadata(table, version)
-    schema_json = _schema_by_id(meta)
-    name_to_id = {f["name"]: f["id"] for f in schema_json["fields"]}
-    field_types = {
-        f["id"]: f["type"] for f in schema_json["fields"] if isinstance(f["type"], str)
-    }
-    phys = _physical_names(meta, schema_json)
-    terms = [_parse_partition_term(c) for c in (partition_cols or [])]
-    for t, src in terms:
-        if src not in name_to_id:
-            raise KeyError(f"partition column {src!r} not in schema")
-        _avro_partition_type(
-            _transform_result_type(t, field_types[name_to_id[src]])
-        )
-    want = [
-        (_partition_field_name(t, phys[src]), t, name_to_id[src])
-        for t, src in terms
-    ]
-    names = [n for n, _t, _sid in want]
-    if len(set(names)) != len(names):
-        dupes = sorted({n for n in names if names.count(n) > 1})
-        raise ValueError(
-            f"partition terms collide on derived field name(s) {dupes}: "
-            f"at most one transform per (kind, column) is supported"
-        )
+    want = _spec_terms(meta, partition_cols)
     spec_id, _fields, new_specs, last_pid = _match_or_mint_spec(
         list(meta["partition-specs"]), meta["last-partition-id"], want
     )
     if spec_id == meta["default-spec-id"]:
         return spec_id  # already the default — nothing to publish
-    now_ms = int(time.time() * 1000)
     new_meta = dict(
         meta,
         **{
             "partition-specs": new_specs,
             "default-spec-id": spec_id,
             "last-partition-id": last_pid,
-            "last-updated-ms": now_ms,
-            "metadata-log": meta.get("metadata-log", [])
-            + [
-                {
-                    "timestamp-ms": now_ms,
-                    "metadata-file": os.path.join(
-                        "metadata", f"v{version}.metadata.json"
-                    ),
-                }
-            ],
         },
     )
     _write_metadata(table, new_meta, version + 1)
@@ -3118,7 +2834,6 @@ def compact_iceberg(
     from collections import Counter
 
     plan = plan_scan(table)
-    part_cols = plan["partition_cols"]
     by_dir = Counter(os.path.dirname(f) for f in plan["files"])
     fragmented = by_dir and max(by_dir.values()) >= min_files_per_partition
     debt_files = plan["delete_files"] or plan["eq_delete_files"]
@@ -3132,7 +2847,7 @@ def compact_iceberg(
     # compaction repays equality-delete debt, and observability must say so
     debt = int(cur["summary"].get("total-position-deletes", 0))
     eq_debt = int(cur["summary"].get("total-equality-deletes", 0))
-    df = read_iceberg(spark, table)  # current schema, deletes applied
+    df = _scan(spark, os.path.abspath(table), plan)  # current schema, deletes applied
     spec_fields = plan["partition_spec"]
     if spec_fields:
         # co-locate by the partition VALUE (through the transform) so the
@@ -3158,9 +2873,12 @@ def compact_iceberg(
         df = df.coalesce(1)
         terms = []
     snap_id = write_iceberg(df, table, mode="replace", partition_cols=terms)
+    # replace never retries, so the committed snapshot holds exactly its
+    # own data manifest: the files it added are the files after
+    added = _select_snapshot(load_metadata(table), snap_id)["summary"]["added-data-files"]
     return {
         "files_before": len(plan["files"]),
-        "files_after": len(plan_scan(table)["files"]),
+        "files_after": int(added),
         "snapshot_id": snap_id,
         "position_deletes_materialized": debt,
         "equality_deletes_materialized": eq_debt,
@@ -3220,7 +2938,6 @@ def expire_snapshots(table: str, keep_last: int = 1) -> dict:
     exp_manifests, exp_files = _referenced_paths(table, expired, cache)
     dead_manifests = exp_manifests - keep_manifests
     dead_files = exp_files - keep_files
-    now_ms = int(time.time() * 1000)
     keep_ids = {s["snapshot-id"] for s in keep}
     # remember which expired sequence numbers were data-free `replace`
     # (compaction) snapshots: the streaming tail's retention-gap check
@@ -3243,7 +2960,6 @@ def expire_snapshots(table: str, keep_last: int = 1) -> dict:
                 e for e in meta.get("snapshot-log", []) if e["snapshot-id"] in keep_ids
             ],
             "properties": props,
-            "last-updated-ms": now_ms,
         },
     )
     # metadata FIRST: once the hint moves, no reader can resolve an expired

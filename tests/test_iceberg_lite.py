@@ -670,6 +670,30 @@ def test_metadata_v2_spec_fields(spark, table):
         iceberg_lite.load_metadata(table, version=99)
 
 
+def test_metadata_log_grows_one_entry_per_version(spark, table):
+    """Every metadata version logs the one it replaces, whatever made it:
+    a write, an append, a DML, a schema change, a spec change and a
+    snapshot expiry each add exactly one metadata-log entry."""
+    write_iceberg(_frame(spark, 0, 10), table, partition_cols=["bucket"])
+    assert iceberg_lite.load_metadata(table)["metadata-log"] == []
+    steps = [
+        lambda: write_iceberg(_frame(spark, 10, 20), table, mode="append"),
+        lambda: iceberg_lite.delete_where(spark, table, "id < 3"),
+        lambda: iceberg_lite.add_column(table, "note", T.StringType()),
+        lambda: iceberg_lite.evolve_partition_spec(table, None),
+        lambda: iceberg_lite.expire_snapshots(table, keep_last=1),
+    ]
+    for step in steps:
+        v = iceberg_lite._current_version(table)
+        step()
+        assert iceberg_lite._current_version(table) == v + 1
+        meta = iceberg_lite.load_metadata(table)
+        assert [e["metadata-file"] for e in meta["metadata-log"]] == [
+            f"metadata/v{i}.metadata.json" for i in range(1, v + 1)
+        ]
+        assert meta["metadata-log"][-1]["timestamp-ms"] <= meta["last-updated-ms"]
+
+
 def test_typed_columns_roundtrip(spark, table):
     schema = T.StructType(
         [

@@ -237,3 +237,42 @@ def test_raising_retry_unlinks_staged_files(spark, table, monkeypatch):
     assert _data_parquet(table) == before  # no stranded staged files
     # the table itself is intact and writable with the evolved schema
     assert read_iceberg(spark, table).count() == 10
+
+
+def test_dml_over_concurrent_spec_change_conflicts(spark, table, monkeypatch):
+    """An UPDATE losing the race to evolve_partition_spec: its new rows
+    were staged under the old spec (hive dirs by ``b``), so committing
+    them under the new default spec would read them back with b = NULL.
+    The retry must find the spec its files were staged under; here it
+    does not, so the update is a typed conflict that leaves no staged
+    file behind."""
+    write_iceberg(_frame(spark, 0, 10), table, partition_cols=["b"])
+    before = _data_parquet(table)
+    unpatch = _race_once(
+        monkeypatch, table, lambda: iceberg_lite.evolve_partition_spec(table, None)
+    )
+    with pytest.raises(iceberg_lite.IcebergCommitConflict):
+        iceberg_lite.update_where(spark, table, {"v": "v + 100"}, "id < 4")
+    unpatch()
+    assert _data_parquet(table) == before
+    back = read_iceberg(spark, table)
+    assert back.count() == 10
+    assert back.filter("b IS NULL OR v >= 100").count() == 0
+
+
+def test_overwrite_rebases_over_concurrent_append(spark, table, monkeypatch):
+    """An overwrite losing the race to an append retries on top of it and
+    still references only its own files: the result holds only the
+    overwrite's rows."""
+    write_iceberg(_frame(spark, 0, 10), table)
+    unpatch = _race_once(
+        monkeypatch,
+        table,
+        lambda: write_iceberg(_frame(spark, 100, 105), table, mode="append"),
+    )
+    assert write_iceberg(_frame(spark, 10, 13), table) is not None
+    unpatch()
+    assert sorted(r.id for r in read_iceberg(spark, table).collect()) == [10, 11, 12]
+    assert [s["operation"] for s in snapshots(table)] == [
+        "overwrite", "append", "overwrite",
+    ]

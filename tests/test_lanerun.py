@@ -47,8 +47,10 @@ def test_run_releases_the_storage_a_lane_leaves(spark):
 
     before = persistent_rdd_ids(spark)
     rec = run(spark, name, fn, SF01)
-    assert persistent_rdd_ids(spark) == before
-    assert rec["persisted_after"] == rec["persisted_before"] == len(before)
+    # "no id that was not there before": Spark's ContextCleaner may drop an
+    # earlier test's garbage RDD mid-run, so the sets need not be equal
+    assert not persistent_rdd_ids(spark) - before
+    assert rec["persisted_after"] <= rec["persisted_before"] <= len(before)
 
 
 @pytest.mark.parametrize("tool", ["planlint", "shufflebudget"])
